@@ -4,31 +4,33 @@ North-star requirement: "each micro-run checkpoints per-partition watermarks
 and lineage (input file, row range, digest) ... so a killed job resumes
 idempotently".
 
-Design (Iceberg-shaped, parquet-implemented — this sandbox has no Iceberg
-catalog; the commit protocol below is exactly what an Iceberg snapshot
-append gives for free, and `write_mode="iceberg"` would collapse to a
-single `writeTo(...).append()` of output+lineage in one transaction):
+Design (Iceberg-shaped, parquet-implemented — the commit protocol below is
+what an Iceberg snapshot append gives for free):
 
 * Work is split into deterministic BUCKETS: ``bucket = xxhash64(url, salt)
-  % n_buckets``.  A bucket is the unit of both salting (uniform spread →
-  no host-level skew) and resume (the micro-run).
-* Each micro-run processes one batch of buckets: extract → write output
-  parquet under ``out/bucket=<b>/`` → then append one lineage row
-  ``(run_id, bucket, input_path, n_docs, digest, ts)`` to the lineage
-  table.  The lineage row is written ONLY after the bucket's output commit
-  (parquet _SUCCESS), so the lineage table is always an UNDER-estimate of
-  completed work — a crash between the two leaves an orphan bucket dir
-  that is re-written (overwrite, idempotent) on resume, never duplicated.
-* Resume = anti-join pending buckets against completed lineage rows
-  (``left_anti`` on bucket id), then continue.
-* The digest (SUM of per-url crc32 of extracted text — order-free like
-  xor, and what both _process_bucket and verify_run compute) makes
-  re-runs verifiable: re-extracting a completed bucket must reproduce
-  its digest.
+  % n_buckets``.  A bucket is the unit of both salting and resume.
+* A run takes the pending buckets (no lineage row yet), optionally the
+  first ``max_buckets_per_run`` of them, and commits them in one pass:
 
-At 10^12 docs: buckets ≈ tens of thousands (each a few GB), lineage table
-stays tiny, and every micro-run is one Spark job with bounded state —
-the scheduler never holds the whole corpus in one plan.
+  1. ONE scan and parse of the input, filtered to the pending buckets
+     before the parse, and ONE write ``partitionBy("bucket")`` with
+     dynamic partition overwrite: only the ``out/bucket=<b>/`` dirs this
+     run writes are replaced, committed buckets are never touched.
+  2. ONE ``groupBy("bucket")`` over the COMMITTED files gives every
+     pending bucket's ``(n_docs, digest)``; a bucket with no rows has no
+     dir and gets ``(0, 0)``.
+  3. ONE append of the lineage rows ``(run_id, bucket, input_path,
+     n_docs, digest, committed_at)``, only after the output commit, so
+     the lineage table never over-claims.
+
+* Crash windows.  A kill inside the write leaves a ``.spark-staging-*``
+  dir that readers skip (hidden name) and buckets with no lineage row
+  that the next run rewrites.  A kill between the output commit and the
+  lineage append leaves orphan ``bucket=<b>/`` dirs; they are pending,
+  so the next run's dynamic overwrite replaces them, never duplicates.
+* The digest (SUM of per-url crc32 of url + extracted text — order-free
+  like xor) is a per-bucket state that composes: ``verify_run``
+  recomputes it from the committed files and checks every lineage claim.
 """
 
 from __future__ import annotations
@@ -36,17 +38,22 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from typing import Optional, Sequence
+from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dhtmlparser3_spark.functions.extract import EXTRACT_SCHEMA, make_extract_iterator
-
-LINEAGE_SCHEMA = (
-    "run_id string, bucket int, input_path string, n_docs bigint, "
-    "digest bigint, committed_at timestamp"
+from dhtmlparser3_spark.functions.extract import (
+    EXTRACT_SCHEMA,
+    make_extract_arrow_iterator,
 )
+
+LINEAGE_CLAIM = (
+    "run_id string, bucket int, input_path string, n_docs bigint, digest bigint"
+)
+LINEAGE_SCHEMA = LINEAGE_CLAIM + ", committed_at timestamp"
+# committed output as read back: partition discovery adds ``bucket``
+OUTPUT_SCHEMA = EXTRACT_SCHEMA + ", bucket int"
 
 
 def with_bucket(pages: DataFrame, n_buckets: int, salt: int = 2024) -> DataFrame:
@@ -56,38 +63,50 @@ def with_bucket(pages: DataFrame, n_buckets: int, salt: int = 2024) -> DataFrame
     )
 
 
-def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame:
-    """Buckets with a committed lineage row (empty frame if none yet).
+def _read_parquet(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """``path`` read with ``schema``, or an empty frame if it does not exist.
 
-    ONLY a missing path means "no lineage yet" — a corrupt lineage file,
+    ONLY a missing path means "nothing committed yet" — a corrupt file,
     permission error, or transient storage failure must PROPAGATE:
-    swallowing it would mark every bucket pending, silently re-extract
-    the whole corpus, and append duplicate lineage rows that verify_run
-    then flags as corruption."""
+    swallowing it would mark every bucket pending and silently re-extract
+    the whole corpus."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
-    local = "://" not in lineage_path
-    if local and not os.path.exists(lineage_path):
+    if "://" not in path and not os.path.exists(path):
         # fast check for local paths only — on a remote FS (s3://, hdfs://)
-        # os.path.exists is always False and must not be consulted; the
-        # read below handles remote path-not-found via the exception class
-        return spark.createDataFrame([], "bucket int")
+        # os.path.exists is always False; the read below handles remote
+        # path-not-found via the exception class
+        return spark.createDataFrame([], schema)
     try:
-        return spark.read.parquet(lineage_path).select("bucket").distinct()
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return spark.createDataFrame([], "bucket int")
+            return spark.createDataFrame([], schema)
         raise
 
 
+def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame:
+    """Buckets with a committed lineage row (empty frame if none yet).
+    Duplicate lineage rows for one bucket are corruption that
+    ``verify_run`` flags."""
+    lineage = _read_parquet(spark, lineage_path, LINEAGE_SCHEMA)
+    return lineage.select("bucket").distinct()
+
+
 def pending_buckets(
-    spark: SparkSession, pages: DataFrame, lineage_path: str, n_buckets: int
+    spark: SparkSession, lineage_path: str, n_buckets: int
 ) -> list[int]:
-    done = completed_buckets(spark, lineage_path)
-    all_b = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-    rows = all_b.join(done, "bucket", "left_anti").collect()
-    return sorted(r.bucket for r in rows)
+    done = {r.bucket for r in completed_buckets(spark, lineage_path).collect()}
+    return [b for b in range(n_buckets) if b not in done]
+
+
+def bucket_digests(output: DataFrame) -> DataFrame:
+    """Per-bucket ``(n_docs, digest)`` of committed output rows."""
+    return output.groupBy("bucket").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.crc32(F.concat_ws(" ", "url", "extracted_text"))).alias("digest"),
+    )
 
 
 def run_extract_job(
@@ -100,99 +119,76 @@ def run_extract_job(
     max_buckets_per_run: Optional[int] = None,
     fail_after_buckets: Optional[int] = None,
 ) -> dict:
-    """Resumable extraction: processes pending buckets, committing lineage
-    per bucket.  ``fail_after_buckets`` simulates a mid-job kill (tests).
+    """Resumable extraction: commits the pending buckets (at most
+    ``max_buckets_per_run``) in one pass.  ``fail_after_buckets=k``
+    simulates a mid-job kill (tests): the first k pending buckets are
+    committed, then it raises.
 
     Returns {run_id, processed, skipped, total}.
     """
     run_id = uuid.uuid4().hex[:12]
-    bucketed = with_bucket(pages, n_buckets)
-    pending = pending_buckets(spark, pages, lineage_path, n_buckets)
-    skipped = n_buckets - len(pending)
-    if max_buckets_per_run is not None:
-        pending = pending[:max_buckets_per_run]
+    pending = pending_buckets(spark, lineage_path, n_buckets)
+    batch = pending[:max_buckets_per_run]
+    killed = fail_after_buckets is not None and len(batch) > fail_after_buckets
+    if killed:
+        batch = batch[:fail_after_buckets]
 
-    processed = 0
-    for i, b in enumerate(pending):
-        if fail_after_buckets is not None and i >= fail_after_buckets:
-            raise RuntimeError(f"simulated kill after {i} buckets")
-        _process_bucket(
-            spark, bucketed, b, output_path, lineage_path, run_id, input_path
+    if batch:
+        in_batch = F.col("bucket").isin(batch)
+        part = with_bucket(pages, n_buckets).where(in_batch)
+        out = part.select("url", "warc_ts", "lang", "html").mapInArrow(
+            make_extract_arrow_iterator(), schema=EXTRACT_SCHEMA
         )
-        processed += 1
+        # the extract passes through url, not bucket: re-derive it from url
+        with_bucket(out, n_buckets).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(output_path)
+
+        # digests from the COMMITTED files, not the in-flight frame
+        committed = _read_parquet(spark, output_path, OUTPUT_SCHEMA).where(in_batch)
+        digests = bucket_digests(committed).collect()
+        got = {r.bucket: (r.n_docs, r.digest) for r in digests}
+        _append_lineage(
+            spark,
+            lineage_path,
+            [(run_id, b, input_path, *got.get(b, (0, 0))) for b in batch],
+        )
+    if killed:
+        raise RuntimeError(f"simulated kill after {len(batch)} buckets")
     return {
         "run_id": run_id,
-        "processed": processed,
-        "skipped": skipped,
+        "processed": len(batch),
+        "skipped": n_buckets - len(pending),
         "total": n_buckets,
     }
 
 
-def _process_bucket(
-    spark: SparkSession,
-    bucketed: DataFrame,
-    bucket: int,
-    output_path: str,
-    lineage_path: str,
-    run_id: str,
-    input_path: str,
-) -> None:
-    part = bucketed.where(F.col("bucket") == bucket).select(
-        "url", "warc_ts", "lang", "html"
-    )
-    out = part.mapInPandas(make_extract_iterator(), schema=EXTRACT_SCHEMA)
-    bucket_dir = os.path.join(output_path, f"bucket={bucket}")
-    # overwrite → re-running a half-written bucket is idempotent
-    out.write.mode("overwrite").parquet(bucket_dir)
-
-    # digest computed from the COMMITTED files, not the in-flight frame
-    written = spark.read.parquet(bucket_dir)
-    agg = written.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.crc32(F.concat_ws(" ", "url", "extracted_text"))),
-            F.lit(0),
-        ).alias("digest"),
-    ).collect()[0]
-
-    lineage_row = spark.createDataFrame(
-        [
-            (
-                run_id,
-                bucket,
-                input_path,
-                int(agg.n),
-                int(agg.digest),
-                time.time_ns() // 1000,
-            )
-        ],
-        "run_id string, bucket int, input_path string, n_docs bigint, "
-        "digest bigint, committed_us long",
-    ).withColumn(
-        "committed_at", F.timestamp_micros(F.col("committed_us"))
-    ).drop("committed_us")
-    # append AFTER the bucket output committed: lineage never over-claims
-    lineage_row.write.mode("append").parquet(lineage_path)
+def _append_lineage(spark: SparkSession, lineage_path: str, rows: list) -> None:
+    """Append ``(run_id, bucket, input_path, n_docs, digest)`` lineage rows,
+    stamped now — called only AFTER their output committed."""
+    now_us = time.time_ns() // 1000
+    spark.createDataFrame(rows, LINEAGE_CLAIM).withColumn(
+        "committed_at", F.timestamp_micros(F.lit(now_us))
+    ).write.mode("append").parquet(lineage_path)
 
 
-def verify_run(
-    spark: SparkSession, output_path: str, lineage_path: str
-) -> DataFrame:
-    """Recompute each committed bucket's digest from its output files and
-    join against the lineage claim — any mismatch row is corruption."""
-    out = spark.read.parquet(output_path)
-    # parquet partition discovery yields the bucket column from the path
-    recomputed = out.groupBy("bucket").agg(
-        F.count("*").alias("n_actual"),
-        F.sum(F.crc32(F.concat_ws(" ", "url", "extracted_text"))).alias(
-            "digest_actual"
-        ),
-    )
-    lineage = spark.read.parquet(lineage_path).select("bucket", "n_docs", "digest")
+def verify_run(spark: SparkSession, output_path: str, lineage_path: str) -> DataFrame:
+    """Lineage rows the committed output does not bear out; empty = verified.
+
+    Driven from the lineage side: each claim is checked against the
+    ``(n_docs, digest)`` recomputed from its bucket's files — a bucket
+    whose files are gone counts as ``(0, 0)`` — and every row of a bucket
+    with more than one lineage row is returned."""
+    actual = bucket_digests(_read_parquet(spark, output_path, OUTPUT_SCHEMA))
+    claims = _read_parquet(spark, lineage_path, LINEAGE_SCHEMA)
     return (
-        recomputed.join(lineage, "bucket")
+        claims.select("bucket", "n_docs", "digest")
+        .withColumn("n_claims", F.count("*").over(Window.partitionBy("bucket")))
+        .join(actual.toDF("bucket", "n_actual", "digest_actual"), "bucket", "left")
+        .fillna(0, ["n_actual", "digest_actual"])
         .where(
-            (F.col("n_actual") != F.col("n_docs"))
+            (F.col("n_claims") > 1)
+            | (F.col("n_actual") != F.col("n_docs"))
             | (F.col("digest_actual") != F.col("digest"))
         )
     )

@@ -10,9 +10,10 @@
 Input is one of --warc (Common-Crawl .warc.gz glob — the north-star shape;
 HTTP payloads decoded, poison records become error rows), --pages-table
 (existing Iceberg/parquet pages table) or --sf-dir (synthesize the test
-corpus).  Runs one resumable micro-run of the extraction pipeline;
-re-invoking after a kill resumes from the lineage table (see
-pipeline/lineage.py).
+corpus).  Runs one resumable micro-run of the extraction pipeline: every
+pending bucket (or the first --max-buckets of them) is extracted, written
+and committed to the lineage table in one pass; re-invoking after a kill
+resumes from the lineage table (see pipeline/lineage.py).
 """
 
 from __future__ import annotations
@@ -62,7 +63,14 @@ def main() -> int:
         "pass (wat_metadata)",
     )
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--max-buckets", type=int, default=None)
+    ap.add_argument(
+        "--max-buckets",
+        type=int,
+        default=None,
+        help="commit at most this many of the pending buckets in this run "
+        "(still one pass over the input); the rest stay pending for the "
+        "next run.  Default: all pending buckets",
+    )
     ap.add_argument("--multiplier", type=int, default=1)
     args = ap.parse_args()
 

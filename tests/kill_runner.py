@@ -6,12 +6,12 @@ JVM shutdown hooks, no parquet-writer close) partway through — the real
 RuntimeError the other tests use.
 
 Usage: kill_runner.py <output_path> <lineage_path> <mode>
-  mode=cut     SIGKILL before processing the 4th bucket (clean cut:
-               3 committed buckets, nothing in flight).
-  mode=orphan  commit the 4th bucket's OUTPUT but lose its lineage row,
-               then SIGKILL — on-disk state identical to a kill landing
-               in the window between the output commit and the lineage
-               append (the orphan-bucket crash window lineage.py:17-22
+  mode=cut     commit 3 buckets (output and lineage), then SIGKILL
+               (clean cut: 3 committed buckets, nothing in flight).
+  mode=orphan  commit 4 buckets' OUTPUT but only 3 lineage rows, then
+               SIGKILL — on-disk state identical to a kill landing in the
+               window between the output commit and the lineage append
+               (the orphan crash window the pipeline/lineage.py docstring
                documents).
 """
 import os
@@ -30,25 +30,20 @@ def main() -> None:
     spark = get_spark(app_name="kill-runner", cpus=4)
     pages = build_pages(spark, "/root/testdata/sf0.001")
 
-    real = ln._process_bucket
-    state = {"n": 0}
+    # seam: the lineage append, the run's last commit step.  ``cut`` runs
+    # 3 buckets and dies once their lineage is committed; ``orphan`` runs
+    # 4 and dies after committing only the first 3 lineage rows.
+    real = ln._append_lineage
 
-    def wrapper(spark, bucketed, bucket, output_path, lineage_path,
-                run_id, input_path):
-        if state["n"] == 3:
-            if mode == "orphan":
-                real(spark, bucketed, bucket, output_path,
-                     lineage_path + ".lost", run_id, input_path)
-            print(f"KILLING self at bucket #{state['n']} (mode={mode})",
-                  flush=True)
-            os.kill(os.getpid(), signal.SIGKILL)
-        real(spark, bucketed, bucket, output_path, lineage_path,
-             run_id, input_path)
-        state["n"] += 1
-        print(f"BUCKET_DONE {state['n']}", flush=True)
+    def append_then_kill(spark, lineage_path, rows):
+        real(spark, lineage_path, rows[:3])
+        print(f"KILLING self after {len(rows)} buckets written (mode={mode})",
+              flush=True)
+        os.kill(os.getpid(), signal.SIGKILL)
 
-    ln._process_bucket = wrapper
-    ln.run_extract_job(spark, pages, out, lin, n_buckets=8)
+    ln._append_lineage = append_then_kill
+    ln.run_extract_job(spark, pages, out, lin, n_buckets=8,
+                       max_buckets_per_run=3 if mode == "cut" else 4)
     print("UNREACHABLE: job completed without being killed", flush=True)
     sys.exit(3)
 

@@ -143,3 +143,100 @@ def test_micro_runs(spark, tmp_path):
         total += r["processed"]
     assert total == 6
     assert spark.read.parquet(out).count() == 500
+
+
+@pytest.mark.spark
+def test_committed_buckets_equal_extract_pages(spark, tmp_path):
+    """Per bucket, the committed rows are the rows extract_pages gives for
+    the urls of that bucket — equal as multisets."""
+    from dhtmlparser3_spark.pipeline.extract_job import extract_pages
+
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lineage")
+    pages = build_pages(spark, SF)
+    ln.run_extract_job(spark, pages, out, lin, n_buckets=8)
+
+    got = spark.read.parquet(out)
+    cols = got.columns  # extract columns + the partition column ``bucket``
+    want = ln.with_bucket(extract_pages(pages), 8).select(*cols)
+    assert got.count() == want.count() == 500
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+@pytest.mark.spark
+def test_spark_jobs_independent_of_bucket_count(spark, tmp_path):
+    """One pass: the job launches as many Spark jobs at 16 buckets as at 4."""
+    sc = spark.sparkContext
+    pages = build_pages(spark, SF)
+    n_jobs = {}
+    for n in (4, 16):
+        group = f"lineage-{n}"
+        sc.setJobGroup(group, f"run_extract_job n_buckets={n}")
+        try:
+            ln.run_extract_job(
+                spark, pages, str(tmp_path / f"out{n}"),
+                str(tmp_path / f"lineage{n}"), n_buckets=n,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs[4] > 0
+    assert n_jobs[4] == n_jobs[16], n_jobs
+
+
+@pytest.mark.spark
+def test_resume_leaves_committed_bucket_files(spark, tmp_path):
+    """A resume rewrites only pending buckets: the files of the buckets an
+    earlier micro-run committed keep their names."""
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lineage")
+    pages = build_pages(spark, SF)
+    ln.run_extract_job(spark, pages, out, lin, n_buckets=8, max_buckets_per_run=3)
+
+    def files():
+        return {
+            d: sorted(os.listdir(os.path.join(out, d)))
+            for d in os.listdir(out)
+            if d.startswith("bucket=")
+        }
+
+    before = files()
+    assert len(before) == 3
+    r = ln.run_extract_job(spark, pages, out, lin, n_buckets=8)
+    assert r["skipped"] == 3 and r["processed"] == 5
+    after = files()
+    assert len(after) == 8
+    assert {d: after[d] for d in before} == before
+    assert ln.verify_run(spark, out, lin).count() == 0
+
+
+@pytest.mark.spark
+def test_verify_run_flags_bucket_with_missing_files(spark, tmp_path):
+    """A lineage row whose bucket=<b>/ files are gone fails verification."""
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lineage")
+    pages = build_pages(spark, SF)
+    ln.run_extract_job(spark, pages, out, lin, n_buckets=4)
+    assert ln.verify_run(spark, out, lin).count() == 0
+
+    shutil.rmtree(os.path.join(out, "bucket=2"))
+    bad = ln.verify_run(spark, out, lin).collect()
+    assert [r.bucket for r in bad] == [2]
+    assert bad[0].n_docs > 0
+
+
+@pytest.mark.spark
+def test_verify_run_flags_duplicate_lineage_rows(spark, tmp_path):
+    """Two lineage rows for one bucket fail verification, even when both
+    carry the right digest."""
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lineage")
+    pages = build_pages(spark, SF)
+    ln.run_extract_job(spark, pages, out, lin, n_buckets=4)
+    lineage = spark.read.parquet(lin)
+    dup = lineage.where("bucket = 1").collect()
+    spark.createDataFrame(dup, lineage.schema).write.mode("append").parquet(lin)
+
+    bad = ln.verify_run(spark, out, lin).collect()
+    assert sorted(r.bucket for r in bad) == [1, 1]
