@@ -236,27 +236,34 @@ def _q_extract_content_str(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOM, stacked under the wire codings) whose constant expected
     serializations the oracle UNIONs in — so charset resolution and
     transcode are value-hashed by the driver too."""
-    from dhtmlparser3_spark.functions.extract import udf_content_str
+    from dhtmlparser3_spark.pipeline.extract_job import serialize_pages
     from dhtmlparser3_spark.sources.warc import warc_pages
 
     pages = warc_pages(spark, _warc_corpus_dir(sf_dir) + "/*.warc.gz")
-    return pages.select("url", udf_content_str()("html").alias("value"))
+    return serialize_pages(pages, ["content_str"]).select(
+        "url", F.col("content_str_value").alias("value")
+    )
 
 
 def _q_extract_serializations(spark, sf_dir):
     """The four secondary serializations — main_text (boilerplate strip),
     to_string round-trip, content_without_tags and prettify — from ONE
-    parse per document (functions/extract.udf_serializations).  Merged so
+    parse per document (pipeline/extract_job.serialize_pages).  Merged so
     every serializer keeps a driver-oracled row inside the driver's
     correctness-row budget, and cheaper than the four separate queries it
     replaces (one parse instead of four)."""
-    from dhtmlparser3_spark.functions.extract import udf_serializations
+    from dhtmlparser3_spark.pipeline.extract_job import serialize_pages
     from dhtmlparser3_spark.sources.pages import build_pages
 
-    pages = build_pages(spark, sf_dir)
-    s = udf_serializations()(F.col("html"))
-    return pages.select("url", s.alias("s")).select(
-        "url", "s.main_text", "s.roundtrip", "s.no_tags", "s.pretty"
+    cols = {
+        "main_text": "main_text",
+        "roundtrip": "to_string",
+        "no_tags": "content_without_tags",
+        "pretty": "prettify",
+    }
+    s = serialize_pages(build_pages(spark, sf_dir), list(cols.values()))
+    return s.select(
+        "url", *[F.col(f"{w}_value").alias(c) for c, w in cols.items()]
     )
 
 
@@ -270,14 +277,12 @@ def _q_extract_errors(spark, sf_dir):
     * ``deep``     — 1200-deep tag nest: the reference RecursionErrors,
       our iterative engine parses and serializes it fine,
 
-    and every scalar UDF must yield an error ROW (value NULL + error
+    and every serialization must yield an error ROW (value NULL + error
     message), never a task failure.  The oracle recomputes the per-class
     doc/error counts from the documents table.  Both serializations come
-    from ONE parse per document (udf_serialize_errors_multi) — the parse
-    dominates UDF cost and poison docs fail at parse time anyway."""
-    from dhtmlparser3_spark.functions.extract import (
-        udf_serialize_errors_multi,
-    )
+    from ONE parse per document (serialize_pages) — the parse dominates
+    the worker's cost and poison docs fail at parse time anyway."""
+    from dhtmlparser3_spark.pipeline.extract_job import serialize_pages
     from dhtmlparser3_spark.sources.pages import build_pages
 
     pages = build_pages(spark, sf_dir).select(
@@ -306,38 +311,35 @@ def _q_extract_errors(spark, sf_dir):
         )
         .unionByName(poison("deep", F.col("doc_id") % 100 == 5, deep_html))
     )
-    s = udf_serialize_errors_multi("content_str", "prettify")(
-        F.col("html")
-    ).alias("s")
+    s = serialize_pages(corpus, ["content_str", "prettify"], passthrough=("cls",))
     kinds = F.concat_ws(
         ",",
         F.array_sort(
             F.collect_set(
-                F.regexp_extract("s.content_str_error", "^([A-Za-z]+)", 1)
+                F.regexp_extract("content_str_error", "^([A-Za-z]+)", 1)
             )
         ),
     )
     return (
-        corpus.select("cls", s)
-        .groupBy("cls")
+        s.groupBy("cls")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum(
-                F.when(F.col("s.content_str_error").isNotNull(), 1).otherwise(
+                F.when(F.col("content_str_error").isNotNull(), 1).otherwise(
                     0
                 )
             )
             .cast("bigint")
             .alias("n_err_content"),
             F.sum(
-                F.when(F.col("s.prettify_error").isNotNull(), 1).otherwise(0)
+                F.when(F.col("prettify_error").isNotNull(), 1).otherwise(0)
             )
             .cast("bigint")
             .alias("n_err_prettify"),
             F.sum(
                 F.when(
-                    F.col("s.content_str_value").isNull()
-                    & F.col("s.content_str_error").isNull(),
+                    F.col("content_str_value").isNull()
+                    & F.col("content_str_error").isNull(),
                     1,
                 ).otherwise(0)
             )

@@ -321,7 +321,8 @@ def _mp_ceiling(cores: int, sf_dir: str, multiplier: int) -> float:
 def _bench_skew(cpus: int, sf_dir: str):
     """A/B the salted repartition on a host-clustered corpus where one host
     owns 5% of docs at ~20x size (the Common-Crawl heavy-host pattern) —
-    the north-rule skew claim, measured (see scripts/exp_skew.py)."""
+    the north-rule skew claim, measured (PLANS.md, "Skew defusal
+    measured")."""
     from pyspark.sql import functions as F
 
     from dhtmlparser3_spark.pipeline.extract_job import extract_pages

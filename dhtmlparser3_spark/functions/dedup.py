@@ -104,9 +104,7 @@ def _shingle_list(text, n: int):
     return list(dict.fromkeys(joined))  # == F.array_distinct (first-occurrence)
 
 
-def shingle_arrays(
-    df: DataFrame, n: int = 3, id_col: str = "doc_id", io: str = "arrow"
-) -> DataFrame:
+def shingle_arrays(df: DataFrame, n: int = 3, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, shs: array<string>) — per-doc DISTINCT n-token shingles.
 
     Built MAP-SIDE: no shuffle, no token-level row explosion.  The two
@@ -119,44 +117,31 @@ def shingle_arrays(
     all derive from it without ever materializing the quadratic
     (doc, shingle) table.
 
-    ``io="arrow"`` (default) crosses the boundary with mapInArrow — the
-    shingle lists are assembled as one flat Arrow string array + offsets
-    per batch and the id column is re-emitted zero-copy (no pandas
-    Series-of-lists conversion on the way back).  ``io="pandas"`` keeps
-    the scalar pandas_udf; identical rows (test_shingle_arrays_arrow_parity)."""
-    if io == "arrow":
-        id_t = df.schema[id_col].dataType.simpleString()
-        src = df.select(F.col(id_col).alias("doc_id"), "text")
+    Crosses the boundary with mapInArrow: the shingle lists are assembled
+    as one flat Arrow string array + offsets per batch and the id column
+    is re-emitted zero-copy; rows equal :func:`_shingle_list` per text
+    (test_shingle_arrays_arrow_parity)."""
+    id_t = df.schema[id_col].dataType.simpleString()
+    src = df.select(F.col(id_col).alias("doc_id"), "text")
 
-        def run(batches):
-            import pyarrow as pa
+    def run(batches):
+        import pyarrow as pa
 
-            for rb in batches:
-                texts = rb.column(1).to_pylist()
-                flat: list = []
-                offs = [0]
-                for t in texts:
-                    flat.extend(_shingle_list(t, n))
-                    offs.append(len(flat))
-                shs = pa.ListArray.from_arrays(
-                    pa.array(offs, pa.int32()), pa.array(flat, pa.string())
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(0), shs], ["doc_id", "shs"]
-                )
+        for rb in batches:
+            texts = rb.column(1).to_pylist()
+            flat: list = []
+            offs = [0]
+            for t in texts:
+                flat.extend(_shingle_list(t, n))
+                offs.append(len(flat))
+            shs = pa.ListArray.from_arrays(
+                pa.array(offs, pa.int32()), pa.array(flat, pa.string())
+            )
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), shs], ["doc_id", "shs"]
+            )
 
-        return src.mapInArrow(run, schema=f"doc_id {id_t}, shs array<string>")
-    if io != "pandas":
-        raise ValueError(f"io={io!r}: expected 'arrow' or 'pandas'")
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _shingles(texts):
-        return texts.map(lambda t: _shingle_list(t, n))
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), _shingles(F.col("text")).alias("shs")
-    )
+    return src.mapInArrow(run, schema=f"doc_id {id_t}, shs array<string>")
 
 
 def shingle_sets(df: DataFrame, n: int = 3, id_col: str = "doc_id") -> DataFrame:

@@ -1,12 +1,14 @@
-"""Arrow-vectorized extraction UDFs — the Python hot path.
+"""The parse family's worker boundary — the Python hot path.
 
 Per BASELINE.json ``input_hint``: *no per-row Python objects cross the JVM
-boundary* — rows arrive in Arrow batches as pandas Series, the per-document
-tokenize→tree-build→serialize work runs inside the worker, and plain string/
-int columns go back.  The per-doc algorithm is the exact-parity engine
-(dhtmlparser3_spark.engine); errors (the reference raises on out-of-range
-numeric entities — chr(ValueError)) become an ``error`` column instead of
-killing the job at 10^12-row scale.
+boundary*.  Every parse-family operator (extraction, counts-only stats,
+the serializations, the node table) reaches the Python worker through ONE
+``mapInArrow`` batch loop, :func:`make_parse_iterator`: rows arrive as
+Arrow RecordBatches, the per-document tokenize→tree-build→serialize work
+runs inside the worker, and typed Arrow columns go back.  The per-doc
+algorithm is the exact-parity engine (dhtmlparser3_spark.engine); errors
+(the reference raises on out-of-range numeric entities — chr(ValueError))
+become an error value instead of killing the job at 10^12-row scale.
 
 Spans: per-text-node (src_start, src_end) offsets into the decoded html —
 ``html[src_start:src_end]`` is the raw slice each text node came from.
@@ -15,18 +17,19 @@ Spans: per-text-node (src_start, src_end) offsets into the decoded html —
 from __future__ import annotations
 
 import gc
-import os
-from typing import Iterator, List, Optional
+from typing import Iterator, List
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from dhtmlparser3_spark.engine import serialize
 from dhtmlparser3_spark.engine.dom import Arena, parse_arena
-from dhtmlparser3_spark.engine.lexer import COMMENT, TAG, TEXT
+from dhtmlparser3_spark.engine.lexer import TAG, TEXT
 
 _BOILERPLATE_NAMES = frozenset({"script", "style"})
 
-# output schema of extract_map_in_pandas (url/ts/lang passed through)
+# output schema of make_extract_arrow_iterator (url/ts/lang passed through)
 EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, lang string, "
     "extracted_text string, main_text string, "
@@ -34,10 +37,43 @@ EXTRACT_SCHEMA = (
     "spans array<struct<node_id:int,src_start:int,src_end:int>>, "
     "error string"
 )
+EXTRACT_FIELDS = (
+    ("extracted_text", pa.string()),
+    ("main_text", pa.string()),
+    ("n_nodes", pa.int32()),
+    ("n_tags", pa.int32()),
+    ("n_text_nodes", pa.int32()),
+    ("n_chars_out", pa.int64()),
+    (
+        "spans",
+        pa.list_(
+            pa.struct(
+                [
+                    ("node_id", pa.int32()),
+                    ("src_start", pa.int32()),
+                    ("src_end", pa.int32()),
+                ]
+            )
+        ),
+    ),
+    ("error", pa.string()),
+)
+_EXTRACT_COLS = tuple(f for f, _ in EXTRACT_FIELDS)
 
-# full node-struct field set; udf_nodes/node_table can prune to a subset —
-# Catalyst cannot push column pruning through a Python UDF, so the pruning
-# is done by hand at the UDF boundary (smaller Python dicts AND less Arrow)
+STATS_SCHEMA = (
+    "url string, warc_ts timestamp, lang string, "
+    "n_nodes int, n_tags int, n_text_nodes int, error string"
+)
+STATS_FIELDS = (
+    ("n_nodes", pa.int32()),
+    ("n_tags", pa.int32()),
+    ("n_text_nodes", pa.int32()),
+    ("error", pa.string()),
+)
+
+# full node-struct field set; node_table can prune to a subset — Catalyst
+# cannot push column pruning through a Python map, so the pruning is done
+# by hand at the worker boundary (smaller Python lists AND less Arrow)
 NODE_FIELD_TYPES = {
     "node_id": "int",
     "parent_id": "int",
@@ -51,6 +87,19 @@ NODE_FIELD_TYPES = {
     "src_start": "int",
     "src_end": "int",
 }
+_ARROW_NODE_FIELD_TYPES = {
+    "node_id": pa.int32(),
+    "parent_id": pa.int32(),
+    "kind": pa.int8(),
+    "name": pa.string(),
+    "attrs": pa.list_(pa.struct([("key", pa.string()), ("value", pa.string())])),
+    "text": pa.string(),
+    "is_non_pair": pa.bool_(),
+    "depth": pa.int32(),
+    "subtree_end": pa.int32(),
+    "src_start": pa.int32(),
+    "src_end": pa.int32(),
+}
 
 
 def node_schema(fields=None) -> str:
@@ -59,37 +108,12 @@ def node_schema(fields=None) -> str:
     return f"array<struct<{inner}>>"
 
 
-NODE_SCHEMA = node_schema()
-
-
 def decode_html(raw) -> str:
     if raw is None:
         return ""
     if isinstance(raw, (bytes, bytearray, memoryview)):
         return bytes(raw).decode("utf-8", errors="replace")
     return str(raw)
-
-
-def main_text(a: Arena, nid: Optional[int] = None) -> str:
-    """Boilerplate-stripped text: content_without_tags semantics
-    (tag.py:75-88 — comments dropped) minus script/style subtrees.
-
-    This is OUR extraction operator (the north-star 'boilerplate-strip'
-    stage), not a reference method; script/style match case-insensitively
-    like find() does.
-    """
-    if nid is None:
-        nid = a.result_root
-    out: List[str] = []
-    stack = list(reversed(a.children[nid]))
-    while stack:
-        x = stack.pop()
-        k = a.kind[x]
-        if k == TEXT:
-            out.append(a.text[x])
-        elif k == TAG and a.name[x].lower() not in _BOILERPLATE_NAMES:
-            stack.extend(reversed(a.children[x]))
-    return "".join(out)
 
 
 def flatten_nodes(a: Arena, fields=None):
@@ -153,10 +177,9 @@ def flatten_nodes(a: Arena, fields=None):
 
 def append_nodes_columns(a: Arena, cols: dict) -> int:
     """flatten_nodes with COLUMNAR output: append this document's pre-order
-    node records to per-field flat lists (the Arrow-direct boundary builds
-    one StructArray per batch from them — no per-node Python dicts, no
-    pandas→Arrow struct conversion).  Same walk, same numbering, same
-    values as flatten_nodes; parity pinned by
+    node records to per-field flat lists (the node iterator builds one
+    StructArray per batch from them — no per-node Python dicts).  Same
+    walk, same numbering, same values as flatten_nodes; parity pinned by
     tests/test_relational_differential.py::test_node_table_arrow_parity.
     Returns the number of nodes appended."""
     order: List[int] = []
@@ -212,121 +235,14 @@ def append_nodes_columns(a: Arena, cols: dict) -> int:
     return n
 
 
-_ARROW_NODE_FIELD_TYPES = None
-
-
-def _arrow_node_field_types():
-    global _ARROW_NODE_FIELD_TYPES
-    if _ARROW_NODE_FIELD_TYPES is None:
-        import pyarrow as pa
-
-        _ARROW_NODE_FIELD_TYPES = {
-            "node_id": pa.int32(),
-            "parent_id": pa.int32(),
-            "kind": pa.int8(),
-            "name": pa.string(),
-            "attrs": pa.list_(
-                pa.struct([("key", pa.string()), ("value", pa.string())])
-            ),
-            "text": pa.string(),
-            "is_non_pair": pa.bool_(),
-            "depth": pa.int32(),
-            "subtree_end": pa.int32(),
-            "src_start": pa.int32(),
-            "src_end": pa.int32(),
-        }
-    return _ARROW_NODE_FIELD_TYPES
-
-
-def make_nodes_arrow_iterator(fields=None, passthrough=("url",)):
-    """mapInArrow boundary for the relational tier: RecordBatches of pages
-    → (passthrough…, nodes array<struct<…>>) RecordBatches.
-
-    The per-batch node struct is assembled as flat Arrow child arrays +
-    one offsets vector (null offset = unparseable doc → NULL nodes row),
-    replacing the pandas_udf path where Spark converts a Series of
-    list-of-dicts row by row.  Passthrough columns are re-emitted
-    zero-copy."""
-    import pyarrow as pa
-
-    flds = list(fields) if fields else list(NODE_FIELD_TYPES)
-    types = _arrow_node_field_types()
-
-    def run(batches):
-        for rb in batches:
-            idx = rb.schema.get_field_index("html")
-            htmls = rb.column(idx).to_pylist()
-            cols: dict = {f: [] for f in flds}
-            offsets: list = [0]
-            is_null: list = []
-            total = 0
-            gc_was_enabled = gc.isenabled()
-            gc.disable()
-            try:
-                for h in htmls:
-                    # snapshot per-field lengths: if append_nodes_columns
-                    # raises MIDWAY (after extending some fields), the
-                    # error-row policy must roll the partial appends back
-                    # or the child arrays end up misaligned and
-                    # StructArray.from_arrays kills the whole task
-                    marks = [len(cols[f]) for f in flds]
-                    try:
-                        total += append_nodes_columns(
-                            parse_arena(decode_html(h)), cols
-                        )
-                        is_null.append(False)
-                    except Exception:  # noqa: BLE001 — error-row policy
-                        for f, m in zip(flds, marks):
-                            del cols[f][m:]
-                        is_null.append(True)
-                    offsets.append(total)
-            finally:
-                if gc_was_enabled:
-                    gc.enable()
-            child = pa.StructArray.from_arrays(
-                [pa.array(cols[f], types[f]) for f in flds], names=flds
-            )
-            nodes = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                child,
-                mask=pa.array(is_null) if any(is_null) else None,
-            )
-            arrays = [
-                rb.column(rb.schema.get_field_index(c)) for c in passthrough
-            ]
-            arrays.append(nodes)
-            yield pa.RecordBatch.from_arrays(
-                arrays, list(passthrough) + ["nodes"]
-            )
-
-    return run
-
-
-def text_spans(a: Arena):
-    """(node_id-in-pre-order, src_start, src_end) for every text node."""
-    out = []
-    idx = 0
-    # pre-order walk mirroring flatten_nodes numbering
-    stack = [a.result_root]
-    while stack:
-        nid = stack.pop()
-        if a.kind[nid] == TEXT and a.src_start[nid] >= 0:
-            out.append(
-                {
-                    "node_id": idx,
-                    "src_start": a.src_start[nid],
-                    "src_end": a.src_end[nid],
-                }
-            )
-        if a.kind[nid] == TAG:
-            stack.extend(reversed(a.children[nid]))
-        idx += 1
-    return out
-
-
 def _main_text_and_spans(a: Arena):
     """One fused pre-order walk: boilerplate-stripped text + text spans
-    (node_id = pre-order rank, matching flatten_nodes numbering)."""
+    (node_id = pre-order rank, matching flatten_nodes numbering).
+
+    main_text is OUR extraction operator (the north-star 'boilerplate-
+    strip' stage), not a reference method: content_without_tags semantics
+    (tag.py:75-88 — comments dropped) minus script/style subtrees, which
+    match case-insensitively like find() does."""
     kind_l, name_l, text_l, ch_l = a.kind, a.name, a.text, a.children
     s0_l, s1_l = a.src_start, a.src_end
     mtext: List[str] = []
@@ -380,20 +296,34 @@ def extract_one(html: str):
     )
 
 
-_EXTRACT_COLS = (
-    "extracted_text",
-    "main_text",
-    "n_nodes",
-    "n_tags",
-    "n_text_nodes",
-    "n_chars_out",
-    "spans",
-    "error",
-)
+def stats_one(html: str):
+    """Parse one document → (n_nodes, n_tags, n_text_nodes, error): the
+    counts of :func:`extract_one` without any serialization."""
+    try:
+        a = parse_arena(html)
+    except Exception as e:  # noqa: BLE001
+        return 0, 0, 0, f"{type(e).__name__}: {e}"
+    kinds = a.kind
+    return len(kinds), kinds.count(TAG), kinds.count(TEXT), None
+
+
+# per-document serializers of make_serialize_iterator (the parse itself can
+# raise — the reference propagates chr() ValueError on out-of-range numeric
+# entities, tokens.py:147-148, and we keep that parity in the engine)
+_SERIALIZERS = {
+    "content_str": serialize.content_str,
+    "main_text": lambda a: _main_text_and_spans(a)[0],
+    "to_string": serialize.to_string,
+    "prettify": serialize.prettify,
+    "content_without_tags": serialize.content_without_tags,
+}
 
 
 def extract_series(html: pd.Series) -> pd.DataFrame:
     """Vectorized batch extraction over a Series of html bytes/str.
+
+    Kept only as the subject of perfbench's ``boundary_layer`` (with
+    :func:`make_extract_iterator`); no pipeline runs it.
 
     Column-wise frame construction: building a DataFrame from row tuples
     costs ~28µs/row in pandas — at 10^12 docs that is pure waste, so we
@@ -418,17 +348,15 @@ def extract_series(html: pd.Series) -> pd.DataFrame:
     return out
 
 
-# worker-side byte bound per processed slice (env-overridable): the JVM
-# already double-bounds its batches by rows AND bytes (plans/session.py
-# maxBytesPerBatch), but a defense in depth matters at the 100 TB design
-# point — an engine path that ignores the conf, or a caller-tuned giant
-# row bound, must not make one worker hold a whole oversized batch's
-# OUTPUT (extracted text ≈ input size) on top of its input.  Slices are
+# worker-side byte bound per processed slice: the JVM already double-bounds
+# its batches by rows AND bytes (plans/session.py maxBytesPerBatch), but a
+# defense in depth matters at the 100 TB design point — an engine path
+# that ignores the conf, or a caller-tuned giant row bound, must not make
+# one worker hold a whole oversized batch's OUTPUT (extracted text ≈ input
+# size, node records several times it) on top of its input.  Slices are
 # planned from the html byte lengths; a single row always forms a slice
 # even beyond the bound (the irreducible unit).
-_WORKER_BATCH_BYTES = int(
-    os.environ.get("SPARK_GRAFT_WORKER_BATCH_BYTES", str(64 << 20))
-)
+_WORKER_BATCH_BYTES = 64 << 20
 
 
 def byte_slices(sizes, max_bytes: int):
@@ -445,10 +373,32 @@ def byte_slices(sizes, max_bytes: int):
     return out
 
 
+def arrow_slices(batches, column: str, max_slice_bytes: int | None = None):
+    """Byte-bounded row slices of each RecordBatch, planned over the byte
+    lengths of the binary/string ``column`` (``max_slice_bytes`` defaults
+    to ``_WORKER_BATCH_BYTES``; tests pass a small bound).  This is the
+    shared front half of every worker loop that unboxes documents: slice
+    BEFORE ``to_pylist``, because unboxing a giant batch's column in one
+    go would materialize every document as a Python object at once.  An
+    empty batch is yielded once, so it still produces an output batch."""
+    bound = _WORKER_BATCH_BYTES if max_slice_bytes is None else max_slice_bytes
+    for whole in batches:
+        sizes = pc.binary_length(whole.column(column)).to_pylist()
+        for start, length in byte_slices(
+            [s or 0 for s in sizes], bound
+        ) or [(0, 0)]:
+            yield whole if length == whole.num_rows else whole.slice(start, length)
+
+
 def make_extract_iterator(
     passthrough=("url", "warc_ts", "lang"), max_slice_bytes: int | None = None
 ):
     """Build a mapInPandas function: batches of pages → extraction batches.
+
+    Kept only as the subject of perfbench's ``boundary_layer`` (with
+    :func:`extract_series`); every pipeline crosses the boundary through
+    :func:`make_parse_iterator`.  Delete both once that layer times the
+    Arrow path.
 
     Each incoming batch is processed in byte-bounded row slices (see
     ``_WORKER_BATCH_BYTES``) so output accumulation stays bounded even on
@@ -490,347 +440,142 @@ def make_extract_iterator(
     return run
 
 
-STATS_SCHEMA = (
-    "url string, warc_ts timestamp, lang string, "
-    "n_nodes int, n_tags int, n_text_nodes int, error string"
-)
+def make_parse_iterator(
+    per_doc,
+    fields,
+    passthrough=("url", "warc_ts", "lang"),
+    max_slice_bytes: int | None = None,
+    build=None,
+):
+    """The one mapInArrow batch loop of the parse family: RecordBatches
+    with an ``html`` column → RecordBatches of (passthrough…, fields…).
 
+    Per byte-bounded slice (:func:`arrow_slices`) the html column is
+    unboxed once at the C level, ``per_doc`` runs on every decoded
+    document with the cyclic GC off (alloc-heavy build loop, parity with
+    parser.py:38), the output columns are built directly as typed Arrow
+    arrays and the passthrough columns are re-emitted zero-copy — no
+    pandas on either side of the boundary.  ``per_doc`` never raises: a
+    poison page becomes an error value, never a task failure.
 
-def _stats_one(html: str):
-    try:
-        a = parse_arena(html)
-    except Exception as e:  # noqa: BLE001
-        return 0, 0, 0, f"{type(e).__name__}: {e}"
-    kinds = a.kind
-    return len(kinds), kinds.count(TAG), kinds.count(TEXT), None
+    ``fields`` is ``[(name, pa.DataType)]``.  By default ``per_doc``
+    returns one tuple per document whose i-th slot fills field i;
+    ``build(values) -> [pa.Array]`` replaces that for outputs assembled
+    another way (the node table)."""
+    names = list(passthrough) + [f for f, _ in fields]
+    if build is None:
+        types = [t for _, t in fields]
 
+        def build(rows):
+            cols = list(zip(*rows)) if rows else [()] * len(types)
+            return [pa.array(c, t) for c, t in zip(cols, types)]
 
-_ARROW_SPAN_TYPE = None  # built lazily (pa import is cheap but keep module light)
+    def run(batches):
+        for rb in arrow_slices(batches, "html", max_slice_bytes):
+            htmls = rb.column("html").to_pylist()
+            gc_was_enabled = gc.isenabled()
+            gc.disable()
+            try:
+                values = [per_doc(decode_html(h)) for h in htmls]
+            finally:
+                if gc_was_enabled:
+                    gc.enable()
+            arrays = [rb.column(c) for c in passthrough] + build(values)
+            yield pa.RecordBatch.from_arrays(arrays, names)
 
-
-def _arrow_span_type():
-    global _ARROW_SPAN_TYPE
-    if _ARROW_SPAN_TYPE is None:
-        import pyarrow as pa
-
-        _ARROW_SPAN_TYPE = pa.list_(
-            pa.struct(
-                [
-                    ("node_id", pa.int32()),
-                    ("src_start", pa.int32()),
-                    ("src_end", pa.int32()),
-                ]
-            )
-        )
-    return _ARROW_SPAN_TYPE
+    return run
 
 
 def make_extract_arrow_iterator(
     passthrough=("url", "warc_ts", "lang"), max_slice_bytes: int | None = None
 ):
-    """Build a mapInArrow function: RecordBatches of pages → extraction
-    RecordBatches, processed in byte-bounded row slices (see
-    ``_WORKER_BATCH_BYTES``).
-
-    Same per-doc work as make_extract_iterator, minus the pandas detour on
-    BOTH sides of the boundary: the html column is unboxed once at the C
-    level (``to_pylist``), passthrough columns are re-emitted zero-copy
-    (no Arrow→pandas→Arrow round-trip — for ``warc_ts`` that also skips
-    two timezone-aware datetime conversions), and output columns are built
-    as Arrow arrays directly, so Spark never runs its pandas→Arrow struct
-    converter over the nested ``spans`` column.  Measured at 16 pinned
-    cores this removes most of the UDF-stage overhead vs the pure-
-    multiprocessing ceiling (scripts/exp_width.py)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    span_t = _arrow_span_type()
-    bound = _WORKER_BATCH_BYTES if max_slice_bytes is None else max_slice_bytes
-
-    def run(batches):
-        for whole in batches:
-            idx = whole.schema.get_field_index("html")
-            # slice BEFORE to_pylist: unboxing a giant batch's html column
-            # in one go would materialize every document as a Python string
-            # simultaneously — the byte planner works off the (cheap)
-            # value lengths instead
-            sizes = pc.binary_length(whole.column(idx)).to_pylist()
-            for start, length in byte_slices(
-                [s or 0 for s in sizes], bound
-            ) or [(0, 0)]:
-                rb = (
-                    whole
-                    if length == whole.num_rows
-                    else whole.slice(start, length)
-                )
-                htmls = rb.column(idx).to_pylist()
-                gc_was_enabled = gc.isenabled()
-                gc.disable()
-                try:
-                    rows = [extract_one(decode_html(h)) for h in htmls]
-                finally:
-                    if gc_was_enabled:
-                        gc.enable()
-                if rows:
-                    cols = list(zip(*rows))
-                else:
-                    cols = [[] for _ in _EXTRACT_COLS]
-                arrays = [
-                    rb.column(rb.schema.get_field_index(c))
-                    for c in passthrough
-                ]
-                arrays += [
-                    pa.array(cols[0], pa.string()),
-                    pa.array(cols[1], pa.string()),
-                    pa.array(cols[2], pa.int32()),
-                    pa.array(cols[3], pa.int32()),
-                    pa.array(cols[4], pa.int32()),
-                    pa.array(cols[5], pa.int64()),
-                    pa.array(cols[6], span_t),
-                    pa.array(cols[7], pa.string()),
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, list(passthrough) + list(_EXTRACT_COLS)
-                )
-
-    return run
+    """mapInArrow function: RecordBatches of pages → extraction
+    RecordBatches (``EXTRACT_SCHEMA``), one :func:`extract_one` per doc.
+    Spark never runs its pandas→Arrow struct converter over the nested
+    ``spans`` column, and ``warc_ts`` skips two timezone-aware datetime
+    conversions, because neither side goes through pandas."""
+    return make_parse_iterator(
+        extract_one, EXTRACT_FIELDS, passthrough, max_slice_bytes
+    )
 
 
-def make_stats_iterator(passthrough=("url", "warc_ts", "lang")):
-    """Counts-only extraction: parses but skips serialization (content_str /
-    main_text / spans) AND their Arrow transfer — for aggregation-only
-    consumers; Catalyst can't prune columns through the UDF, so the slim
-    path is a separate iterator."""
+def make_serialize_iterator(
+    whats, passthrough=("url",), max_slice_bytes: int | None = None
+):
+    """mapInArrow function: html → ``{w}_value``/``{w}_error`` string
+    columns for each serializer ``w`` in ``whats`` (keys of
+    ``_SERIALIZERS``), all from ONE parse per document — the parse
+    dominates the cost, so asking for several serializations must not
+    pay it twice.  A parse failure poisons every slot with the same error
+    (the reference raises at tokenize time); a serializer-specific
+    failure errors only its own slot."""
+    fns = [_SERIALIZERS[w] for w in whats]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gc_was = gc.isenabled()
-        gc.disable()
+    def one(html):
         try:
-            for pdf in batches:
-                rows = [_stats_one(decode_html(h)) for h in pdf["html"]]
-                cols = (
-                    list(zip(*rows)) if rows else [[] for _ in range(4)]
-                )
-                out = pd.DataFrame(
-                    {
-                        "n_nodes": list(cols[0]),
-                        "n_tags": list(cols[1]),
-                        "n_text_nodes": list(cols[2]),
-                        "error": list(cols[3]),
-                    },
-                    index=pdf.index,
-                    copy=False,
-                )
-                for col in passthrough:
-                    out[col] = pdf[col].values
-                yield out[
-                    list(passthrough)
-                    + ["n_nodes", "n_tags", "n_text_nodes", "error"]
-                ]
-        finally:
-            if gc_was:
-                gc.enable()
-
-    return run
-
-
-# per-document serializers for the scalar UDFs below (the parse itself can
-# raise — the reference propagates chr() ValueError on out-of-range numeric
-# entities, tokens.py:147-148, and we keep that parity in the engine)
-_SERIALIZERS = {
-    "content_str": lambda a: serialize.content_str(a),
-    "main_text": lambda a: main_text(a),
-    "to_string": lambda a: serialize.to_string(a),
-    "prettify": lambda a: serialize.prettify(a),
-    "content_without_tags": lambda a: serialize.content_without_tags(a),
-}
-
-
-def _udf_serialize(what: str):
-    """pandas_udf: html → serialized string; a failing document yields NULL
-    instead of killing the job (error-row policy of extract_one — at 10^12
-    docs one poison page must never fail a task; use
-    :func:`udf_serialize_errors` when the error text is needed)."""
-    from pyspark.sql.functions import pandas_udf
-
-    fn = _SERIALIZERS[what]
-
-    def one(h):
-        try:
-            return fn(parse_arena(decode_html(h)))
-        except Exception:  # noqa: BLE001 — error-row at scale, never a crash
-            return None
-
-    @pandas_udf("string")
-    def _ser(html: pd.Series) -> pd.Series:
-        gc_was = gc.isenabled()
-        gc.disable()
-        try:
-            return html.map(one)
-        finally:
-            if gc_was:
-                gc.enable()
-
-    return _ser
-
-
-def udf_serialize_errors(what: str):
-    """pandas_udf: html → struct<value, error>: value NULL + error message
-    on parse/serialize failure, mirroring extract_one's error column — the
-    production-shape variant proven by the ``extract_errors`` driver query."""
-    from pyspark.sql.functions import pandas_udf
-
-    fn = _SERIALIZERS[what]
-
-    def one(h):
-        try:
-            return {"value": fn(parse_arena(decode_html(h))), "error": None}
-        except Exception as e:  # noqa: BLE001
-            return {"value": None, "error": f"{type(e).__name__}: {e}"}
-
-    @pandas_udf("struct<value:string,error:string>")
-    def _ser(html: pd.Series) -> pd.DataFrame:
-        gc_was = gc.isenabled()
-        gc.disable()
-        try:
-            return pd.DataFrame(list(html.map(one)), index=html.index)
-        finally:
-            if gc_was:
-                gc.enable()
-
-    return _ser
-
-
-def udf_serialize_errors_multi(*whats: str):
-    """pandas_udf: html → struct<{w}_value, {w}_error per serializer>,
-    from ONE parse per document — the parse dominates UDF cost, so asking
-    for two serializations must not pay it twice (same consolidation as
-    :func:`udf_serializations`, but keeping the per-serializer error
-    column of :func:`udf_serialize_errors`).  A parse failure poisons
-    every slot with the same error (the reference raises at tokenize
-    time); a serializer-specific failure errors only its own slot."""
-    from pyspark.sql.functions import pandas_udf
-
-    fns = [(w, _SERIALIZERS[w]) for w in whats]
-    fields = ", ".join(f"{w}_value:string, {w}_error:string" for w in whats)
-
-    def one(h):
-        row = {}
-        try:
-            a = parse_arena(decode_html(h))
+            a = parse_arena(html)
         except Exception as e:  # noqa: BLE001 — error-row at scale
-            msg = f"{type(e).__name__}: {e}"
-            for w, _fn in fns:
-                row[f"{w}_value"] = None
-                row[f"{w}_error"] = msg
-            return row
-        for w, fn in fns:
+            return (None, f"{type(e).__name__}: {e}") * len(fns)
+        row = ()
+        for fn in fns:
             try:
-                row[f"{w}_value"] = fn(a)
-                row[f"{w}_error"] = None
+                row += (fn(a), None)
             except Exception as e:  # noqa: BLE001
-                row[f"{w}_value"] = None
-                row[f"{w}_error"] = f"{type(e).__name__}: {e}"
+                row += (None, f"{type(e).__name__}: {e}")
         return row
 
-    @pandas_udf(f"struct<{fields}>")
-    def _ser(html: pd.Series) -> pd.DataFrame:
-        gc_was = gc.isenabled()
-        gc.disable()
+    fields = [
+        (f"{w}_{part}", pa.string()) for w in whats for part in ("value", "error")
+    ]
+    return make_parse_iterator(one, fields, passthrough, max_slice_bytes)
+
+
+def make_nodes_arrow_iterator(
+    fields=None, passthrough=("url",), max_slice_bytes: int | None = None
+):
+    """mapInArrow function for the relational tier: RecordBatches of pages
+    → (passthrough…, nodes array<struct<…>>) RecordBatches.
+
+    The per-slice node struct is assembled as flat Arrow child arrays +
+    one offsets vector (null offset = unparseable doc → NULL nodes row).
+    Node records are several times the html size, so the byte-bounded
+    slices are what keep a batch of big pages from building every node
+    of the batch at once."""
+    flds = list(fields) if fields else list(NODE_FIELD_TYPES)
+    child_types = [_ARROW_NODE_FIELD_TYPES[f] for f in flds]
+    nodes_t = pa.list_(pa.struct(list(zip(flds, child_types))))
+
+    def one(html):
+        # fresh per-doc lists: a parse or walk that raises midway leaves
+        # nothing half-appended to the slice's columns
+        cols = {f: [] for f in flds}
         try:
-            return pd.DataFrame(list(html.map(one)), index=html.index)
-        finally:
-            if gc_was:
-                gc.enable()
-
-    return _ser
-
-
-def udf_content_str():
-    """pandas_udf: html (binary/string) → content_str string column."""
-    return _udf_serialize("content_str")
-
-
-def udf_main_text():
-    return _udf_serialize("main_text")
-
-
-def udf_to_string():
-    """Round-trip serialization (Tag.to_string of the parsed root)."""
-    return _udf_serialize("to_string")
-
-
-def udf_prettify():
-    """Re-indented serialization (Tag.prettify, tag.py:422-478)."""
-    return _udf_serialize("prettify")
-
-
-def udf_content_without_tags():
-    """Raw text concat, comments dropped (tag.py:75-88) — no boilerplate
-    strip (contrast udf_main_text)."""
-    return _udf_serialize("content_without_tags")
-
-
-def udf_serializations():
-    """pandas_udf: html → struct of the four secondary serializations
-    (main_text, roundtrip to_string, content_without_tags, prettify) from
-    ONE parse per document — the driver-budget consolidation of four
-    scalar queries that each re-parsed the corpus (the flagship
-    content_str keeps its own dedicated query).  Same error-row policy as
-    :func:`_udf_serialize`: a poison document yields an all-NULL struct,
-    never a task failure."""
-    from pyspark.sql.functions import pandas_udf
-
-    # field -> _SERIALIZERS key: ONE dispatch table for all scalar UDFs
-    # (a serializer call-convention fix lands everywhere at once)
-    _fields = {
-        "main_text": "main_text",
-        "roundtrip": "to_string",
-        "no_tags": "content_without_tags",
-        "pretty": "prettify",
-    }
-    _none = dict.fromkeys(_fields)
-
-    def one(h):
-        try:
-            a = parse_arena(decode_html(h))
-            return {f: _SERIALIZERS[k](a) for f, k in _fields.items()}
-        except Exception:  # noqa: BLE001 — error-row at scale, never a crash
-            return dict(_none)
-
-    @pandas_udf(
-        "struct<main_text:string,roundtrip:string,no_tags:string,pretty:string>"
-    )
-    def _ser(html: pd.Series) -> pd.DataFrame:
-        gc_was = gc.isenabled()
-        gc.disable()
-        try:
-            return pd.DataFrame(list(html.map(one)), index=html.index)
-        finally:
-            if gc_was:
-                gc.enable()
-
-    return _ser
-
-
-def udf_nodes(fields=None):
-    """html → flattened node array (relational tier input); ``fields``
-    prunes the node struct (manual pushdown through the UDF boundary).
-    Unparseable documents (reference-parity parse errors, e.g. an
-    out-of-range numeric entity) yield NULL — the error-row policy of
-    every UDF here: one poison page must never fail a task."""
-    from pyspark.sql.functions import pandas_udf
-
-    flds = tuple(fields) if fields else None
-
-    def one(h):
-        try:
-            return flatten_nodes(parse_arena(decode_html(h)), flds)
-        except Exception:  # noqa: BLE001
+            append_nodes_columns(parse_arena(html), cols)
+        except Exception:  # noqa: BLE001 — error-row policy
             return None
+        return cols
 
-    @pandas_udf(node_schema(flds))
-    def _nodes(html: pd.Series) -> pd.Series:
-        return html.map(one)
+    def build(docs):
+        flat = {f: [] for f in flds}
+        offsets = [0]
+        for d in docs:
+            if d is not None:
+                for f in flds:
+                    flat[f].extend(d[f])
+            offsets.append(len(flat[flds[0]]))
+        child = pa.StructArray.from_arrays(
+            [pa.array(flat[f], t) for f, t in zip(flds, child_types)],
+            names=flds,
+        )
+        is_null = [d is None for d in docs]
+        return [
+            pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                child,
+                mask=pa.array(is_null) if any(is_null) else None,
+            )
+        ]
 
-    return _nodes
+    return make_parse_iterator(
+        one, [("nodes", nodes_t)], passthrough, max_slice_bytes, build
+    )

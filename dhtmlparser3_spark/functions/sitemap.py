@@ -74,74 +74,55 @@ def make_sitemap_iterator(max_slice_bytes: int | None = None):
     ``(url, body)`` → batches of ``SITEMAP_SCHEMA`` (exposed for
     no-Spark slice testing, the WAT tier's pattern)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    from dhtmlparser3_spark.functions.extract import (
-        _WORKER_BATCH_BYTES,
-        byte_slices,
-        decode_html,
-    )
-
-    bound = _WORKER_BATCH_BYTES if max_slice_bytes is None else max_slice_bytes
+    from dhtmlparser3_spark.functions.extract import arrow_slices, decode_html
 
     def run(batches):
-        for whole in batches:
-            idx = whole.schema.get_field_index("body")
-            sizes = pc.binary_length(whole.column(idx)).to_pylist()
-            for start, length in byte_slices(
-                [s or 0 for s in sizes], bound
-            ) or [(0, 0)]:
-                rb = (
-                    whole
-                    if length == whole.num_rows
-                    else whole.slice(start, length)
+        for rb in arrow_slices(batches, "body", max_slice_bytes):
+            urls = rb.column("url").to_pylist()
+            bodies = rb.column("body").to_pylist()
+            cols = {
+                k: []
+                for k in (
+                    "src_url", "kind", "ord", "loc",
+                    "lastmod", "changefreq", "priority", "error",
                 )
-                urls = rb.column(
-                    rb.schema.get_field_index("url")
-                ).to_pylist()
-                bodies = rb.column(idx).to_pylist()
-                cols = {
-                    k: []
-                    for k in (
-                        "src_url", "kind", "ord", "loc",
-                        "lastmod", "changefreq", "priority", "error",
-                    )
-                }
+            }
 
-                def emit(u, kind, ordn, loc, lm, cf, pr, err):
-                    cols["src_url"].append(u)
-                    cols["kind"].append(kind)
-                    cols["ord"].append(ordn)
-                    cols["loc"].append(loc)
-                    cols["lastmod"].append(lm)
-                    cols["changefreq"].append(cf)
-                    cols["priority"].append(pr)
-                    cols["error"].append(err)
+            def emit(u, kind, ordn, loc, lm, cf, pr, err):
+                cols["src_url"].append(u)
+                cols["kind"].append(kind)
+                cols["ord"].append(ordn)
+                cols["loc"].append(loc)
+                cols["lastmod"].append(lm)
+                cols["changefreq"].append(cf)
+                cols["priority"].append(pr)
+                cols["error"].append(err)
 
-                for u, b in zip(urls, bodies):
-                    try:
-                        entries = sitemap_entries_py(decode_html(b))
-                    except Exception as e:  # poison body → error row
-                        emit(u, None, None, None, None, None, None,
-                             f"{type(e).__name__}: {e}")
-                        continue
-                    counts = {"url": 0, "sitemap": 0}
-                    for kind, loc, lm, cf, pr in entries:
-                        emit(u, kind, counts[kind], loc, lm, cf, pr, None)
-                        counts[kind] += 1
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols["src_url"], pa.string()),
-                        pa.array(cols["kind"], pa.string()),
-                        pa.array(cols["ord"], pa.int32()),
-                        pa.array(cols["loc"], pa.string()),
-                        pa.array(cols["lastmod"], pa.string()),
-                        pa.array(cols["changefreq"], pa.string()),
-                        pa.array(cols["priority"], pa.string()),
-                        pa.array(cols["error"], pa.string()),
-                    ],
-                    list(cols),
-                )
+            for u, b in zip(urls, bodies):
+                try:
+                    entries = sitemap_entries_py(decode_html(b))
+                except Exception as e:  # poison body → error row
+                    emit(u, None, None, None, None, None, None,
+                         f"{type(e).__name__}: {e}")
+                    continue
+                counts = {"url": 0, "sitemap": 0}
+                for kind, loc, lm, cf, pr in entries:
+                    emit(u, kind, counts[kind], loc, lm, cf, pr, None)
+                    counts[kind] += 1
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(cols["src_url"], pa.string()),
+                    pa.array(cols["kind"], pa.string()),
+                    pa.array(cols["ord"], pa.int32()),
+                    pa.array(cols["loc"], pa.string()),
+                    pa.array(cols["lastmod"], pa.string()),
+                    pa.array(cols["changefreq"], pa.string()),
+                    pa.array(cols["priority"], pa.string()),
+                    pa.array(cols["error"], pa.string()),
+                ],
+                list(cols),
+            )
 
     return run
 

@@ -22,50 +22,32 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dhtmlparser3_spark.functions.extract import udf_nodes
+from dhtmlparser3_spark.functions.extract import (
+    NODE_FIELD_TYPES,
+    make_nodes_arrow_iterator,
+    node_schema,
+)
 
 KIND_TEXT, KIND_TAG, KIND_COMMENT = 0, 1, 2
 
 
-def parse_nodes(
-    pages: DataFrame, html_col: str = "html", fields=None
-) -> DataFrame:
-    """pages → + nodes array column (one pandas-UDF pass).  ``fields``
-    prunes the node struct — Catalyst can't push column pruning through
-    the UDF, so callers that only need (kind, name) shouldn't pay for
-    attrs/text construction + Arrow transfer."""
-    return pages.withColumn("nodes", udf_nodes(fields)(F.col(html_col)))
-
-
-def node_table(
-    pages: DataFrame, key_col: str = "url", fields=None, io: str = "arrow"
-) -> DataFrame:
+def node_table(pages: DataFrame, key_col: str = "url", fields=None) -> DataFrame:
     """Exploded node table: one row per DOM node per document; ``fields``
-    selects a subset of the node struct (default: all).
+    selects a subset of the node struct (default: all) — Catalyst can't
+    push column pruning through the Python map, so callers that only need
+    (kind, name) shouldn't pay for attrs/text construction + Arrow
+    transfer.
 
-    ``io="arrow"`` (default) crosses the worker boundary with mapInArrow:
-    the node struct is assembled as flat Arrow child arrays + offsets in
-    the worker (no per-node Python dicts, no pandas→Arrow struct
-    conversion — measured ~25-40% of the outlinks/node-query wall at
-    sf0.1), and the key column is re-emitted zero-copy.  ``io="pandas"``
-    keeps the scalar-pandas_udf path (ships ONLY html to the worker);
-    both are row-identical (test_node_table_arrow_parity)."""
-    from dhtmlparser3_spark.functions.extract import (
-        NODE_FIELD_TYPES,
-        make_nodes_arrow_iterator,
-        node_schema,
-    )
-
+    One ``mapInArrow`` pass (functions/extract.make_nodes_arrow_iterator)
+    ships only (key_col, html) to the worker, which assembles the node
+    struct as flat Arrow child arrays + offsets per byte-bounded slice
+    and re-emits the key column zero-copy.  Unparseable documents
+    (reference-parity parse errors) contribute no rows."""
     flds = list(fields) if fields else list(NODE_FIELD_TYPES)
-    if io == "arrow":
-        with_nodes = pages.select(key_col, "html").mapInArrow(
-            make_nodes_arrow_iterator(flds, passthrough=(key_col,)),
-            schema=f"{key_col} string, nodes {node_schema(flds)}",
-        )
-    elif io == "pandas":
-        with_nodes = parse_nodes(pages, fields=fields)
-    else:
-        raise ValueError(f"io={io!r}: expected 'arrow' or 'pandas'")
+    with_nodes = pages.select(key_col, "html").mapInArrow(
+        make_nodes_arrow_iterator(flds, passthrough=(key_col,)),
+        schema=f"{key_col} string, nodes {node_schema(flds)}",
+    )
     # explode_outer + post-filter, NOT plain explode: Catalyst infers a
     # size(udf(..)) > 0 filter BELOW a non-outer Generate and evaluates the
     # parse UDF twice per document (PLANS.md §6b; pinned by

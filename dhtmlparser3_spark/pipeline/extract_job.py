@@ -4,7 +4,7 @@ Physical plan (SURVEY.md §3.1/§4):
 
   scan (column-pruned: Catalyst keeps only url/warc_ts/lang/html)
     → salted repartition on xxhash64(url, salt)   [the ONE shuffle]
-    → mapInPandas(extract)                        [Arrow batches, Python CPU]
+    → mapInArrow(extract)                         [Arrow batches, Python CPU]
     → sink / downstream
 
 Why the explicit repartition: Common-Crawl rows cluster by host and size
@@ -21,13 +21,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from dhtmlparser3_spark.functions.extract import (
     EXTRACT_SCHEMA,
+    STATS_FIELDS,
     STATS_SCHEMA,
     make_extract_arrow_iterator,
-    make_extract_iterator,
-    make_stats_iterator,
+    make_parse_iterator,
+    make_serialize_iterator,
+    stats_one,
 )
 from dhtmlparser3_spark.plans.layout import has_parallelism
 
@@ -64,17 +67,9 @@ def extract_pages(
     salt: int = 2024,
     with_metrics: bool = True,
     repartition: str = "salted",
-    io: str = "arrow",
 ) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang, ...) → extracted rows.
-
-    ``io`` picks the worker boundary: ``"arrow"`` (default) runs
-    ``mapInArrow`` — output columns are built as Arrow arrays in the
-    worker and passthrough columns re-emitted zero-copy, skipping the
-    pandas round-trip on both sides (the pandas→Arrow struct converter
-    over the nested ``spans`` column is the single largest non-parse cost
-    at width; scripts/exp_width.py).  ``"pandas"`` keeps the mapInPandas
-    path (same rows, bit-identical — pinned by test_extract_arrow_parity).
+    """pages(url, warc_ts, html, text, lang, ...) → extracted rows, one
+    ``mapInArrow`` pass (functions/extract.make_extract_arrow_iterator).
 
     ``repartition`` picks the pre-UDF physical layout:
 
@@ -105,12 +100,7 @@ def extract_pages(
     if parallelism is None:
         parallelism = sc.defaultParallelism * 2
     df = _apply_repartition(df, repartition, parallelism, salt)
-    if io == "arrow":
-        out = df.mapInArrow(make_extract_arrow_iterator(), schema=EXTRACT_SCHEMA)
-    elif io == "pandas":
-        out = df.mapInPandas(make_extract_iterator(), schema=EXTRACT_SCHEMA)
-    else:
-        raise ValueError(f"io={io!r}: expected 'arrow' or 'pandas'")
+    out = df.mapInArrow(make_extract_arrow_iterator(), schema=EXTRACT_SCHEMA)
     if with_metrics:
         out = out.observe(
             "extract_metrics",
@@ -139,4 +129,29 @@ def extract_stats(
     if parallelism is None:
         parallelism = sc.defaultParallelism * 2
     df = _apply_repartition(df, repartition, parallelism, salt)
-    return df.mapInPandas(make_stats_iterator(), schema=STATS_SCHEMA)
+    return df.mapInArrow(
+        make_parse_iterator(stats_one, STATS_FIELDS), schema=STATS_SCHEMA
+    )
+
+
+def serialize_pages(
+    pages: DataFrame, whats, passthrough=("url",)
+) -> DataFrame:
+    """pages → (passthrough…, ``{w}_value``, ``{w}_error`` per serializer
+    ``w`` in ``whats``) from ONE parse per document, one ``mapInArrow``
+    pass with no repartition (functions/extract.make_serialize_iterator).
+    ``whats`` are keys of ``extract._SERIALIZERS`` (content_str,
+    main_text, to_string, prettify, content_without_tags).  A poison
+    document yields NULL values and the error text, never a task
+    failure."""
+    schema = StructType(
+        [StructField(c, pages.schema[c].dataType) for c in passthrough]
+        + [
+            StructField(f"{w}_{part}", StringType())
+            for w in whats
+            for part in ("value", "error")
+        ]
+    )
+    return pages.select(*passthrough, "html").mapInArrow(
+        make_serialize_iterator(whats, passthrough), schema=schema
+    )

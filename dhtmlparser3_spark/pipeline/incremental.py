@@ -9,11 +9,12 @@ zero Python cost.
 
 Scale shape: one left join on url (store BOTH tables bucketed on url-hash —
 sources/tables.write_bucketed / Iceberg ``bucket(N, url)`` — and this join
-is exchange-free, see PLANS.md §7), then the standard salted UDF stage over
+is exchange-free, see PLANS.md §7), then one Python map over
 the small changed slice only.  The digest compare is md5 over the raw html
-bytes, computed JVM-side; the plan contains exactly ONE ArrowEvalPython and
-a changed/new filter BELOW it (pinned by tests/test_incremental.py), so the
-parse provably never sees an unchanged row.
+bytes, computed JVM-side; the plan contains exactly ONE Python node (a
+MapInArrow) and a changed/new filter BELOW it (pinned by
+tests/test_incremental.py), so the parse provably never sees an unchanged
+row.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dhtmlparser3_spark.functions.extract import udf_serialize_errors
+from dhtmlparser3_spark.pipeline.extract_job import serialize_pages
 
 
 def extract_delta(new_pages: DataFrame, old: DataFrame) -> DataFrame:
@@ -49,15 +50,15 @@ def extract_delta(new_pages: DataFrame, old: DataFrame) -> DataFrame:
         .otherwise("unchanged")
     )
     j = j.withColumn("status", status)
-    parsed = (
-        j.where(F.col("status") != "unchanged")
-        .withColumn("_r", udf_serialize_errors("content_str")(F.col("html")))
-        .select(
-            "url",
-            "status",
-            F.col("_r.value").alias("extracted_text"),
-            F.col("_r.error").alias("error"),
-        )
+    parsed = serialize_pages(
+        j.where(F.col("status") != "unchanged"),
+        ["content_str"],
+        passthrough=("url", "status"),
+    ).select(
+        "url",
+        "status",
+        F.col("content_str_value").alias("extracted_text"),
+        F.col("content_str_error").alias("error"),
     )
     reused = j.where(F.col("status") == "unchanged").select(
         "url",

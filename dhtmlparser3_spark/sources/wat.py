@@ -96,60 +96,42 @@ def make_wat_iterator(max_slice_bytes: int | None = None):
     the byte-slice discipline is testable without Spark (the extract
     tier's ``make_extract_arrow_iterator`` pattern)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    from dhtmlparser3_spark.functions.extract import (
-        _WORKER_BATCH_BYTES,
-        byte_slices,
-        decode_html,
-    )
-
-    bound = _WORKER_BATCH_BYTES if max_slice_bytes is None else max_slice_bytes
+    from dhtmlparser3_spark.functions.extract import arrow_slices, decode_html
 
     link_t = pa.list_(
         pa.struct([("url", pa.string()), ("text", pa.string())])
     )
 
     def run(batches):
-        for whole in batches:
-            idx = whole.schema.get_field_index("html")
-            # slice BEFORE to_pylist (the extract tier's giant-doc
-            # discipline): unbox only one byte-bounded run of documents
-            # at a time, so a batch of multi-MB pages never materializes
-            # as Python strings simultaneously
-            sizes = pc.binary_length(whole.column(idx)).to_pylist()
-            for start, length in byte_slices(
-                [s or 0 for s in sizes], bound
-            ) or [(0, 0)]:
-                rb = (
-                    whole
-                    if length == whole.num_rows
-                    else whole.slice(start, length)
-                )
-                htmls = rb.column(idx).to_pylist()
-                titles, links_col, errs = [], [], []
-                for h in htmls:
-                    try:
-                        title, links = page_metadata(decode_html(h))
-                        titles.append(title)
-                        links_col.append(
-                            [{"url": u, "text": t} for u, t in links]
-                        )
-                        errs.append(None)
-                    except Exception as e:  # poison page → error row
-                        titles.append(None)
-                        links_col.append(None)
-                        errs.append(f"{type(e).__name__}: {e}")
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(rb.schema.get_field_index("url")),
-                        rb.column(rb.schema.get_field_index("warc_ts")),
-                        pa.array(titles, pa.string()),
-                        pa.array(links_col, link_t),
-                        pa.array(errs, pa.string()),
-                    ],
-                    ["url", "warc_ts", "title", "links", "error"],
-                )
+        # the extract tier's giant-doc discipline: unbox only one
+        # byte-bounded run of documents at a time, so a batch of multi-MB
+        # pages never materializes as Python strings simultaneously
+        for rb in arrow_slices(batches, "html", max_slice_bytes):
+            htmls = rb.column("html").to_pylist()
+            titles, links_col, errs = [], [], []
+            for h in htmls:
+                try:
+                    title, links = page_metadata(decode_html(h))
+                    titles.append(title)
+                    links_col.append(
+                        [{"url": u, "text": t} for u, t in links]
+                    )
+                    errs.append(None)
+                except Exception as e:  # poison page → error row
+                    titles.append(None)
+                    links_col.append(None)
+                    errs.append(f"{type(e).__name__}: {e}")
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("url"),
+                    rb.column("warc_ts"),
+                    pa.array(titles, pa.string()),
+                    pa.array(links_col, link_t),
+                    pa.array(errs, pa.string()),
+                ],
+                ["url", "warc_ts", "title", "links", "error"],
+            )
 
     return run
 

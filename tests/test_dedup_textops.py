@@ -98,10 +98,10 @@ def test_shingle_twin_on_edges(duck):
 
 @pytest.mark.spark
 def test_shingle_arrays_arrow_parity(spark):
-    """shingle_arrays(io="arrow") (mapInArrow, default) vs io="pandas":
-    identical (doc_id, shs) rows, including empty-shingle docs and
+    """shingle_arrays (mapInArrow) rows equal the Python twin
+    _shingle_list per text, including empty-shingle docs and
     whitespace-edged texts."""
-    from dhtmlparser3_spark.functions.dedup import shingle_arrays
+    from dhtmlparser3_spark.functions.dedup import _shingle_list, shingle_arrays
 
     rows = [
         (0, "a b c d e f"),
@@ -111,12 +111,9 @@ def test_shingle_arrays_arrow_parity(spark):
         (4, "a b c a b c a b c"),  # duplicate shingles -> distinct-first
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = shingle_arrays(df, n=3, io="arrow").toPandas()
-    p = shingle_arrays(df, n=3, io="pandas").toPandas()
-    a = a.sort_values("doc_id").reset_index(drop=True)
-    p = p.sort_values("doc_id").reset_index(drop=True)
-    assert a["doc_id"].tolist() == p["doc_id"].tolist()
-    assert [list(x) for x in a["shs"]] == [list(x) for x in p["shs"]]
+    got = {r.doc_id: list(r.shs) for r in shingle_arrays(df, n=3).collect()}
+    assert got == {i: _shingle_list(t, 3) for i, t in rows}
+    assert got[1] == [] and got[4] == ["a b c", "b c a", "c a b"]
 
 
 @pytest.mark.spark

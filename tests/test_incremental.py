@@ -86,10 +86,21 @@ def test_extract_delta_parses_only_changed_rows(spark):
         .executedPlan()
         .toString()
     )
-    # exactly one Python stage, and the unchanged-exclusion filter sits
-    # below it (NOT(status = unchanged) appears as a Filter on the join)
-    assert plan.count("ArrowEvalPython") == 1, plan
-    assert "unchanged" in plan, plan
+    # exactly one Python node, and the unchanged-exclusion filter sits
+    # below it: Catalyst folds NOT(status = unchanged) into a Filter over
+    # the digest compare, which must lie inside the MapInArrow's subtree
+    # (the lines after it that are indented deeper than it)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan, plan
+    lines = plan.splitlines()
+    depth = lambda ln: len(ln) - len(ln.lstrip(" :+-"))
+    top = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    below = []
+    for ln in lines[top + 1 :]:
+        if depth(ln) <= depth(lines[top]):
+            break
+        below.append(ln)
+    assert any("Filter NOT" in ln and "old_digest" in ln for ln in below), plan
 
 
 @pytest.mark.spark

@@ -163,11 +163,11 @@ def test_outlinks_both_modes_single_parse(spark):
 @pytest.mark.spark
 def test_warc_extract_plan_zero_exchanges(spark, tmp_path):
     """WARC ingest → extract is ONE map-only chain: binaryFile scan →
-    MapInArrow (member split + HTTP decode) → filter → ArrowEvalPython
+    MapInArrow (member split + HTTP decode) → filter → MapInArrow
     (parse/serialize), zero Exchange nodes — raw html never shuffles
     (the repo-wide rule), so at 72k CC shards the stage parallelism IS
     the file count with no barrier in between."""
-    from dhtmlparser3_spark.functions.extract import udf_content_str
+    from dhtmlparser3_spark.pipeline.extract_job import serialize_pages
     from dhtmlparser3_spark.sources.warc import warc_pages, write_warc_gz
 
     path = str(tmp_path / "p.warc.gz")
@@ -175,11 +175,11 @@ def test_warc_extract_plan_zero_exchanges(spark, tmp_path):
         [("http://x/1", "2024-01-01T00:00:00Z", b"<p>a</p>")], path
     )
     pages = warc_pages(spark, path)
-    out = pages.select("url", udf_content_str()("html").alias("value"))
+    out = serialize_pages(pages, ["content_str"])
     plan = _plan(out)
     assert "Exchange" not in plan, plan
-    assert plan.count("MapInArrow") == 1, plan
-    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("MapInArrow") == 2, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
 
 
 @pytest.mark.spark

@@ -125,22 +125,30 @@ def test_relational_wfind_matches_reference(spark, ref, nodes):
 
 @pytest.mark.spark
 def test_node_table_arrow_parity(spark):
-    """node_table(io="arrow") (mapInArrow, default) vs io="pandas"
-    (scalar pandas_udf): identical rows over ALL node fields on the
-    malformed corpus + poison docs (out-of-range entity → no rows)."""
+    """node_table (mapInArrow) rows equal driver-side flatten_nodes over
+    ALL node fields on the malformed corpus + poison docs (out-of-range
+    entity → no rows)."""
+    from dhtmlparser3_spark.engine.dom import parse_arena
+    from dhtmlparser3_spark.functions.extract import (
+        NODE_FIELD_TYPES,
+        decode_html,
+        flatten_nodes,
+    )
+
     docs = DOCS[:80] + ["<p>x &#1114112; y</p>", ""]
     rows = [(f"d{i}", bytearray(d.encode("utf-8"))) for i, d in enumerate(docs)]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    a = node_table(pages, io="arrow").toPandas()
-    p = node_table(pages, io="pandas").toPandas()
-    key = ["url", "node_id"]
-    a = a.sort_values(key).reset_index(drop=True)
-    p = p.sort_values(key).reset_index(drop=True)
-    assert list(a.columns) == list(p.columns)
-    assert len(a) == len(p)
-    for col in a.columns:
-        assert (
-            a[col].map(repr).tolist() == p[col].map(repr).tolist()
-        ), f"column {col} diverges"
-    # poison doc contributes zero node rows on both paths
-    assert f"d{len(docs) - 2}" not in set(a["url"])
+    nt = node_table(pages)
+    assert nt.columns == ["url"] + list(NODE_FIELD_TYPES)
+    got = [tuple(r.asDict(recursive=True).values()) for r in nt.collect()]
+    want = []
+    for url, h in rows:
+        try:
+            a = parse_arena(decode_html(h))
+        except Exception:  # poison doc: no node rows
+            continue
+        want += [(url,) + tuple(n.values()) for n in flatten_nodes(a)]
+    by_key = lambda t: t[:2]  # (url, node_id)
+    assert sorted(got, key=by_key) == sorted(want, key=by_key)
+    # poison doc contributes zero node rows
+    assert f"d{len(docs) - 2}" not in {t[0] for t in got}

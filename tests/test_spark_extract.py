@@ -103,14 +103,13 @@ def test_spark_pipeline_byte_identity(spark, ref):
 
 @pytest.mark.spark
 def test_spark_udfs_on_fixture_snippets(spark, ref):
-    """Malformed-HTML snippets through the Spark UDF path."""
+    """Malformed-HTML snippets through the Spark serialization path."""
+    from dhtmlparser3_spark.pipeline.extract_job import serialize_pages
+
     rows = [(f"case{i:03d}", s.encode("utf-8")) for i, s in enumerate(SNIPPETS)]
     df = spark.createDataFrame(rows, "url string, html binary")
-    out = df.select(
-        "url",
-        fx.udf_content_str()("html").alias("cs"),
-        fx.udf_to_string()("html").alias("ts"),
-        fx.udf_main_text()("html").alias("mt"),
+    out = serialize_pages(df, ["content_str", "to_string", "main_text"]).select(
+        "url", "content_str_value", "to_string_value", "main_text_value"
     ).toPandas()
     for url, cs, ts, mt in out.itertuples(index=False):
         s = SNIPPETS[int(url[4:])]
@@ -135,10 +134,12 @@ def test_spans_slice_back_into_source(spark):
 
 
 @pytest.mark.spark
-def test_nodes_flattening(spark, ref):
+def test_nodes_flattening(spark):
+    from dhtmlparser3_spark.operators.nodes import node_table
+
     rows = [("u0", b"<div a=1><p>x</p><br>y</div>")]
     df = spark.createDataFrame(rows, "url string, html binary")
-    nodes = df.select(fx.udf_nodes()("html").alias("nodes")).collect()[0].nodes
+    nodes = sorted(node_table(df).collect(), key=lambda n: n.node_id)
     names = [n.name for n in nodes if n.kind == 1]
     assert names[0] == "div"
     assert "p" in names and "br" in names
@@ -181,10 +182,13 @@ def test_stats_path_matches_full_extract(spark):
 
 
 @pytest.mark.spark
-def test_extract_arrow_parity_with_pandas_path(spark):
-    """io="arrow" (mapInArrow, default) and io="pandas" (mapInPandas) are the
-    same operator: identical rows — values, nested spans, error rows, and
-    schema — on a corpus that includes poison docs (out-of-range entity)."""
+def test_extract_arrow_parity_with_driver_extract_one(spark):
+    """extract_pages rows equal the passthrough columns plus driver-side
+    extract_one(decode_html(html)) — values, nested spans, error rows and
+    schema — on a corpus that includes poison docs (out-of-range entity)
+    and an empty doc."""
+    from pyspark.sql.types import _parse_datatype_string
+
     pages = pg.build_pages(spark, SF).where("doc_id < 120")
     poison = spark.createDataFrame(
         [
@@ -202,22 +206,27 @@ def test_extract_arrow_parity_with_pandas_path(spark):
     src = pages.select("url", "warc_ts", "html", "text", "lang").unionByName(
         poison
     )
-    kw = dict(parallelism=4, with_metrics=False)
-    a = extract_pages(src, io="arrow", **kw)
-    p = extract_pages(src, io="pandas", **kw)
-    assert a.schema == p.schema
-    pda = a.toPandas().sort_values("url").reset_index(drop=True)
-    pdp = p.toPandas().sort_values("url").reset_index(drop=True)
-    assert list(pda["url"]) == list(pdp["url"])
-    for col in pda.columns:
-        # spans cells are arrays of Rows — compare via repr to avoid
-        # numpy's elementwise == on nested cells
-        assert (
-            pda[col].map(repr).tolist() == pdp[col].map(repr).tolist()
-        ), f"column {col} diverges"
-    errs = dict(zip(pda["url"], pda["error"]))
-    assert errs["poison://entity"] is not None
-    assert errs["poison://empty"] is None
+    out = extract_pages(src, parallelism=4, with_metrics=False)
+    assert out.schema.simpleString() == (
+        _parse_datatype_string(fx.EXTRACT_SCHEMA).simpleString()
+    )
+    want = {
+        r.url: (r.url, r.warc_ts, r.lang) + fx.extract_one(fx.decode_html(r.html))
+        for r in src.collect()
+    }
+    got = {}
+    for r in out.collect():
+        row = list(r)
+        spans = r["spans"]
+        row[out.columns.index("spans")] = (
+            None if spans is None else [sp.asDict() for sp in spans]
+        )
+        got[r.url] = tuple(row)
+    assert len(got) == len(want) == 122
+    assert got == want
+    assert got["poison://entity"][-1] is not None
+    assert got["poison://empty"][-1] is None
+    assert any(w[-2] for w in want.values()), "no doc carried spans"
 
 
 @pytest.mark.spark
@@ -340,6 +349,33 @@ def test_giant_docs_worker_slicing_and_byte_identity(ref):
             got[u] = t
     for i, h in enumerate(htmls):
         assert got[f"https://g.example/{i}"] == ref.parse(h).content_str(), i
+
+
+def test_nodes_iterator_byte_bounded_slicing():
+    """Node records are several times the html size, so the node iterator
+    must slice like the extract iterator: ~1-MB docs (plus a poison doc)
+    in one fat Arrow batch under a 4-MiB bound come out in >=2 batches
+    whose rows equal the one-slice run.  No Spark."""
+    import pyarrow as pa
+
+    htmls = [h.encode() for h in _giant_docs(n=6, mb=1)]
+    htmls.insert(2, b"<p>x &#1114112; y</p>")
+    rb = pa.RecordBatch.from_pydict(
+        {"url": [f"https://g.example/{i}" for i in range(len(htmls))], "html": htmls}
+    )
+
+    def run(bound):
+        it = fx.make_nodes_arrow_iterator(max_slice_bytes=bound)
+        return list(it(iter([rb])))
+
+    sliced, whole = run(4 << 20), run(1 << 40)
+    assert len(whole) == 1
+    assert len(sliced) >= 2, f"expected >=2 byte-bounded slices, got {len(sliced)}"
+    rows = pa.Table.from_batches(sliced).to_pylist()
+    assert rows == pa.Table.from_batches(whole).to_pylist()
+    assert [r["url"] for r in rows] == rb.column("url").to_pylist()
+    assert rows[2]["nodes"] is None
+    assert all(r["nodes"] for i, r in enumerate(rows) if i != 2)
 
 
 @pytest.mark.spark
