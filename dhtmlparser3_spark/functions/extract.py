@@ -348,15 +348,19 @@ def extract_series(html: pd.Series) -> pd.DataFrame:
     return out
 
 
-# worker-side byte bound per processed slice: the JVM already double-bounds
-# its batches by rows AND bytes (plans/session.py maxBytesPerBatch), but a
-# defense in depth matters at the 100 TB design point — an engine path
-# that ignores the conf, or a caller-tuned giant row bound, must not make
-# one worker hold a whole oversized batch's OUTPUT (extracted text ≈ input
-# size, node records several times it) on top of its input.  Slices are
-# planned from the html byte lengths; a single row always forms a slice
-# even beyond the bound (the irreducible unit).
-_WORKER_BATCH_BYTES = 64 << 20
+# worker-side byte bound per processed slice — the Python worker's working
+# set.  While a slice is parsed the kernel holds every document's output
+# objects (extracted and main text, span dicts, the Arrow arrays built from
+# them: ~10x the html bytes), so the slice, not the input batch, sets the
+# worker's peak.  The input batch is not a bound to lean on: only
+# plans/session.get_spark sets maxBytesPerBatch; the spark-submit job
+# (jobs/extract_job_main.py) gets Spark's default of up to 10,000 rows per
+# batch with no byte limit.  1 MiB keeps the peak near the html bytes
+# (measured: ~190 → ~20 MiB of growth over one 20 MiB batch of ~19 KB
+# pages, tests/test_worker_slice.py) at no measurable per-doc cost.  Slices are planned from the html
+# byte lengths; a single row always forms a slice even beyond the bound
+# (the irreducible unit).
+_WORKER_BATCH_BYTES = 1 << 20
 
 
 def byte_slices(sizes, max_bytes: int):
@@ -376,11 +380,13 @@ def byte_slices(sizes, max_bytes: int):
 def arrow_slices(batches, column: str, max_slice_bytes: int | None = None):
     """Byte-bounded row slices of each RecordBatch, planned over the byte
     lengths of the binary/string ``column`` (``max_slice_bytes`` defaults
-    to ``_WORKER_BATCH_BYTES``; tests pass a small bound).  This is the
-    shared front half of every worker loop that unboxes documents: slice
-    BEFORE ``to_pylist``, because unboxing a giant batch's column in one
-    go would materialize every document as a Python object at once.  An
-    empty batch is yielded once, so it still produces an output batch."""
+    to ``_WORKER_BATCH_BYTES``, 1 MiB; tests pass other bounds).  This is
+    the shared front half of every worker loop that unboxes documents
+    (the parse family, WAT, sitemaps), so each of them holds one slice's
+    Python objects at a time, whatever the size of the input batch: slice
+    BEFORE ``to_pylist``, and emit each slice's output before the next is
+    unboxed.  An empty batch is yielded once, so it still produces an
+    output batch."""
     bound = _WORKER_BATCH_BYTES if max_slice_bytes is None else max_slice_bytes
     for whole in batches:
         sizes = pc.binary_length(whole.column(column)).to_pylist()

@@ -42,6 +42,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType
 
 from dhtmlparser3_spark.functions.extract import (
     EXTRACT_SCHEMA,
@@ -63,6 +64,23 @@ def with_bucket(pages: DataFrame, n_buckets: int, salt: int = 2024) -> DataFrame
     )
 
 
+def _literal_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """``rows`` (tuples in ``schema`` column order) as a one-partition
+    DataFrame built from literals on the JVM.  ``spark.createDataFrame``
+    of a Python list is a Python RDD: it would start Python workers and a
+    Spark job just to hand the JVM a few control-plane rows."""
+    row_t = ArrayType(DataType.fromDDL(schema))
+    rows_col = F.array(*[F.struct(*map(F.lit, r)) for r in rows]).cast(row_t)
+    return spark.range(1, numPartitions=1).select(F.inline(rows_col))
+
+
+def _missing_local(path: str) -> bool:
+    """Fast check for local paths only — on a remote FS (s3://, hdfs://)
+    os.path.exists is always False; readers handle remote path-not-found
+    via the exception class."""
+    return "://" not in path and not os.path.exists(path)
+
+
 def _read_parquet(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """``path`` read with ``schema``, or an empty frame if it does not exist.
 
@@ -72,17 +90,14 @@ def _read_parquet(spark: SparkSession, path: str, schema: str) -> DataFrame:
     the whole corpus."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
-    if "://" not in path and not os.path.exists(path):
-        # fast check for local paths only — on a remote FS (s3://, hdfs://)
-        # os.path.exists is always False; the read below handles remote
-        # path-not-found via the exception class
-        return spark.createDataFrame([], schema)
+    if _missing_local(path):
+        return _literal_frame(spark, [], schema)
     try:
         return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return spark.createDataFrame([], schema)
+            return _literal_frame(spark, [], schema)
         raise
 
 
@@ -97,6 +112,8 @@ def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame:
 def pending_buckets(
     spark: SparkSession, lineage_path: str, n_buckets: int
 ) -> list[int]:
+    if _missing_local(lineage_path):
+        return list(range(n_buckets))  # a fresh run: no Spark job to learn it
     done = {r.bucket for r in completed_buckets(spark, lineage_path).collect()}
     return [b for b in range(n_buckets) if b not in done]
 
@@ -163,13 +180,19 @@ def run_extract_job(
     }
 
 
-def _append_lineage(spark: SparkSession, lineage_path: str, rows: list) -> None:
-    """Append ``(run_id, bucket, input_path, n_docs, digest)`` lineage rows,
-    stamped now — called only AFTER their output committed."""
+def _lineage_rows(spark: SparkSession, rows: list) -> DataFrame:
+    """``(run_id, bucket, input_path, n_docs, digest)`` claims as
+    ``LINEAGE_SCHEMA`` rows stamped now, built on the JVM."""
     now_us = time.time_ns() // 1000
-    spark.createDataFrame(rows, LINEAGE_CLAIM).withColumn(
+    return _literal_frame(spark, rows, LINEAGE_CLAIM).withColumn(
         "committed_at", F.timestamp_micros(F.lit(now_us))
-    ).write.mode("append").parquet(lineage_path)
+    )
+
+
+def _append_lineage(spark: SparkSession, lineage_path: str, rows: list) -> None:
+    """Append lineage claims (see ``_lineage_rows``) — called only AFTER
+    their output committed."""
+    _lineage_rows(spark, rows).write.mode("append").parquet(lineage_path)
 
 
 def verify_run(spark: SparkSession, output_path: str, lineage_path: str) -> DataFrame:

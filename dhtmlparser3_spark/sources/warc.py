@@ -22,9 +22,11 @@ Scale shape (100 TB = one Common Crawl monthly snapshot, ~72k files of
   chaining ``extract_pages`` keeps parse+extract in the same stage.
 * Memory: ``binaryFile`` materializes each file's content as one row
   (~1 GiB per CC shard) and ``maxPartitionBytes`` does NOT split it; the
-  iterator below decompresses and yields records in ``batch_rows``-sized
-  Arrow batches so only the current batch of record bodies is held
-  alongside the (unavoidable) compressed buffer.
+  iterator below decompresses and yields records in Arrow batches cut at
+  ``batch_rows`` rows or at the worker slice of html bytes (1 MiB,
+  ``functions.extract._WORKER_BATCH_BYTES``), whichever comes first, so
+  only the current batch of record bodies is held alongside the
+  (unavoidable) compressed buffer.  ``io="stream"`` drops that buffer too.
 * Record-level random access — resuming mid-file, or fetching single
   documents — comes from Common Crawl's CDX index, which carries
   ``(filename, offset, length)`` per record precisely because each record
@@ -747,12 +749,17 @@ def _err_row(path: str, msg: str, types=_OUT_TYPES) -> tuple:
 
 def _batched_record_batches(row_iters, batch_rows: int, types=_OUT_TYPES):
     """Row-tuple iterators → Arrow RecordBatches of ≤ ``batch_rows`` rows
-    so one output batch, not one output FILE, bounds worker memory (a
-    1 GiB WARC shard holds ~50-100k records; their bodies must not
-    accumulate into a single Arrow batch).  ``types`` names the output
+    and ≤ the worker slice (``functions.extract._WORKER_BATCH_BYTES``) of
+    ``html`` bytes, so one output batch, not one output FILE, bounds
+    worker memory (a 1 GiB WARC shard holds ~50-100k records; their
+    bodies must not accumulate into a single Arrow batch, and 2048
+    multi-MB bodies would).  A batch always takes at least one row, so a
+    body beyond the byte bound travels alone.  ``types`` names the output
     columns in row-tuple order (RAW by default; the revisit reader passes
-    its own)."""
+    its own, which has no ``html`` and is cut by rows only)."""
     import pyarrow as pa
+
+    from dhtmlparser3_spark.functions.extract import _WORKER_BATCH_BYTES
 
     pa_of = {
         "string": pa.string(),
@@ -763,7 +770,9 @@ def _batched_record_batches(row_iters, batch_rows: int, types=_OUT_TYPES):
     fields = list(types)
     out_t = {k: pa_of[v] for k, v in types.items()}
 
+    html_i = fields.index("html") if "html" in types else None
     rows: list = []
+    nbytes = 0
 
     def _flush():
         rb = pa.RecordBatch.from_arrays(
@@ -778,9 +787,15 @@ def _batched_record_batches(row_iters, batch_rows: int, types=_OUT_TYPES):
 
     for it in row_iters:
         for row in it:
+            size = len(row[html_i] or b"") if html_i is not None else 0
+            if rows and nbytes + size > _WORKER_BATCH_BYTES:
+                yield _flush()
+                nbytes = 0
             rows.append(row)
+            nbytes += size
             if len(rows) >= batch_rows:
                 yield _flush()
+                nbytes = 0
     if rows:
         yield _flush()
 

@@ -144,7 +144,8 @@ def wat_metadata(
     error policy (a poison page yields an error ROW keyed by url, never
     a task failure).  Worker memory is byte-bounded: each Arrow batch is
     processed in ``max_slice_bytes`` runs (default the extract tier's
-    64 MiB) so giant pages never unbox simultaneously."""
+    1 MiB worker slice, ``functions.extract._WORKER_BATCH_BYTES``), so a
+    batch of big pages never unboxes at once."""
     return pages.select("url", "warc_ts", "html").mapInArrow(
         make_wat_iterator(max_slice_bytes), META_SCHEMA
     )

@@ -240,3 +240,39 @@ def test_verify_run_flags_duplicate_lineage_rows(spark, tmp_path):
 
     bad = ln.verify_run(spark, out, lin).collect()
     assert sorted(r.bucket for r in bad) == [1, 1]
+
+
+@pytest.mark.spark
+def test_pending_buckets_of_missing_lineage_launches_no_job(spark, tmp_path):
+    """A fresh run learns that nothing is committed without a Spark job."""
+    sc = spark.sparkContext
+    group = "pending-missing-lineage"
+    sc.setJobGroup(group, "pending_buckets on a missing lineage path")
+    try:
+        pending = ln.pending_buckets(spark, str(tmp_path / "nope"), 8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert pending == list(range(8))
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.spark
+def test_lineage_frames_built_on_the_jvm(spark, tmp_path):
+    """The lineage rows and the "nothing committed yet" frame are JVM
+    literals, not a Python RDD (no ``ExistingRDD`` scan, so no Python
+    worker), and carry the lineage schema and values."""
+    rows = [("run1", 3, "in/*.warc.gz", 7, 1 << 40), ("run1", 5, "", 0, 0)]
+    frames = {
+        "rows": ln._lineage_rows(spark, rows),
+        "empty": ln.completed_buckets(spark, str(tmp_path / "nope")),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)
+    from pyspark.sql.types import DataType
+
+    got = frames["rows"]
+    want_t = DataType.fromDDL(ln.LINEAGE_SCHEMA).simpleString()
+    assert got.schema.simpleString() == want_t
+    assert [tuple(r)[:5] for r in got.collect()] == rows
+    assert frames["empty"].collect() == []

@@ -119,6 +119,30 @@ def test_spark_udfs_on_fixture_snippets(spark, ref):
 
 
 @pytest.mark.spark
+def test_serialize_pages_main_text_on_fixture_snippets(spark):
+    """``main_text`` through the Spark serialization path equals the same
+    serializer run in this process on every malformed snippet, value or
+    error string.  Needs no reference."""
+    from dhtmlparser3_spark.engine.dom import parse_arena
+    from dhtmlparser3_spark.pipeline.extract_job import serialize_pages
+
+    def local_main_text(s):
+        try:
+            return fx._SERIALIZERS["main_text"](parse_arena(s)), None
+        except Exception as e:  # noqa: BLE001 — the worker's error text
+            return None, f"{type(e).__name__}: {e}"
+
+    rows = [(f"case{i:03d}", s.encode("utf-8")) for i, s in enumerate(SNIPPETS)]
+    df = spark.createDataFrame(rows, "url string, html binary")
+    out = serialize_pages(df, ["main_text"]).collect()
+    assert len(out) == len(SNIPPETS)
+    for r in out:
+        s = SNIPPETS[int(r.url[4:])]
+        got = (r.main_text_value, r.main_text_error)
+        assert got == local_main_text(s), f"main_text {s!r}"
+
+
+@pytest.mark.spark
 def test_spans_slice_back_into_source(spark):
     # filter, not limit: limit after the build repartition is evaluation-
     # order dependent, and the test materializes pages twice
