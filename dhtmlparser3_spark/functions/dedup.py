@@ -127,15 +127,12 @@ def shingle_arrays(df: DataFrame, n: int = 3, id_col: str = "doc_id") -> DataFra
     def run(batches):
         import pyarrow as pa
 
+        from dhtmlparser3_spark.functions.extract import arrow_column
+
         for rb in batches:
-            texts = rb.column(1).to_pylist()
-            flat: list = []
-            offs = [0]
-            for t in texts:
-                flat.extend(_shingle_list(t, n))
-                offs.append(len(flat))
-            shs = pa.ListArray.from_arrays(
-                pa.array(offs, pa.int32()), pa.array(flat, pa.string())
+            shs = arrow_column(
+                [_shingle_list(t, n) for t in rb.column(1).to_pylist()],
+                pa.list_(pa.string()),
             )
             yield pa.RecordBatch.from_arrays(
                 [rb.column(0), shs], ["doc_id", "shs"]

@@ -16,16 +16,20 @@ Spans: per-text-node (src_start, src_end) offsets into the decoded html —
 
 from __future__ import annotations
 
+import array
 import gc
-from typing import Iterator, List
+from itertools import accumulate
+from typing import TYPE_CHECKING, Iterator, List
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from dhtmlparser3_spark.engine import serialize
 from dhtmlparser3_spark.engine.dom import Arena, parse_arena
 from dhtmlparser3_spark.engine.lexer import TAG, TEXT
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 _BOILERPLATE_NAMES = frozenset({"script", "style"})
 
@@ -323,12 +327,15 @@ def extract_series(html: pd.Series) -> pd.DataFrame:
     """Vectorized batch extraction over a Series of html bytes/str.
 
     Kept only as the subject of perfbench's ``boundary_layer`` (with
-    :func:`make_extract_iterator`); no pipeline runs it.
+    :func:`make_extract_iterator`); no pipeline runs it, so pandas is
+    imported here, on call, and never by a job's worker.
 
     Column-wise frame construction: building a DataFrame from row tuples
     costs ~28µs/row in pandas — at 10^12 docs that is pure waste, so we
     transpose once and hand pandas ready columns.
     """
+    import pandas as pd
+
     gc_was_enabled = gc.isenabled()
     gc.disable()  # alloc-heavy build loop, parity with parser.py:38
     try:
@@ -352,14 +359,17 @@ def extract_series(html: pd.Series) -> pd.DataFrame:
 # set.  While a slice is parsed the kernel holds every document's output
 # objects (extracted and main text, span dicts, the Arrow arrays built from
 # them: ~10x the html bytes), so the slice, not the input batch, sets the
-# worker's peak.  The input batch is not a bound to lean on: only
-# plans/session.get_spark sets maxBytesPerBatch; the spark-submit job
-# (jobs/extract_job_main.py) gets Spark's default of up to 10,000 rows per
-# batch with no byte limit.  1 MiB keeps the peak near the html bytes
-# (measured: ~190 → ~20 MiB of growth over one 20 MiB batch of ~19 KB
-# pages, tests/test_worker_slice.py) at no measurable per-doc cost.  Slices are planned from the html
-# byte lengths; a single row always forms a slice even beyond the bound
-# (the irreducible unit).
+# worker's peak.  The same constant bounds the input batch: the
+# spark-submit job (jobs/extract_job_main.py) sets
+# spark.sql.execution.arrow.maxBytesPerBatch to it unless the submitter's
+# conf names that key, and the WARC record batcher
+# (sources/warc._batched_record_batches) cuts its batches at it.
+# plans/session.get_spark keeps its own, larger input bound.  1 MiB keeps
+# the peak near the html bytes (measured: ~190 → ~20 MiB of growth over one
+# 20 MiB batch of ~19 KB pages, tests/test_worker_slice.py) at no
+# measurable per-doc cost.  Slices are planned from the html byte lengths;
+# a single row always forms a slice even beyond the bound (the irreducible
+# unit).
 _WORKER_BATCH_BYTES = 1 << 20
 
 
@@ -396,6 +406,75 @@ def arrow_slices(batches, column: str, max_slice_bytes: int | None = None):
             yield whole if length == whole.num_rows else whole.slice(start, length)
 
 
+# array typecode per fixed-width Arrow integer type built by arrow_column
+_INT_CODES = {pa.int8(): "b", pa.int32(): "i", pa.int64(): "q"}
+
+
+def _bitmap(flags) -> pa.Buffer:
+    """Bit-packed Arrow buffer of a sequence of truthy/falsy flags (one
+    byte per flag in, one bit per flag out; the packing is Arrow's cast)."""
+    u8 = pa.Array.from_buffers(
+        pa.uint8(), len(flags), [None, pa.py_buffer(bytes(map(bool, flags)))]
+    )
+    return u8.cast(pa.bool_()).buffers()[1]
+
+
+def arrow_column(values, type: pa.DataType) -> pa.Array:
+    """Typed Arrow array of Python ``values`` (``None`` = null), built
+    from buffers: equal to what ``pa.array`` builds from ``values`` and
+    ``type`` for the types the workers emit — string, binary, int8/32/64,
+    bool, and lists and structs (dicts) of those, recursively.
+
+    The point is what it does not load.  pyarrow's ``pa.array`` (and
+    ``pa.scalar``) probes its input with pandas' ``is_array_like``, which
+    imports pandas: ~35 MB of RSS and ~0.4 s per Python worker.  Here
+    the offsets and values are packed with the stdlib (``array``,
+    ``bytes.join``) and handed to ``pa.Array.from_buffers``, which never
+    touches pandas.  A ``str`` that is not valid UTF-8 (a lone surrogate)
+    raises ``UnicodeEncodeError``, as ``pa.array`` does; a column past
+    2 GiB of bytes raises ``OverflowError`` (int32 offsets)."""
+    n = len(values)
+    nulls = values.count(None)
+    validity = _bitmap([v is not None for v in values]) if nulls else None
+    if pa.types.is_string(type) or pa.types.is_binary(type):
+        if pa.types.is_string(type):
+            parts = [b"" if v is None else v.encode("utf-8") for v in values]
+        else:
+            parts = [b"" if v is None else v for v in values]
+        offsets = array.array("i", accumulate(map(len, parts), initial=0))
+        buffers = [validity, pa.py_buffer(offsets), pa.py_buffer(b"".join(parts))]
+    elif type in _INT_CODES:
+        data = array.array(
+            _INT_CODES[type], [0 if v is None else v for v in values]
+        )
+        buffers = [validity, pa.py_buffer(data)]
+    elif pa.types.is_boolean(type):
+        buffers = [validity, _bitmap(values)]
+    elif pa.types.is_list(type):
+        offsets = array.array(
+            "i",
+            accumulate((0 if v is None else len(v) for v in values), initial=0),
+        )
+        flat = [x for v in values if v is not None for x in v]
+        return pa.Array.from_buffers(
+            type, n, [validity, pa.py_buffer(offsets)], nulls,
+            children=[arrow_column(flat, type.value_type)],
+        )
+    elif pa.types.is_struct(type):
+        children = [
+            arrow_column(
+                [None if v is None else v.get(f.name) for v in values], f.type
+            )
+            for f in type
+        ]
+        return pa.Array.from_buffers(
+            type, n, [validity], nulls, children=children
+        )
+    else:
+        raise TypeError(f"arrow_column: unsupported type {type}")
+    return pa.Array.from_buffers(type, n, buffers, nulls)
+
+
 def make_extract_iterator(
     passthrough=("url", "warc_ts", "lang"), max_slice_bytes: int | None = None
 ):
@@ -403,8 +482,9 @@ def make_extract_iterator(
 
     Kept only as the subject of perfbench's ``boundary_layer`` (with
     :func:`extract_series`); every pipeline crosses the boundary through
-    :func:`make_parse_iterator`.  Delete both once that layer times the
-    Arrow path.
+    :func:`make_parse_iterator`, and pandas is imported only when this
+    function is called.  Delete both once that layer times the Arrow
+    path (a change to the benchmark).
 
     Each incoming batch is processed in byte-bounded row slices (see
     ``_WORKER_BATCH_BYTES``) so output accumulation stays bounded even on
@@ -446,12 +526,30 @@ def make_extract_iterator(
     return run
 
 
+def _encodable(values, build, poison):
+    """``values`` with every document whose output cannot be encoded as
+    UTF-8 replaced by ``poison("UnicodeEncodeError: …")``.  The engine
+    keeps the reference's ``chr()`` semantics, so a numeric entity in the
+    surrogate range (``&#55296;``) yields a lone surrogate that no Arrow
+    string can hold; per the error-row policy that is one error row, not
+    a failed slice.  Only called once a whole-slice build has failed."""
+    out = []
+    for v in values:
+        try:
+            build([v])
+        except UnicodeEncodeError as e:
+            v = poison(f"UnicodeEncodeError: {e}")
+        out.append(v)
+    return out
+
+
 def make_parse_iterator(
     per_doc,
     fields,
     passthrough=("url", "warc_ts", "lang"),
     max_slice_bytes: int | None = None,
     build=None,
+    poison=None,
 ):
     """The one mapInArrow batch loop of the parse family: RecordBatches
     with an ``html`` column → RecordBatches of (passthrough…, fields…).
@@ -460,13 +558,17 @@ def make_parse_iterator(
     unboxed once at the C level, ``per_doc`` runs on every decoded
     document with the cyclic GC off (alloc-heavy build loop, parity with
     parser.py:38), the output columns are built directly as typed Arrow
-    arrays and the passthrough columns are re-emitted zero-copy — no
-    pandas on either side of the boundary.  ``per_doc`` never raises: a
-    poison page becomes an error value, never a task failure.
+    arrays (:func:`arrow_column`) and the passthrough columns are
+    re-emitted zero-copy — no pandas on either side of the boundary, and
+    none loaded in the worker.  ``per_doc`` never raises: a poison page
+    becomes an error value, never a task failure, and so does a document
+    whose output is not encodable as UTF-8 (:func:`_encodable`).
 
     ``fields`` is ``[(name, pa.DataType)]``.  By default ``per_doc``
-    returns one tuple per document whose i-th slot fills field i;
-    ``build(values) -> [pa.Array]`` replaces that for outputs assembled
+    returns one tuple per document whose i-th slot fills field i, and an
+    error value is the tuple with the message in every field whose name
+    ends in ``error`` and NULL elsewhere; ``build(values) -> [pa.Array]``
+    and ``poison(message) -> value`` replace those for outputs assembled
     another way (the node table)."""
     names = list(passthrough) + [f for f, _ in fields]
     if build is None:
@@ -474,7 +576,12 @@ def make_parse_iterator(
 
         def build(rows):
             cols = list(zip(*rows)) if rows else [()] * len(types)
-            return [pa.array(c, t) for c, t in zip(cols, types)]
+            return [arrow_column(c, t) for c, t in zip(cols, types)]
+
+    if poison is None:
+
+        def poison(msg):
+            return tuple(msg if f.endswith("error") else None for f, _ in fields)
 
     def run(batches):
         for rb in arrow_slices(batches, "html", max_slice_bytes):
@@ -486,7 +593,11 @@ def make_parse_iterator(
             finally:
                 if gc_was_enabled:
                     gc.enable()
-            arrays = [rb.column(c) for c in passthrough] + build(values)
+            try:
+                out = build(values)
+            except UnicodeEncodeError:
+                out = build(_encodable(values, build, poison))
+            arrays = [rb.column(c) for c in passthrough] + out
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     return run
@@ -570,18 +681,19 @@ def make_nodes_arrow_iterator(
                     flat[f].extend(d[f])
             offsets.append(len(flat[flds[0]]))
         child = pa.StructArray.from_arrays(
-            [pa.array(flat[f], t) for f, t in zip(flds, child_types)],
+            [arrow_column(flat[f], t) for f, t in zip(flds, child_types)],
             names=flds,
         )
         is_null = [d is None for d in docs]
         return [
             pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
+                arrow_column(offsets, pa.int32()),
                 child,
-                mask=pa.array(is_null) if any(is_null) else None,
+                mask=arrow_column(is_null, pa.bool_()) if any(is_null) else None,
             )
         ]
 
     return make_parse_iterator(
-        one, [("nodes", nodes_t)], passthrough, max_slice_bytes, build
+        one, [("nodes", nodes_t)], passthrough, max_slice_bytes, build,
+        poison=lambda _msg: None,
     )

@@ -75,7 +75,11 @@ def make_sitemap_iterator(max_slice_bytes: int | None = None):
     no-Spark slice testing, the WAT tier's pattern)."""
     import pyarrow as pa
 
-    from dhtmlparser3_spark.functions.extract import arrow_slices, decode_html
+    from dhtmlparser3_spark.functions.extract import (
+        arrow_column,
+        arrow_slices,
+        decode_html,
+    )
 
     def run(batches):
         for rb in arrow_slices(batches, "body", max_slice_bytes):
@@ -112,14 +116,14 @@ def make_sitemap_iterator(max_slice_bytes: int | None = None):
                     counts[kind] += 1
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(cols["src_url"], pa.string()),
-                    pa.array(cols["kind"], pa.string()),
-                    pa.array(cols["ord"], pa.int32()),
-                    pa.array(cols["loc"], pa.string()),
-                    pa.array(cols["lastmod"], pa.string()),
-                    pa.array(cols["changefreq"], pa.string()),
-                    pa.array(cols["priority"], pa.string()),
-                    pa.array(cols["error"], pa.string()),
+                    arrow_column(cols["src_url"], pa.string()),
+                    arrow_column(cols["kind"], pa.string()),
+                    arrow_column(cols["ord"], pa.int32()),
+                    arrow_column(cols["loc"], pa.string()),
+                    arrow_column(cols["lastmod"], pa.string()),
+                    arrow_column(cols["changefreq"], pa.string()),
+                    arrow_column(cols["priority"], pa.string()),
+                    arrow_column(cols["error"], pa.string()),
                 ],
                 list(cols),
             )

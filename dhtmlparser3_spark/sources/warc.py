@@ -747,38 +747,55 @@ def _err_row(path: str, msg: str, types=_OUT_TYPES) -> tuple:
     )
 
 
+def _row_nbytes(row) -> int:
+    """Byte size of one row tuple: the sum over its str/bytes values of
+    ``len`` of bytes and the UTF-8 length of a str (``len`` itself when
+    ASCII, the common case).  Other values (ints, NULLs, nested lists)
+    count 0 — the body column dominates every reader's rows."""
+    n = 0
+    for v in row:
+        if isinstance(v, bytes):
+            n += len(v)
+        elif isinstance(v, str):
+            n += len(v) if v.isascii() else len(
+                v.encode("utf-8", "surrogatepass")
+            )
+    return n
+
+
 def _batched_record_batches(row_iters, batch_rows: int, types=_OUT_TYPES):
     """Row-tuple iterators → Arrow RecordBatches of ≤ ``batch_rows`` rows
     and ≤ the worker slice (``functions.extract._WORKER_BATCH_BYTES``) of
-    ``html`` bytes, so one output batch, not one output FILE, bounds
+    str/bytes values, so one output batch, not one output FILE, bounds
     worker memory (a 1 GiB WARC shard holds ~50-100k records; their
     bodies must not accumulate into a single Arrow batch, and 2048
     multi-MB bodies would).  A batch always takes at least one row, so a
-    body beyond the byte bound travels alone.  ``types`` names the output
-    columns in row-tuple order (RAW by default; the revisit reader passes
-    its own, which has no ``html`` and is cut by rows only)."""
+    body beyond the byte bound travels alone.  ``types`` maps the output
+    columns, in row-tuple order, to Arrow types or their aliases (RAW by
+    default).  This is the one record batcher of the WARC-layout
+    readers: every :func:`scan_record_files` reader and
+    ``read_warc_at``.  Columns are built with ``arrow_column``, so the
+    reader's worker never loads pandas."""
     import pyarrow as pa
 
-    from dhtmlparser3_spark.functions.extract import _WORKER_BATCH_BYTES
+    from dhtmlparser3_spark.functions.extract import (
+        _WORKER_BATCH_BYTES,
+        arrow_column,
+    )
 
-    pa_of = {
-        "string": pa.string(),
-        "int64": pa.int64(),
-        "int32": pa.int32(),
-        "binary": pa.binary(),
-    }
     fields = list(types)
-    out_t = {k: pa_of[v] for k, v in types.items()}
-
-    html_i = fields.index("html") if "html" in types else None
+    out_t = [
+        t if isinstance(t, pa.DataType) else pa.type_for_alias(t)
+        for t in types.values()
+    ]
     rows: list = []
     nbytes = 0
 
     def _flush():
         rb = pa.RecordBatch.from_arrays(
             [
-                pa.array([r[i] for r in rows], out_t[k])
-                for i, k in enumerate(fields)
+                arrow_column([r[i] for r in rows], t)
+                for i, t in enumerate(out_t)
             ],
             fields,
         )
@@ -787,7 +804,7 @@ def _batched_record_batches(row_iters, batch_rows: int, types=_OUT_TYPES):
 
     for it in row_iters:
         for row in it:
-            size = len(row[html_i] or b"") if html_i is not None else 0
+            size = _row_nbytes(row)
             if rows and nbytes + size > _WORKER_BATCH_BYTES:
                 yield _flush()
                 nbytes = 0
@@ -800,11 +817,55 @@ def _batched_record_batches(row_iters, batch_rows: int, types=_OUT_TYPES):
         yield _flush()
 
 
+def _plain_extents(members):
+    """(offset, raw) plain-record iterator → (offset, length, raw): an
+    uncompressed record's on-disk extent IS its byte length."""
+    for off, raw in members:
+        yield off, len(raw), raw
+
+
+def _content_members(data: bytes, extents: bool):
+    """Member iterator over a whole file's bytes, layout detected by the
+    gzip magic: ``(offset, raw)``, or ``(offset, length, raw)`` with
+    ``extents`` (the on-disk extent a CDX index publishes)."""
+    if data[:2] == _GZ_MAGIC:
+        if extents:
+            import io
+
+            return stream_gzip_extents(io.BytesIO(data))
+        return split_gzip_members(data)
+    members = split_warc_plain(data)
+    return _plain_extents(members) if extents else members
+
+
+def _file_members(f, extents: bool):
+    """:func:`_content_members` over an open file, decompressed
+    incrementally (O(record) memory, independent of shard size)."""
+    magic = f.read(2)
+    f.seek(0)
+    if magic == _GZ_MAGIC:
+        return stream_gzip_extents(f) if extents else stream_gzip_members(f)
+    members = stream_warc_plain(f)
+    return _plain_extents(members) if extents else members
+
+
+def _raising(e: Exception):
+    """A member iterator whose first ``next`` raises ``e``: an unopenable
+    file goes through the row function's own end-this-file policy."""
+    raise e
+    yield  # pragma: no cover
+
+
 def _records_arrow_iterator(
-    batch_rows: int, row_fn=None, types=_OUT_TYPES
+    batch_rows: int,
+    row_fn=None,
+    types=_OUT_TYPES,
+    extents: bool = False,
 ):
     """mapInArrow fn over binaryFile rows: (path, content) → ``types``
-    rows via ``row_fn`` (default: the response-record loop)."""
+    rows via ``row_fn(path, members)`` (default: the response-record
+    loop), batched by :func:`_batched_record_batches`.
+    The one whole-file record scanner of the WARC-layout readers."""
     row_fn = row_fn or _iter_record_rows
 
     def run(batches):
@@ -817,24 +878,25 @@ def _records_arrow_iterator(
                     rb.schema.get_field_index("content")
                 ).to_pylist()
                 for path, data in zip(paths, contents):
-                    data = bytes(data)
-                    members = (
-                        split_gzip_members(data)
-                        if data[:2] == _GZ_MAGIC
-                        else split_warc_plain(data)
-                    )
-                    yield row_fn(path, members)
+                    yield row_fn(path, _content_members(bytes(data), extents))
 
         yield from _batched_record_batches(row_iters(), batch_rows, types)
 
     return run
 
 
-def _stream_arrow_iterator(batch_rows: int, row_fn=None, types=_OUT_TYPES):
+def _stream_arrow_iterator(
+    batch_rows: int,
+    row_fn=None,
+    types=_OUT_TYPES,
+    extents: bool = False,
+):
     """mapInArrow fn over path-only rows: (path) → ``types`` rows, opening
     each file in the worker and decompressing incrementally — worker
     memory is O(batch), independent of shard size (the whole-file reader
-    unavoidably holds the compressed shard binaryFile hands it)."""
+    unavoidably holds the compressed shard binaryFile hands it).  An
+    unopenable file yields the row ``row_fn`` makes of a member iterator
+    that fails at once (the shared end-this-file policy)."""
     row_fn = row_fn or _iter_record_rows
 
     def run(batches):
@@ -846,17 +908,10 @@ def _stream_arrow_iterator(batch_rows: int, row_fn=None, types=_OUT_TYPES):
                     try:
                         f = open(_local_path(path), "rb")
                     except OSError as e:
-                        yield iter([_err_row(path, f"gzip: {e}", types)])
+                        yield row_fn(path, _raising(e))
                         continue
                     with f:
-                        magic = f.read(2)
-                        f.seek(0)
-                        members = (
-                            stream_gzip_members(f)
-                            if magic == _GZ_MAGIC
-                            else stream_warc_plain(f)
-                        )
-                        yield row_fn(path, members)
+                        yield row_fn(path, _file_members(f, extents))
 
         yield from _batched_record_batches(row_iters(), batch_rows, types)
 
@@ -893,6 +948,42 @@ def _with_warc_ts(raw: DataFrame) -> DataFrame:
     )
 
 
+def scan_record_files(
+    spark: SparkSession,
+    path: str,
+    io: str,
+    make_rows,
+    schema: str,
+    arrow_types,
+    batch_rows: int = 2048,
+    extents: bool = False,
+) -> DataFrame:
+    """The one WARC-layout record scan, shared by ``read_warc``,
+    ``read_warc_revisits``, the WET and WAT readers and the CDX indexer:
+    binaryFile over ``path`` (both on-disk layouts auto-detected per
+    file), ``make_rows(path, member_iter)`` turning members into row
+    tuples matching ``schema``/``arrow_types`` (Arrow types or their
+    aliases), ``io`` as in :func:`read_warc` (``"stream"`` = path-only
+    scan + incremental decompress, O(batch) worker memory).  An
+    unopenable file in stream mode yields the row ``make_rows`` produces
+    for an immediately-failing member iterator (the shared end-this-file
+    policy).  Output batches come from :func:`_batched_record_batches`:
+    ≤ ``batch_rows`` rows and ≤ the worker slice of str/bytes values.
+
+    With ``extents=True`` the member iterator yields ``(offset, length,
+    raw)`` instead of ``(offset, raw)`` — ``length`` is the record's
+    on-disk byte extent (compressed gzip member / plain record bytes),
+    the quantity a CDX index publishes for ranged fetches."""
+    assert io in ("content", "stream"), io
+    iterator = (
+        _stream_arrow_iterator if io == "stream" else _records_arrow_iterator
+    )(batch_rows, make_rows, arrow_types, extents)
+    files = spark.read.format("binaryFile").load(path)
+    if io == "stream":
+        return files.select("path").mapInArrow(iterator, schema)
+    return files.select("path", "content").mapInArrow(iterator, schema)
+
+
 def read_warc(
     spark: SparkSession,
     path: str,
@@ -922,16 +1013,10 @@ def read_warc(
       pyarrow.fs, see ``_local_path``); the right mode at 100 TB where
       executors mount the store.
     """
-    assert io in ("content", "stream"), io
-    files = spark.read.format("binaryFile").load(path)
-    if io == "stream":
-        raw = files.select("path").mapInArrow(
-            _stream_arrow_iterator(batch_rows), RAW_SCHEMA
-        )
-    else:
-        raw = files.select("path", "content").mapInArrow(
-            _records_arrow_iterator(batch_rows), RAW_SCHEMA
-        )
+    raw = scan_record_files(
+        spark, path, io, _iter_record_rows, RAW_SCHEMA, _OUT_TYPES,
+        batch_rows,
+    )
     return _with_warc_ts(raw)
 
 
@@ -1018,20 +1103,10 @@ def read_warc_revisits(
     freshness stats, digest-level dedup — without refetching anything.
     ``io``/error policy/lineage key as in ``read_warc``; same one-task-
     per-shard scale shape (revisit rows are tiny — headers only)."""
-    assert io in ("content", "stream"), io
-    files = spark.read.format("binaryFile").load(path)
-    if io == "stream":
-        raw = files.select("path").mapInArrow(
-            _stream_arrow_iterator(batch_rows, _iter_revisit_rows,
-                                   _REVISIT_TYPES),
-            REVISIT_SCHEMA,
-        )
-    else:
-        raw = files.select("path", "content").mapInArrow(
-            _records_arrow_iterator(batch_rows, _iter_revisit_rows,
-                                    _REVISIT_TYPES),
-            REVISIT_SCHEMA,
-        )
+    raw = scan_record_files(
+        spark, path, io, _iter_revisit_rows, REVISIT_SCHEMA, _REVISIT_TYPES,
+        batch_rows,
+    )
     ts = lambda c: F.coalesce(  # noqa: E731 — same patterns as _with_warc_ts
         F.try_to_timestamp(F.col(c), F.lit("yyyy-MM-dd'T'HH:mm:ssX")),
         F.try_to_timestamp(F.col(c), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSX")),
@@ -1075,22 +1150,9 @@ def _ranged_arrow_iterator(batch_rows: int):
     open across consecutive same-file rows (the caller repartitions and
     sorts by file so each task's rows for a file are contiguous).  The
     stream is decompressed in 1 MiB slices only until the member's gzip
-    eof — a record fetch never reads the rest of a 1 GiB shard.
+    eof — a record fetch never reads the rest of a 1 GiB shard.  Output
+    batches are cut by ``_batched_record_batches`` (rows and html bytes).
     """
-    import pyarrow as pa
-
-    out_t = {
-        "src_file": pa.string(),
-        "rec_offset": pa.int64(),
-        "url": pa.string(),
-        "warc_date": pa.string(),
-        "html": pa.binary(),
-        "error": pa.string(),
-        "charset": pa.string(),
-        "http_status": pa.int32(),
-        "redirect_to": pa.string(),
-        "truncated": pa.string(),
-    }
 
     def _member_at(f, offset: int) -> bytes:
         f.seek(offset)
@@ -1119,23 +1181,8 @@ def _ranged_arrow_iterator(batch_rows: int):
             buf += chunk
         return buf[:end]
 
-    def run(batches):
-        cols: dict = {k: [] for k in out_t}
+    def rows(batches):
         cur_path, cur_f = None, None
-
-        def emit(path, off, url, date, html, err, charset=None, status=None,
-                 redirect=None, truncated=None):
-            cols["src_file"].append(path)
-            cols["rec_offset"].append(off)
-            cols["url"].append(url)
-            cols["warc_date"].append(date)
-            cols["html"].append(html)
-            cols["error"].append(err)
-            cols["charset"].append(charset)
-            cols["http_status"].append(status)
-            cols["redirect_to"].append(redirect)
-            cols["truncated"].append(truncated)
-
         try:
             for rb in batches:
                 paths = rb.column(
@@ -1157,34 +1204,30 @@ def _ranged_arrow_iterator(batch_rows: int):
                     except (
                         OSError, zlib.error, ValueError, WarcStreamError
                     ) as e:
-                        emit(path, off, None, None, None, f"fetch: {e}")
+                        yield (path, off, None, None, None, f"fetch: {e}",
+                               None, None, None, None)
                         continue
                     wtype, url, date, block = _warc_tuple(hdr, block)
                     if wtype != "response":
-                        emit(path, off, None, None, None,
-                             f"fetch: not a response record ({wtype})")
+                        yield (path, off, None, None, None,
+                               f"fetch: not a response record ({wtype})",
+                               None, None, None, None)
                         continue
                     try:
                         status, body, ctype, loc = http_response(block)
                     except ValueError as e:
-                        emit(path, off, url, date, None, f"http: {e}")
+                        yield (path, off, url, date, None, f"http: {e}",
+                               None, None, None, None)
                         continue
                     body, charset = transcode_utf8(body, ctype)
-                    emit(path, off, url, date, body, None, charset, status,
-                         resolve_redirect(url, loc), _warc_truncated(hdr))
-                    if len(cols["src_file"]) >= batch_rows:
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array(cols[k], out_t[k]) for k in out_t],
-                            list(out_t),
-                        )
-                        cols = {k: [] for k in out_t}
+                    yield (path, off, url, date, body, None, charset, status,
+                           resolve_redirect(url, loc), _warc_truncated(hdr))
         finally:
             if cur_f is not None:
                 cur_f.close()
-        if cols["src_file"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[k], out_t[k]) for k in out_t], list(out_t)
-            )
+
+    def run(batches):
+        yield from _batched_record_batches([rows(batches)], batch_rows)
 
     return run
 
@@ -1402,6 +1445,8 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     def parse(batches):
         import pyarrow as pa
 
+        from dhtmlparser3_spark.functions.extract import arrow_column
+
         for rb in batches:
             out = {
                 "src_file": [], "rec_offset": [], "url": [],
@@ -1418,11 +1463,11 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
                 out["rec_length"].append(rec["length"])
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(out["src_file"], pa.string()),
-                    pa.array(out["rec_offset"], pa.int64()),
-                    pa.array(out["url"], pa.string()),
-                    pa.array(out["cdx_ts"], pa.string()),
-                    pa.array(out["rec_length"], pa.int64()),
+                    arrow_column(out["src_file"], pa.string()),
+                    arrow_column(out["rec_offset"], pa.int64()),
+                    arrow_column(out["url"], pa.string()),
+                    arrow_column(out["cdx_ts"], pa.string()),
+                    arrow_column(out["rec_length"], pa.int64()),
                 ],
                 ["src_file", "rec_offset", "url", "cdx_ts", "rec_length"],
             )
@@ -1480,18 +1525,15 @@ def index_warc(
     (filename, offset, length) triple CC's index publishes and ranged
     fetchers consume.  Map-only over shards (one task per file, bytes
     never shuffle); headers-only, so it is the cheap pass that makes a
-    crawl randomly addressable BEFORE anyone pays for parsing."""
-    import pyarrow as pa
-
-    from .wet import scan_record_files
-
+    crawl randomly addressable BEFORE anyone pays for parsing.  Batches
+    are cut as by every :func:`scan_record_files` reader."""
     out_t = {
-        "src_file": pa.string(),
-        "rec_offset": pa.int64(),
-        "rec_length": pa.int64(),
-        "url": pa.string(),
-        "warc_date": pa.string(),
-        "error": pa.string(),
+        "src_file": "string",
+        "rec_offset": "int64",
+        "rec_length": "int64",
+        "url": "string",
+        "warc_date": "string",
+        "error": "string",
     }
     return scan_record_files(
         spark, path, io, _iter_index_rows, INDEX_SCHEMA, out_t,
@@ -1510,8 +1552,6 @@ def cdx_lines(index: DataFrame, shards: int = 4) -> DataFrame:
     written bytes and ``parse_cdx_line`` stay one contract; the urlkey
     the JVM range-partitions on is the SAME Python-computed string, so
     sort key and line key cannot diverge."""
-    import pyarrow as pa
-
     ok = index.where(
         F.col("error").isNull()
         & F.col("url").isNotNull()
@@ -1539,6 +1579,10 @@ def cdx_lines(index: DataFrame, shards: int = 4) -> DataFrame:
     )
 
     def fmt(batches):
+        import pyarrow as pa
+
+        from dhtmlparser3_spark.functions.extract import arrow_column
+
         for rb in batches:
             cols = {
                 k: rb.column(rb.schema.get_field_index(k)).to_pylist()
@@ -1552,7 +1596,10 @@ def cdx_lines(index: DataFrame, shards: int = 4) -> DataFrame:
                 keys.append(surt_key(url))
                 lines.append(cdx_line(url, ts, fn, off, length))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(keys, pa.string()), pa.array(lines, pa.string())],
+                [
+                    arrow_column(keys, pa.string()),
+                    arrow_column(lines, pa.string()),
+                ],
                 ["urlkey", "line"],
             )
 
@@ -2049,6 +2096,7 @@ def write_warc(
         import pyarrow as pa
         from pyspark import TaskContext
 
+        from dhtmlparser3_spark.functions.extract import arrow_column
         from dhtmlparser3_spark.sources.wet import write_record_shard
 
         pid = TaskContext.get().partitionId()
@@ -2085,9 +2133,9 @@ def write_warc(
             return
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array([path], pa.string()),
-                pa.array([n], pa.int64()),
-                pa.array([size], pa.int64()),
+                arrow_column([path], pa.string()),
+                arrow_column([n], pa.int64()),
+                arrow_column([size], pa.int64()),
             ],
             ["path", "records", "bytes"],
         )

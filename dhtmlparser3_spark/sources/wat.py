@@ -44,8 +44,8 @@ from typing import Iterator, List, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .warc import WarcStreamError, parse_warc_record, _CRLF2
-from .wet import scan_record_files, write_record_shard
+from .warc import WarcStreamError, parse_warc_record, scan_record_files, _CRLF2
+from .wet import write_record_shard
 
 import zlib
 
@@ -92,48 +92,33 @@ def page_metadata(html: str) -> Tuple[Optional[str], List[Tuple[str, str]]]:
 
 def make_wat_iterator(max_slice_bytes: int | None = None):
     """Build the mapInArrow fn behind ``wat_metadata``: batches of
-    ``(url, warc_ts, html)`` → batches of ``META_SCHEMA``.  Exposed so
-    the byte-slice discipline is testable without Spark (the extract
-    tier's ``make_extract_arrow_iterator`` pattern)."""
+    ``(url, warc_ts, html)`` → batches of ``META_SCHEMA``.  It is the
+    parse family's batch loop (``functions.extract.make_parse_iterator``:
+    byte-bounded slices, so a batch of multi-MB pages never materializes
+    as Python strings at once; error rows for poison and unencodable
+    pages) with :func:`page_metadata` per document.  Exposed so the
+    byte-slice discipline is testable without Spark."""
     import pyarrow as pa
 
-    from dhtmlparser3_spark.functions.extract import arrow_slices, decode_html
+    from dhtmlparser3_spark.functions.extract import make_parse_iterator
 
     link_t = pa.list_(
         pa.struct([("url", pa.string()), ("text", pa.string())])
     )
 
-    def run(batches):
-        # the extract tier's giant-doc discipline: unbox only one
-        # byte-bounded run of documents at a time, so a batch of multi-MB
-        # pages never materializes as Python strings simultaneously
-        for rb in arrow_slices(batches, "html", max_slice_bytes):
-            htmls = rb.column("html").to_pylist()
-            titles, links_col, errs = [], [], []
-            for h in htmls:
-                try:
-                    title, links = page_metadata(decode_html(h))
-                    titles.append(title)
-                    links_col.append(
-                        [{"url": u, "text": t} for u, t in links]
-                    )
-                    errs.append(None)
-                except Exception as e:  # poison page → error row
-                    titles.append(None)
-                    links_col.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column("url"),
-                    rb.column("warc_ts"),
-                    pa.array(titles, pa.string()),
-                    pa.array(links_col, link_t),
-                    pa.array(errs, pa.string()),
-                ],
-                ["url", "warc_ts", "title", "links", "error"],
-            )
+    def one(html):
+        try:
+            title, links = page_metadata(html)
+        except Exception as e:  # noqa: BLE001 — poison page → error row
+            return None, None, f"{type(e).__name__}: {e}"
+        return title, [{"url": u, "text": t} for u, t in links], None
 
-    return run
+    return make_parse_iterator(
+        one,
+        [("title", pa.string()), ("links", link_t), ("error", pa.string())],
+        ("url", "warc_ts"),
+        max_slice_bytes,
+    )
 
 
 def wat_metadata(
@@ -232,6 +217,8 @@ def write_wat(df: DataFrame, dest_dir: str, prefix: str = "part") -> DataFrame:
         import pyarrow as pa
         from pyspark import TaskContext
 
+        from dhtmlparser3_spark.functions.extract import arrow_column
+
         pid = TaskContext.get().partitionId()
         path = os.path.join(dest_dir, f"{prefix}-{pid:05d}.warc.wat.gz")
 
@@ -262,9 +249,9 @@ def write_wat(df: DataFrame, dest_dir: str, prefix: str = "part") -> DataFrame:
             return
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array([path], pa.string()),
-                pa.array([n], pa.int64()),
-                pa.array([size], pa.int64()),
+                arrow_column([path], pa.string()),
+                arrow_column([n], pa.int64()),
+                arrow_column([size], pa.int64()),
             ],
             ["path", "records", "bytes"],
         )
@@ -333,7 +320,9 @@ def read_wat(
 ) -> DataFrame:
     """WAT file(s) → ``(src_file, rec_offset, url, wat_ts, title, links,
     error)`` — same reader contract as ``read_wet`` (both layouts,
-    globs, ``io="stream"``, replayable offsets, shared error policy)."""
+    globs, ``io="stream"``, replayable offsets, shared error policy).
+    Batches are cut at ``batch_rows`` rows or the worker slice of
+    top-level string bytes (url, title), whichever comes first."""
     import pyarrow as pa
 
     out_t = {

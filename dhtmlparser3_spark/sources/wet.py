@@ -59,23 +59,11 @@ from pyspark.sql import functions as F
 
 from .warc import (
     _CRLF2,
-    _GZ_MAGIC,
     WarcStreamError,
     parse_warc_record,
-    split_gzip_members,
-    split_warc_plain,
-    stream_gzip_extents,
-    stream_gzip_members,
-    stream_warc_plain,
-    _local_path,
+    scan_record_files,
 )
 
-
-def _plain_extents(members):
-    """(offset, raw) plain-record iterator → (offset, length, raw): an
-    uncompressed record's on-disk extent IS its byte length."""
-    for off, raw in members:
-        yield off, len(raw), raw
 
 # read_wet output: text is a STRING column (WET blocks are UTF-8 by
 # format contract — the converter already transcoded at ingest), offsets
@@ -85,6 +73,14 @@ WET_SCHEMA = (
     "src_file string, rec_offset bigint, url string, warc_date string, "
     "text string, error string"
 )
+_WET_TYPES = {
+    "src_file": "string",
+    "rec_offset": "int64",
+    "url": "string",
+    "warc_date": "string",
+    "text": "string",
+    "error": "string",
+}
 
 # write_wet manifest: the tiny per-shard commit record
 MANIFEST_SCHEMA = "path string, records bigint, bytes bigint"
@@ -190,6 +186,8 @@ def write_wet(
         import pyarrow as pa
         from pyspark import TaskContext
 
+        from dhtmlparser3_spark.functions.extract import arrow_column
+
         pid = TaskContext.get().partitionId()
         path = os.path.join(dest_dir, f"{prefix}-{pid:05d}.warc.wet.gz")
 
@@ -213,9 +211,9 @@ def write_wet(
             return
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array([path], pa.string()),
-                pa.array([n], pa.int64()),
-                pa.array([size], pa.int64()),
+                arrow_column([path], pa.string()),
+                arrow_column([n], pa.int64()),
+                arrow_column([size], pa.int64()),
             ],
             ["path", "records", "bytes"],
         )
@@ -289,126 +287,6 @@ def start_wet_sink(
     return writer.start()
 
 
-def scan_record_files(
-    spark: SparkSession,
-    path: str,
-    io: str,
-    make_rows,
-    schema: str,
-    arrow_types,
-    batch_rows: int = 2048,
-    extents: bool = False,
-) -> DataFrame:
-    """Generic WARC-layout record scan shared by the WET and WAT readers
-    (and the CDX indexer): binaryFile over ``path`` (both on-disk layouts
-    auto-detected per file), ``make_rows(path, member_iter)`` turning
-    members into row tuples matching ``schema``/``arrow_types``, ``io``
-    as in ``read_warc`` (``"stream"`` = path-only scan + incremental
-    decompress, O(batch) worker memory).  An unopenable file in stream
-    mode yields the row ``make_rows`` produces for an immediately-failing
-    member iterator (the shared end-this-file policy).
-
-    With ``extents=True`` the member iterator yields ``(offset, length,
-    raw)`` instead of ``(offset, raw)`` — ``length`` is the record's
-    on-disk byte extent (compressed gzip member / plain record bytes),
-    the quantity a CDX index publishes for ranged fetches."""
-    assert io in ("content", "stream"), io
-    import pyarrow as pa
-
-    fields = list(arrow_types)
-
-    def _batched(row_iters):
-        rows: list = []
-
-        def _flush():
-            rb = pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r[i] for r in rows], arrow_types[k])
-                    for i, k in enumerate(fields)
-                ],
-                fields,
-            )
-            rows.clear()
-            return rb
-
-        for it in row_iters:
-            for row in it:
-                rows.append(row)
-                if len(rows) >= batch_rows:
-                    yield _flush()
-        if rows:
-            yield _flush()
-
-    def _failing(e):
-        def gen():
-            raise OSError(e)
-            yield  # pragma: no cover
-
-        return gen()
-
-    def run_content(batches):
-        def row_iters():
-            for rb in batches:
-                paths = rb.column(rb.schema.get_field_index("path")).to_pylist()
-                contents = rb.column(
-                    rb.schema.get_field_index("content")
-                ).to_pylist()
-                for p, data in zip(paths, contents):
-                    data = bytes(data)
-                    if extents:
-                        import io as _io
-
-                        members = (
-                            stream_gzip_extents(_io.BytesIO(data))
-                            if data[:2] == _GZ_MAGIC
-                            else _plain_extents(split_warc_plain(data))
-                        )
-                    else:
-                        members = (
-                            split_gzip_members(data)
-                            if data[:2] == _GZ_MAGIC
-                            else split_warc_plain(data)
-                        )
-                    yield make_rows(p, members)
-
-        yield from _batched(row_iters())
-
-    def run_stream(batches):
-        def row_iters():
-            for rb in batches:
-                for p in rb.column(
-                    rb.schema.get_field_index("path")
-                ).to_pylist():
-                    try:
-                        f = open(_local_path(p), "rb")
-                    except OSError as e:
-                        yield make_rows(p, _failing(str(e)))
-                        continue
-                    with f:
-                        magic = f.read(2)
-                        f.seek(0)
-                        if extents:
-                            members = (
-                                stream_gzip_extents(f)
-                                if magic == _GZ_MAGIC
-                                else _plain_extents(stream_warc_plain(f))
-                            )
-                        else:
-                            members = (
-                                stream_gzip_members(f)
-                                if magic == _GZ_MAGIC
-                                else stream_warc_plain(f)
-                            )
-                        yield make_rows(p, members)
-
-        yield from _batched(row_iters())
-
-    files = spark.read.format("binaryFile").load(path)
-    if io == "stream":
-        return files.select("path").mapInArrow(run_stream, schema)
-    return files.select("path", "content").mapInArrow(run_content, schema)
-
-
 def read_wet(
     spark: SparkSession,
     path: str,
@@ -420,19 +298,11 @@ def read_wet(
     Mirrors ``read_warc``: both on-disk layouts auto-detected per file
     (per-record gzip members / uncompressed), Hadoop globs accepted,
     ``io="stream"`` for O(batch) worker memory, ``(src_file, rec_offset)``
-    the replayable lineage key, error rows per the shared policy."""
-    import pyarrow as pa
-
-    out_t = {
-        "src_file": pa.string(),
-        "rec_offset": pa.int64(),
-        "url": pa.string(),
-        "warc_date": pa.string(),
-        "text": pa.string(),
-        "error": pa.string(),
-    }
+    the replayable lineage key, error rows per the shared policy.
+    Batches are cut at ``batch_rows`` rows or the worker slice of
+    record bytes, whichever comes first."""
     raw = scan_record_files(
-        spark, path, io, _iter_wet_rows, WET_SCHEMA, out_t, batch_rows
+        spark, path, io, _iter_wet_rows, WET_SCHEMA, _WET_TYPES, batch_rows
     )
     return raw.select(
         "src_file",

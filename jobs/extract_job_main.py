@@ -22,6 +22,8 @@ import argparse
 import json
 import sys
 
+_ARROW_MAX_BYTES = "spark.sql.execution.arrow.maxBytesPerBatch"
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -78,6 +80,15 @@ def main() -> int:
 
     spark = SparkSession.builder.appName("dhtmlparser3-extract").getOrCreate()
 
+    from dhtmlparser3_spark.functions.extract import _WORKER_BATCH_BYTES
+
+    # bound every Arrow batch a Python worker receives by the same bytes as
+    # the worker's parse slice; with the key unset, Spark 4.1's SQLConf
+    # reads 64 MiB, so a whole ~20 MiB parquet split of ~19 KB pages
+    # arrives as one batch.  A --conf on spark-submit still wins.
+    if not spark.sparkContext.getConf().contains(_ARROW_MAX_BYTES):
+        spark.conf.set(_ARROW_MAX_BYTES, str(_WORKER_BATCH_BYTES))
+
     from dhtmlparser3_spark.pipeline.lineage import run_extract_job, verify_run
     from dhtmlparser3_spark.sources.pages import build_pages
     from dhtmlparser3_spark.sources.tables import read_pages
@@ -103,6 +114,10 @@ def main() -> int:
     )
     bad = verify_run(spark, args.output, args.lineage).count()
     result["digest_mismatches"] = bad
+    # the effective input-batch bounds, as the session's SQLConf parses them
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    result["arrow_max_bytes_per_batch"] = sql_conf.arrowMaxBytesPerBatch()
+    result["arrow_max_records_per_batch"] = sql_conf.arrowMaxRecordsPerBatch()
     if args.wet_output:
         from pyspark.sql import functions as F
 

@@ -1,0 +1,226 @@
+"""The worker-side Arrow builder and the pandas-free job workers.  No Spark.
+
+``functions.extract.arrow_column`` builds every typed column a job worker
+emits from buffers, because ``pa.array`` imports pandas (~35 MB RSS per
+Python worker).  Pinned here:
+
+* parity: ``arrow_column(v, t)`` equals ``pa.array(v, t)`` and validates,
+  for every field type the workers emit;
+* a fresh interpreter runs the job's worker functions (extract, stats,
+  serialize, nodes, WAT, the WARC decode) and never loads pandas;
+* a document whose output is not encodable as UTF-8 (a lone surrogate from
+  a numeric entity) becomes an error row, not a failed slice.
+"""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pyarrow as pa
+import pytest
+
+from dhtmlparser3_spark.functions.extract import (
+    _ARROW_NODE_FIELD_TYPES,
+    EXTRACT_FIELDS,
+    STATS_FIELDS,
+    arrow_column,
+    extract_one,
+    make_extract_arrow_iterator,
+    make_nodes_arrow_iterator,
+    make_serialize_iterator,
+)
+from dhtmlparser3_spark.sources.warc import _OUT_TYPES
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_SCALARS = {
+    pa.string(): ["", "plain", "café 数据 😀", "a&b <x>"],
+    pa.binary(): [b"", b"\x00\xff\xfe", "é".encode(), b"<p>x</p>"],
+    pa.int8(): [0, -128, 127, 5],
+    pa.int32(): [0, -(2**31), 2**31 - 1, 7],
+    pa.int64(): [0, -(2**63), 2**63 - 1, 11],
+    pa.bool_(): [True, False, False, True],
+}
+
+
+def _samples(t: pa.DataType) -> list:
+    """Four non-null values of ``t`` (lists and structs built from their
+    children's samples, nested spans included), plus nulls."""
+    if pa.types.is_list(t):
+        child = _samples(t.value_type)
+        vals = [[], child[:1], child, child[::-1]]
+    elif pa.types.is_struct(t):
+        kids = {f.name: _samples(f.type) for f in t}
+        vals = [{k: v[i] for k, v in kids.items()} for i in range(4)]
+    else:
+        vals = list(_SCALARS[t])
+    return vals + [None] + vals[:2]
+
+
+def _field_types():
+    types = [t for _, t in EXTRACT_FIELDS]
+    types += [t for _, t in STATS_FIELDS]
+    types += list(_ARROW_NODE_FIELD_TYPES.values())
+    types.append(
+        pa.list_(pa.struct(list(_ARROW_NODE_FIELD_TYPES.items())))
+    )
+    types += [pa.type_for_alias(a) for a in _OUT_TYPES.values()]
+    return list(dict.fromkeys(types))
+
+
+@pytest.mark.parametrize("t", _field_types(), ids=str)
+def test_arrow_column_matches_pa_array(t):
+    for values in (_samples(t), [], [None] * 3, _samples(t)[:4]):
+        got = arrow_column(values, t)
+        got.validate(full=True)
+        want = pa.array(values, t)
+        assert got.type == t
+        assert got.equals(want), (t, got, want)
+        assert got.null_count == want.null_count
+        assert got.to_pylist() == want.to_pylist()
+
+
+def test_arrow_column_matches_extract_output():
+    """The extraction kernel's own rows: nested spans, counts, NULLs of
+    the error rows, non-ASCII text."""
+    docs = [
+        "<div>café <b>数据</b> &amp; more<p>x</p></div>",
+        "",
+        "<p>pre &#1114112; post</p>",
+        "<script>s</script><p>a</p><!-- c -->tail",
+    ]
+    rows = [extract_one(d) for d in docs]
+    for (name, t), col in zip(EXTRACT_FIELDS, zip(*rows)):
+        got = arrow_column(col, t)
+        got.validate(full=True)
+        assert got.equals(pa.array(col, t)), name
+
+
+def test_arrow_column_rejects_lone_surrogate_and_unknown_types():
+    with pytest.raises(UnicodeEncodeError):
+        arrow_column(["a\ud800b"], pa.string())
+    with pytest.raises(TypeError):
+        arrow_column([1.5], pa.float64())
+
+
+# --- lone surrogates become error rows --------------------------------------
+
+_SURROGATE_DOCS = ("<p>a&#55296;b</p>", "<p>&#xD800;</p>", "x&#57343;y")
+_CLEAN = "<div>clean <b>café</b> &amp; text</div>"
+
+
+def _pages(htmls):
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"u{i}" for i in range(len(htmls))], pa.string()),
+            pa.array([h.encode() for h in htmls], pa.binary()),
+        ],
+        ["url", "html"],
+    )
+
+
+def _run(iterator, htmls):
+    return pa.Table.from_batches(list(iterator(iter([_pages(htmls)])))).to_pylist()
+
+
+@pytest.mark.parametrize("doc", _SURROGATE_DOCS)
+def test_unencodable_document_becomes_error_row(doc):
+    assert any(0xD800 <= ord(c) <= 0xDFFF for c in extract_one(doc)[0])
+    clean_alone = _run(make_extract_arrow_iterator(("url",)), [_CLEAN])[0]
+    rows = _run(make_extract_arrow_iterator(("url",)), [_CLEAN, doc])
+    assert rows[0] == clean_alone
+    bad = rows[1]
+    assert bad["error"].startswith("UnicodeEncodeError: ")
+    assert bad["url"] == "u1"
+    assert all(v is None for k, v in bad.items() if k not in ("url", "error"))
+
+
+@pytest.mark.parametrize("doc", _SURROGATE_DOCS)
+def test_unencodable_document_other_parse_outputs(doc):
+    """The node table gives a NULL ``nodes`` row; the serializers put the
+    error in every ``*_error`` slot.  The clean row is unchanged."""
+    nodes = _run(make_nodes_arrow_iterator(), [_CLEAN, doc, _CLEAN])
+    assert nodes[1]["nodes"] is None
+    assert nodes[0]["nodes"] == nodes[2]["nodes"] and nodes[0]["nodes"]
+    ser = _run(
+        make_serialize_iterator(["content_str", "to_string"]), [doc, _CLEAN]
+    )
+    assert ser[0]["content_str_value"] is None
+    assert ser[0]["content_str_error"].startswith("UnicodeEncodeError: ")
+    assert ser[0]["to_string_error"] == ser[0]["content_str_error"]
+    assert ser[1]["content_str_error"] is None
+    assert ser[1]["content_str_value"] == extract_one(_CLEAN)[0]
+
+
+# --- the job's workers never load pandas ------------------------------------
+
+_PANDAS_FREE = r'''
+import array, gzip, sys
+import pyarrow as pa
+
+from dhtmlparser3_spark.functions.extract import (
+    STATS_FIELDS, arrow_column, make_extract_arrow_iterator,
+    make_nodes_arrow_iterator, make_parse_iterator, make_serialize_iterator,
+    stats_one,
+)
+from dhtmlparser3_spark.sources.pages import TEMPLATES, compile_py
+from dhtmlparser3_spark.sources.warc import (
+    _records_arrow_iterator, build_warc_record,
+)
+from dhtmlparser3_spark.sources.wat import make_wat_iterator
+
+htmls = [compile_py(TEMPLATES[i % 5], i, "text café " * 40).encode()
+         for i in range(40)]
+htmls[7] = b"<p>pre &#1114112; post</p>"
+n = len(htmls)
+pages = pa.RecordBatch.from_arrays(
+    [
+        arrow_column([f"https://p.example/{i}" for i in range(n)], pa.string()),
+        pa.Array.from_buffers(
+            pa.timestamp("us", tz="UTC"), n,
+            [None, pa.py_buffer(array.array("q", range(n)))],
+        ),
+        arrow_column(["en"] * n, pa.string()),
+        arrow_column(htmls, pa.binary()),
+    ],
+    ["url", "warc_ts", "lang", "html"],
+)
+outs = [
+    make_extract_arrow_iterator(),
+    make_parse_iterator(stats_one, STATS_FIELDS),
+    make_serialize_iterator(["content_str", "main_text"], ("url",)),
+    make_nodes_arrow_iterator(),
+    make_wat_iterator(),
+]
+for run in outs:
+    got = sum(b.num_rows for b in run(iter([pages])))
+    assert got == n, got
+
+warc = b"".join(
+    gzip.compress(build_warc_record(f"http://h{i}.example/", "2024-01-01T00:00:00Z",
+                                    h), mtime=0)
+    for i, h in enumerate(htmls)
+)
+files = pa.RecordBatch.from_arrays(
+    [arrow_column(["mem.warc.gz"], pa.string()), arrow_column([warc], pa.binary())],
+    ["path", "content"],
+)
+rows = sum(b.num_rows for b in _records_arrow_iterator(2048)(iter([files])))
+assert rows == n, rows
+print("pandas" in sys.modules)
+'''
+
+
+def test_job_workers_never_import_pandas():
+    """A fresh interpreter runs the job path's worker functions — the
+    parse family over a pages batch and the WARC decode over an in-memory
+    ``.warc.gz`` — and pandas is never imported."""
+    env = dict(os.environ, PYTHONPATH=REPO)
+    p = subprocess.run(
+        [sys.executable, "-c", _PANDAS_FREE],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-4000:]
+    assert p.stdout.strip() == "False", p.stdout

@@ -66,23 +66,33 @@ def test_spark_submit_pyfiles_resumable(tmp_path):
         "--buckets", "8",
     ]
 
-    def run():
+    def run(*confs):
         p = subprocess.run(
-            cmd, cwd=str(tmp_path), env=env,
+            cmd[:1] + list(confs) + cmd[1:], cwd=str(tmp_path), env=env,
             capture_output=True, text=True, timeout=600,
         )
         assert p.returncode == 0, p.stderr[-4000:]
         line = [l for l in p.stdout.splitlines() if l.startswith("{")][-1]
         return json.loads(line)
 
+    from dhtmlparser3_spark.functions.extract import _WORKER_BATCH_BYTES
+
     first = run()
     assert first["processed"] == 8 and first["skipped"] == 0
     assert first["digest_mismatches"] == 0
+    # the job bounds its Python workers' input batches by the worker slice
+    assert first["arrow_max_bytes_per_batch"] == _WORKER_BATCH_BYTES
+    assert first["arrow_max_records_per_batch"] == 10_000
 
-    # resume: everything committed, nothing to redo
-    second = run()
+    # resume: everything committed, nothing to redo; a submitter's own
+    # byte bound wins over the job's
+    other = 3 * _WORKER_BATCH_BYTES
+    second = run(
+        "--conf", f"spark.sql.execution.arrow.maxBytesPerBatch={other}"
+    )
     assert second["processed"] == 0 and second["skipped"] == 8
     assert second["digest_mismatches"] == 0
+    assert second["arrow_max_bytes_per_batch"] == other
 
 
 def test_spark_submit_warc_input(tmp_path):

@@ -361,6 +361,46 @@ def test_record_batches_byte_bounded(tmp_path, monkeypatch):
     assert [r["html"] for r in rows] == [h for _, _, h in docs]
 
 
+def test_ranged_record_batches_byte_bounded(tmp_path, monkeypatch):
+    """The ranged reader (``read_warc_at``) cuts its Arrow batches by html
+    bytes as well as rows: ~300 KB bodies fetched by offset come out in
+    >=2 batches, each within the worker slice or a single row, whose rows
+    equal a run with the byte bound lifted.  No Spark."""
+    import pyarrow as pa
+
+    from dhtmlparser3_spark.functions import extract as fx
+    from dhtmlparser3_spark.sources.warc import _ranged_arrow_iterator
+
+    unit = b"<p>big &amp; body</p>"
+    docs = [
+        (f"http://big.example/{i}", "2024-01-01T00:00:00Z",
+         b"<html>" + unit * (300_000 // len(unit)) + b"</html>")
+        for i in range(8)
+    ]
+    path = str(tmp_path / "big.warc.gz")
+    offsets = write_warc_gz(docs, path)
+    rb = pa.RecordBatch.from_pydict(
+        {"src_file": [path] * len(offsets), "rec_offset": offsets}
+    )
+
+    def run():
+        return list(_ranged_arrow_iterator(2048)(iter([rb])))
+
+    bounded = run()
+    monkeypatch.setattr(fx, "_WORKER_BATCH_BYTES", 1 << 40)
+    whole = run()
+    assert len(whole) == 1
+    assert len(bounded) >= 2, f"expected >=2 byte-bounded batches, got {len(bounded)}"
+    for b in bounded:
+        html_bytes = sum(len(h) for h in b.column("html").to_pylist())
+        assert b.num_rows == 1 or html_bytes <= 1 << 20, html_bytes
+    rows = pa.Table.from_batches(bounded).to_pylist()
+    assert rows == pa.Table.from_batches(whole).to_pylist()
+    assert [(r["url"], r["html"], r["error"]) for r in rows] == [
+        (u, h, None) for u, _, h in docs
+    ]
+
+
 def test_synthesize_warc_corpus_matches_build_pages(spark, tmp_path):
     """The WARC rendering of the pages corpus carries byte-identical html
     per url to the Spark-codegen build_pages construction, through all

@@ -250,3 +250,32 @@ def test_wat_giant_docs_byte_bounded_slicing():
         assert title == want_title == f"giant {i}"
         assert [(l["url"], l["text"]) for l in links] == want_links
         assert len(links) == reps
+
+
+def test_wat_unencodable_page_becomes_error_row():
+    """A page whose title or anchor text holds a lone surrogate (numeric
+    entity ``&#55296;``) yields an error row; its neighbours are kept."""
+    import pyarrow as pa
+
+    from dhtmlparser3_spark.sources.wat import make_wat_iterator
+
+    htmls = [
+        "<title>ok</title><a href=/a>a</a>",
+        "<title>t&#55296;</title>",
+        "<a href=/b>x&#xDFFF;</a>",
+    ]
+    rb = pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"u{i}" for i in range(3)], pa.string()),
+            pa.array([None] * 3, pa.timestamp("us")),
+            pa.array([h.encode() for h in htmls], pa.binary()),
+        ],
+        ["url", "warc_ts", "html"],
+    )
+    rows = pa.Table.from_batches(list(make_wat_iterator()(iter([rb])))).to_pylist()
+    assert [r["url"] for r in rows] == ["u0", "u1", "u2"]
+    assert rows[0]["title"] == "ok" and rows[0]["error"] is None
+    assert rows[0]["links"] == [{"url": "/a", "text": "a"}]
+    for r in rows[1:]:
+        assert r["error"].startswith("UnicodeEncodeError: ")
+        assert r["title"] is None and r["links"] is None

@@ -266,3 +266,55 @@ def test_streaming_warc_to_wet_exactly_once(spark, tmp_path):
         row = next(r for r in rows if r.url == url)
         assert row.text == ref.parse(html.decode()).content_str()
         assert row.error is None
+
+
+@pytest.mark.parametrize("io", ["content", "stream"])
+def test_wet_record_batches_byte_bounded(tmp_path, monkeypatch, io):
+    """``read_wet``'s scan cuts its Arrow batches by ``text`` bytes as well
+    as rows: ten ~1.2 MB WET records (far fewer than ``batch_rows``) come
+    out in >=2 batches, each within the worker slice or a single row,
+    whose rows equal a run with the byte bound lifted.  No Spark."""
+    import pyarrow as pa
+
+    from dhtmlparser3_spark.functions import extract as fx
+    from dhtmlparser3_spark.sources.warc import (
+        _records_arrow_iterator,
+        _stream_arrow_iterator,
+    )
+    from dhtmlparser3_spark.sources.wet import (
+        _WET_TYPES,
+        _iter_wet_rows,
+        _write_shard,
+    )
+
+    docs = [
+        (f"http://big.example/{i}", "2024-01-01T00:00:00Z",
+         f"line {i} café 数据\n" * 60_000)
+        for i in range(10)
+    ]
+    path = str(tmp_path / "big.warc.wet.gz")
+    _write_shard(path, iter(docs))
+    if io == "stream":
+        make = _stream_arrow_iterator
+        rb = pa.RecordBatch.from_pydict({"path": [path]})
+    else:
+        make = _records_arrow_iterator
+        rb = pa.RecordBatch.from_pydict(
+            {"path": [path], "content": [open(path, "rb").read()]}
+        )
+
+    def run():
+        it = make(2048, _iter_wet_rows, _WET_TYPES)
+        return list(it(iter([rb])))
+
+    bounded = run()
+    monkeypatch.setattr(fx, "_WORKER_BATCH_BYTES", 1 << 40)
+    whole = run()
+    assert len(whole) == 1
+    assert len(bounded) >= 2, f"expected >=2 byte-bounded batches, got {len(bounded)}"
+    for b in bounded:
+        text_bytes = sum(len(t.encode()) for t in b.column("text").to_pylist())
+        assert b.num_rows == 1 or text_bytes <= 1 << 20, text_bytes
+    rows = pa.Table.from_batches(bounded).to_pylist()
+    assert rows == pa.Table.from_batches(whole).to_pylist()
+    assert [(r["url"], r["text"]) for r in rows] == [(u, t) for u, _, t in docs]
