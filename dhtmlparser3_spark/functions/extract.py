@@ -362,9 +362,9 @@ def extract_series(html: pd.Series) -> pd.DataFrame:
 # worker's peak.  The same constant bounds the input batch: the
 # spark-submit job (jobs/extract_job_main.py) sets
 # spark.sql.execution.arrow.maxBytesPerBatch to it unless the submitter's
-# conf names that key, and the WARC record batcher
-# (sources/warc._batched_record_batches) cuts its batches at it.
-# plans/session.get_spark keeps its own, larger input bound.  1 MiB keeps
+# conf names that key, plans/session.get_spark sets it for every session
+# it builds, and the WARC record batcher
+# (sources/warc._batched_record_batches) cuts its batches at it.  1 MiB keeps
 # the peak near the html bytes (measured: ~190 → ~20 MiB of growth over one
 # 20 MiB batch of ~19 KB pages, tests/test_worker_slice.py) at no
 # measurable per-doc cost.  Slices are planned from the html byte lengths;

@@ -30,6 +30,8 @@ from typing import List, Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dhtmlparser3_spark.functions.extract import decode_html
+
 SITEMAP_SCHEMA = (
     "src_url string, kind string, ord int, loc string, lastmod string, "
     "changefreq string, priority string, error string"
@@ -69,64 +71,66 @@ def sitemap_entries_py(
     return out
 
 
+def _error_row(url: str, msg: str) -> tuple:
+    return (url, None, None, None, None, None, None, msg)
+
+
+def _doc_rows(url: str, body) -> list:
+    """One capture's ``SITEMAP_SCHEMA`` rows: its entries, or one error
+    row when the body does not decode or parse."""
+    try:
+        entries = sitemap_entries_py(decode_html(body))
+    except Exception as e:  # poison body → error row
+        return [_error_row(url, f"{type(e).__name__}: {e}")]
+    counts = {"url": 0, "sitemap": 0}
+    rows = []
+    for kind, loc, lm, cf, pr in entries:
+        rows.append((url, kind, counts[kind], loc, lm, cf, pr, None))
+        counts[kind] += 1
+    return rows
+
+
 def make_sitemap_iterator(max_slice_bytes: int | None = None):
     """Build the mapInArrow fn behind ``sitemap_entries``: batches of
     ``(url, body)`` → batches of ``SITEMAP_SCHEMA`` (exposed for
-    no-Spark slice testing, the WAT tier's pattern)."""
+    no-Spark slice testing, the WAT tier's pattern).  A capture whose
+    entries cannot be encoded as UTF-8 (a lone surrogate from
+    ``&#55296;``) becomes one ``UnicodeEncodeError`` error row, as in
+    ``functions.extract.make_parse_iterator``; its neighbours' rows are
+    unchanged."""
     import pyarrow as pa
 
-    from dhtmlparser3_spark.functions.extract import (
-        arrow_column,
-        arrow_slices,
-        decode_html,
-    )
+    from dhtmlparser3_spark.functions.extract import arrow_column, arrow_slices
+
+    fields = [f.split() for f in SITEMAP_SCHEMA.split(", ")]
+    names = [n for n, _ in fields]
+    types = [pa.int32() if t == "int" else pa.string() for _, t in fields]
+
+    def build(docs):
+        rows = [r for d in docs for r in d]
+        cols = list(zip(*rows)) if rows else [()] * len(types)
+        return [arrow_column(c, t) for c, t in zip(cols, types)]
+
+    def encodable(rows):
+        try:
+            build([rows])
+            return rows
+        except UnicodeEncodeError as e:
+            return [_error_row(rows[0][0], f"UnicodeEncodeError: {e}")]
 
     def run(batches):
         for rb in arrow_slices(batches, "body", max_slice_bytes):
-            urls = rb.column("url").to_pylist()
-            bodies = rb.column("body").to_pylist()
-            cols = {
-                k: []
-                for k in (
-                    "src_url", "kind", "ord", "loc",
-                    "lastmod", "changefreq", "priority", "error",
+            docs = [
+                _doc_rows(u, b)
+                for u, b in zip(
+                    rb.column("url").to_pylist(), rb.column("body").to_pylist()
                 )
-            }
-
-            def emit(u, kind, ordn, loc, lm, cf, pr, err):
-                cols["src_url"].append(u)
-                cols["kind"].append(kind)
-                cols["ord"].append(ordn)
-                cols["loc"].append(loc)
-                cols["lastmod"].append(lm)
-                cols["changefreq"].append(cf)
-                cols["priority"].append(pr)
-                cols["error"].append(err)
-
-            for u, b in zip(urls, bodies):
-                try:
-                    entries = sitemap_entries_py(decode_html(b))
-                except Exception as e:  # poison body → error row
-                    emit(u, None, None, None, None, None, None,
-                         f"{type(e).__name__}: {e}")
-                    continue
-                counts = {"url": 0, "sitemap": 0}
-                for kind, loc, lm, cf, pr in entries:
-                    emit(u, kind, counts[kind], loc, lm, cf, pr, None)
-                    counts[kind] += 1
-            yield pa.RecordBatch.from_arrays(
-                [
-                    arrow_column(cols["src_url"], pa.string()),
-                    arrow_column(cols["kind"], pa.string()),
-                    arrow_column(cols["ord"], pa.int32()),
-                    arrow_column(cols["loc"], pa.string()),
-                    arrow_column(cols["lastmod"], pa.string()),
-                    arrow_column(cols["changefreq"], pa.string()),
-                    arrow_column(cols["priority"], pa.string()),
-                    arrow_column(cols["error"], pa.string()),
-                ],
-                list(cols),
-            )
+            ]
+            try:
+                out = build(docs)
+            except UnicodeEncodeError:
+                out = build([encodable(d) for d in docs])
+            yield pa.RecordBatch.from_arrays(out, names)
 
     return run
 

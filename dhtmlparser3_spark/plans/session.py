@@ -37,23 +37,23 @@ def get_spark(
     app_name: str = "dhtmlparser3-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 8192,
-    arrow_batch_bytes: int = 64 << 20,
-    extra_conf: dict | None = None,
 ) -> SparkSession:
-    """``arrow_batch_rows`` and ``arrow_batch_bytes`` DOUBLE-bound every
-    JVM→Python Arrow batch: whichever limit is hit first cuts the batch.
-    The byte bound is the one that matters on web corpora — single
-    Common-Crawl pages reach tens of MB, and 8192 such rows would be a
-    multi-GB batch in one Python worker (SURVEY §4.2: size batches so one
-    batch of html fits worker memory).  Spark cuts AFTER crossing the
-    bound, so a batch can overshoot by at most one row — the irreducible
-    unit; the worker-side slicer in functions/extract.py bounds output
-    accumulation the same way."""
+    """Every JVM→Python Arrow batch is DOUBLE-bounded: 8192 records or
+    ``functions.extract._WORKER_BATCH_BYTES`` (1 MiB), whichever is hit
+    first.  The byte bound is the one that matters on web corpora —
+    single Common-Crawl pages reach tens of MB, and 8192 such rows would
+    be a multi-GB batch in one Python worker (SURVEY §4.2: size batches so
+    one batch of html fits worker memory).  It is the same constant that
+    bounds the worker's slices and the spark-submit job's input batches,
+    so one module owns it.  Spark cuts AFTER crossing the bound, so a
+    batch can overshoot by at most one row — the irreducible unit."""
+    from dhtmlparser3_spark.functions.extract import _WORKER_BATCH_BYTES
+
     # make the package importable in the PYTHON WORKERS regardless of the
     # caller's cwd: local-mode workers inherit PYTHONPATH from the driver
-    # env, not the driver's sys.path, so a driver launched from another
-    # directory (python /root/repo/bench.py from /tmp) would fail UDF
+    # env, not the driver's sys.path, so a driver started outside the
+    # checkout (``python3 <checkout>/__spark_entry__.py`` or any script
+    # importing the package from elsewhere) would fail UDF
     # deserialization with ModuleNotFoundError.  On a real cluster this is
     # spark-submit --py-files' job (jobs/extract_job_main.py docstring);
     # guarded so a zip-packaged install is untouched.
@@ -74,7 +74,7 @@ def get_spark(
         # sets this to 2-3x total executor cores.
         shuffle_partitions = max(2 * cpus, 8)
 
-    b = (
+    return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -83,15 +83,14 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows)
-        )
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch", str(arrow_batch_bytes)
+            "spark.sql.execution.arrow.maxBytesPerBatch", str(_WORKER_BATCH_BYTES)
         )
         # feed buffer between the JVM writer thread and the python worker:
-        # one Arrow batch of html is ~3MB, the 64KB default forces dozens of
-        # blocking roundtrips per batch (measured ~6-15% of UDF-stage wall)
+        # one Arrow batch of html is up to ~1 MiB, the 64KB default forces
+        # a dozen blocking roundtrips per batch (measured ~6-15% of
+        # UDF-stage wall when batches were ~3 MB)
         .config("spark.sql.execution.pandas.udf.buffer.size", "4194304")
         # html docs are big strings; keep scan partitions modest so the
         # python workers get balanced slices
@@ -107,7 +106,5 @@ def get_spark(
         .config("spark.local.dir", _default_local_dir())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    return b.getOrCreate()

@@ -187,3 +187,36 @@ def test_sitemap_giant_body_byte_bounded_slicing():
     assert len(out) >= 3
     total = sum(b.num_rows for b in out)
     assert total == sum(len(sitemap_entries_py(b.decode())) for b in bodies)
+
+
+def test_sitemap_unencodable_capture_becomes_error_row():
+    """A capture whose <loc> holds a lone surrogate (``&#55296;``, kept
+    for parity with the reference's ``chr()``) gives one
+    ``UnicodeEncodeError`` error row keyed by its url, not a failed task;
+    the rows of the captures around it are unchanged."""
+    import pyarrow as pa
+
+    from dhtmlparser3_spark.functions.sitemap import make_sitemap_iterator
+
+    def run(captures):
+        rb = pa.RecordBatch.from_arrays(
+            [
+                pa.array([u for u, _ in captures], pa.string()),
+                pa.array([b.encode() for _, b in captures], pa.binary()),
+            ],
+            ["url", "body"],
+        )
+        return [
+            r for b in make_sitemap_iterator()(iter([rb])) for r in b.to_pylist()
+        ]
+
+    bad = ("http://x.example/bad.xml", "<urlset><url><loc>a&#55296;</loc></url></urlset>")
+    clean = [("http://a.example/s.xml", URLSET), ("http://h.example/i.xml", INDEX)]
+    want = run(clean)
+    got = run([clean[0], bad, clean[1]])
+    err = [r for r in got if r["src_url"] == bad[0]]
+    assert len(err) == 1
+    assert err[0]["error"].startswith("UnicodeEncodeError: ")
+    assert all(err[0][k] is None for k in err[0] if k not in ("src_url", "error"))
+    assert [r for r in got if r["src_url"] != bad[0]] == want
+    assert len(want) == 5 and all(r["error"] is None for r in want)
