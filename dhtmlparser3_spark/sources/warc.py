@@ -17,16 +17,16 @@ Scale shape (100 TB = one Common Crawl monthly snapshot, ~72k files of
   stream decodes sequentially anyway (per-record members make records
   independently decodable, but FINDING member boundaries still means
   scanning the stream — random access needs the CDX index, below).
-* The file's bytes are decoded and parsed inside ONE mapInArrow stage;
-  raw html never shuffles (the repo-wide rule — layout.py docstring), and
+* The records are decoded and parsed inside ONE mapInArrow stage; raw
+  html never shuffles (the repo-wide rule — layout.py docstring), and
   chaining ``extract_pages`` keeps parse+extract in the same stage.
-* Memory: ``binaryFile`` materializes each file's content as one row
-  (~1 GiB per CC shard) and ``maxPartitionBytes`` does NOT split it; the
-  iterator below decompresses and yields records in Arrow batches cut at
-  ``batch_rows`` rows or at the worker slice of html bytes (1 MiB,
+* Memory: the ``binaryFile`` scan is pruned to the file LISTING — shard
+  bytes never cross the JVM.  Each worker opens its shard (``open()``:
+  local or mounted paths; ``_local_path`` is the object-store seam) and
+  decompresses it incrementally, yielding records in Arrow batches cut at
+  ``batch_rows`` rows or at the worker slice of str/bytes values (1 MiB,
   ``functions.extract._WORKER_BATCH_BYTES``), whichever comes first, so
-  only the current batch of record bodies is held alongside the
-  (unavoidable) compressed buffer.  ``io="stream"`` drops that buffer too.
+  worker memory is bounded by the batch, not by the shard (~1 GiB).
 * Record-level random access — resuming mid-file, or fetching single
   documents — comes from Common Crawl's CDX index, which carries
   ``(filename, offset, length)`` per record precisely because each record
@@ -44,7 +44,10 @@ corrupt gzip member additionally ends that FILE's scan (member boundaries
 after a corrupt stream cannot be trusted — the CDX offsets are how a real
 pipeline would skip past it) with one error row saying so.  Non-``response``
 records (warcinfo, request, metadata) are skipped: that is every WARC
-consumer's contract, not data loss.
+consumer's contract, not data loss.  One member loop (``_record_rows``)
+states this policy for every WARC-layout reader (here, ``wet.py`` and
+``wat.py``); a reader contributes only its WARC-Type, its column types and
+a per-record row function.
 
 Both WARC layouts are read, detected per file (and per offset in the
 ranged reader) by the gzip magic: Common Crawl's per-record-gzip
@@ -58,14 +61,16 @@ HTTP payload decoding: real Common Crawl ``response`` blocks frequently
 carry ``Transfer-Encoding: chunked`` and/or ``Content-Encoding:
 gzip/deflate`` — the capture preserves the wire bytes, so the ingest edge
 must dechunk and decompress or the html column silently carries chunk-size
-framing / still-compressed bytes into ``parse()``.  ``http_body`` removes
+framing / still-compressed bytes into ``parse()``.  ``http_response`` removes
 transfer codings (chunked; gzip/deflate transfer codings too), then the
 content coding (gzip, x-gzip, deflate — both zlib-wrapped and the raw
 variant some servers send — and identity).  An encoding this module cannot
 decode (``br``/``zstd``/unknown — no codec in this environment) or
 malformed framing yields an error ROW (``html`` NULL, ``error`` =
 ``http: ...``) keyed by the record's url/offset, never a silent
-pass-through and never a task failure.
+pass-through and never a task failure.  Repeated ``Content-Encoding`` /
+``Transfer-Encoding`` lines combine into one coding list (RFC 9110 §5.3),
+so a body coded twice is decoded twice, never passed on half-decoded.
 
 HTTP status: each response record's status code is surfaced as the
 ``http_status`` column (NULL for non-HTTP ``resource`` captures and
@@ -101,12 +106,13 @@ the byte-identical ``parse → content_str`` path unchanged.
 from __future__ import annotations
 
 import codecs
+import contextlib
 import re
 import zlib
 from typing import Iterator, List, Optional, Tuple
 from urllib.parse import urljoin
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # mapInArrow output; warc_date stays a STRING here and becomes a proper
@@ -143,16 +149,14 @@ def split_gzip_members(data: bytes) -> Iterator[Tuple[int, bytes]]:
     Raises ``zlib.error`` mid-iteration on a corrupt member — the caller
     owns the end-this-file policy.
 
-    Implemented as ``stream_gzip_members`` over a BytesIO view: feeding the
-    decompressor whole ``data[pos:]`` tails would memcpy O(members ×
-    remaining) — tens of TB of copying on a ~1 GiB shard with ~100k
-    members — where the bounded-chunk feed loop copies O(chunk) per member.
-    Same offsets, same payloads, same mid-iteration error (pinned by
-    test_stream_gzip_members_matches_split).
+    A thin wrapper of ``stream_gzip_extents`` over a BytesIO view (its
+    bounded-chunk feed copies O(chunk) per member, where feeding whole
+    ``data[pos:]`` tails would copy O(members × remaining)).
     """
     import io
 
-    yield from stream_gzip_members(io.BytesIO(data))
+    for off, _length, raw in stream_gzip_extents(io.BytesIO(data)):
+        yield off, raw
 
 
 def parse_warc_fields(raw: bytes) -> Tuple[dict, bytes]:
@@ -211,15 +215,24 @@ def _warc_truncated(hdr: dict) -> Optional[str]:
     return t.decode("ascii", "replace").strip().lower() or "unspecified"
 
 
+# list-valued headers whose repeated lines mean ONE comma-joined list
+# (RFC 9110 §5.3): dropping a repeat would leave a coding undecoded
+_LIST_HEADERS = (b"content-encoding", b"transfer-encoding")
+
+
 def _http_headers(head: bytes) -> dict:
     """Header section (no status line) → {lower-name: value} bytes dict.
-    Duplicate names keep the LAST value — enough for the coding headers
-    this module consumes (a compliant server sends each at most once)."""
+    Repeated coding headers combine with ``, `` in arrival order; any
+    other repeated name (``Content-Type``, ``Location``) keeps the LAST
+    value."""
     hdr = {}
     for ln in head.split(b"\r\n"):
         k, sep, v = ln.partition(b":")
         if sep:
-            hdr[k.strip().lower()] = v.strip()
+            k, v = k.strip().lower(), v.strip()
+            if k in _LIST_HEADERS and k in hdr:
+                v = hdr[k] + b", " + v
+            hdr[k] = v
     return hdr
 
 
@@ -377,19 +390,6 @@ def resolve_redirect(url: str, location: Optional[bytes]) -> Optional[str]:
         return None
 
 
-def http_payload(block: bytes) -> Tuple[bytes, Optional[bytes]]:
-    """``http_response`` without the status code (kept for callers that
-    predate the status column — same decode, same ValueError contract)."""
-    _status, body, ctype, _loc = http_response(block)
-    return body, ctype
-
-
-def http_body(block: bytes) -> bytes:
-    """``http_payload`` without the Content-Type (kept for callers that
-    only need bytes — same decode, same ValueError contract)."""
-    return http_payload(block)[0]
-
-
 # --- charset detection (the decode half of "bytes off the wire") ------------
 #
 # dhtmlparser3's parse() takes a *str* (__init__.py:24-26); parse_file
@@ -531,14 +531,14 @@ def transcode_utf8(
 def stream_gzip_extents(
     f, chunk_bytes: int = 1 << 20
 ) -> Iterator[Tuple[int, int, bytes]]:
-    """``stream_gzip_members`` plus the member's exact COMPRESSED byte
-    extent: yields ``(offset, length, decompressed_bytes)`` where
-    ``offset``/``length`` are what a CDX index publishes for the record
-    (a ranged fetch of exactly those bytes is one whole gzip member).
-    Holds only the current member's decompressed bytes + one
+    """``(offset, length, decompressed_bytes)`` per gzip member of a FILE
+    OBJECT, from its current position: ``offset``/``length`` are the
+    member's COMPRESSED byte extent, what a CDX index publishes for the
+    record (a ranged fetch of exactly those bytes is one whole gzip
+    member).  Holds only the current member's decompressed bytes + one
     ``chunk_bytes`` read buffer, never the whole compressed shard.
     Raises ``zlib.error`` mid-iteration on a truncated member."""
-    pos = 0  # absolute compressed offset of the current member's start
+    pos = f.tell()  # absolute compressed offset of the current member's start
     buf = b""  # compressed bytes read past the previous member's end
     while True:
         if not buf:
@@ -560,30 +560,20 @@ def stream_gzip_extents(
         buf = d.unused_data
 
 
-def stream_gzip_members(
-    f, chunk_bytes: int = 1 << 20
-) -> Iterator[Tuple[int, bytes]]:
-    """``split_gzip_members`` over a FILE OBJECT: holds only the current
-    member's decompressed bytes + one ``chunk_bytes`` read buffer, never
-    the whole compressed shard.  Same offsets, same payloads, same
-    mid-iteration ``zlib.error`` on a truncated member."""
-    for pos, _length, raw in stream_gzip_extents(f, chunk_bytes):
-        yield pos, raw
-
-
-def _plain_record_extent(buf: bytes, pos: int) -> Tuple[int, int]:
+def _plain_record_extent(buf: bytes, base: int) -> Tuple[int, int]:
     """(header_end, content_length) of the plain-mode record starting at
-    ``pos`` in ``buf``; raises WarcStreamError if the header is malformed —
-    in an UNCOMPRESSED stream the Content-Length header IS the record
-    boundary, so an unparseable header means every later boundary is
-    untrusted (unlike the gzip layout, where members re-sync)."""
-    head_end = buf.find(_CRLF2, pos, pos + _MAX_WARC_HEADER)
+    ``buf[0]`` (file offset ``base``, for the message); raises
+    WarcStreamError if the header is malformed — in an UNCOMPRESSED
+    stream the Content-Length header IS the record boundary, so an
+    unparseable header means every later boundary is untrusted (unlike
+    the gzip layout, where members re-sync)."""
+    head_end = buf.find(_CRLF2, 0, _MAX_WARC_HEADER)
     if head_end < 0:
-        raise WarcStreamError(f"no header terminator at offset {pos}")
-    if not buf[pos : pos + 5] == b"WARC/":
-        raise WarcStreamError(f"bad version line at offset {pos}")
+        raise WarcStreamError(f"no header terminator at offset {base}")
+    if not buf[:5] == b"WARC/":
+        raise WarcStreamError(f"bad version line at offset {base}")
     clen = None
-    for ln in buf[pos:head_end].split(b"\r\n")[1:]:
+    for ln in buf[:head_end].split(b"\r\n")[1:]:
         k, sep, v = ln.partition(b":")
         if sep and k.strip().lower() == b"content-length":
             try:
@@ -591,39 +581,23 @@ def _plain_record_extent(buf: bytes, pos: int) -> Tuple[int, int]:
             except ValueError:
                 pass
     if clen is None or clen < 0:
-        raise WarcStreamError(f"missing Content-Length at offset {pos}")
+        raise WarcStreamError(f"missing Content-Length at offset {base}")
     return head_end, clen
-
-
-def split_warc_plain(data: bytes) -> Iterator[Tuple[int, bytes]]:
-    """Record iterator over an UNCOMPRESSED ``.warc`` stream (wget's and
-    warcio's default output; Common Crawl always ships per-record gzip,
-    but the format is legitimate and silently skipping it would be data
-    loss).  Offsets are record START byte positions — what a CDX over an
-    uncompressed WARC publishes.  Raises WarcStreamError on a malformed
-    header or truncated record (boundary-defining, see
-    _plain_record_extent)."""
-    pos, n = 0, len(data)
-    while pos < n:
-        while data[pos : pos + 2] == b"\r\n":  # inter-record trailers
-            pos += 2
-        if pos >= n:
-            return
-        head_end, clen = _plain_record_extent(data, pos)
-        end = head_end + 4 + clen
-        if end > n:
-            raise WarcStreamError(f"truncated record at offset {pos}")
-        yield pos, data[pos:end]
-        pos = end
 
 
 def stream_warc_plain(
     f, chunk_bytes: int = 1 << 20
-) -> Iterator[Tuple[int, bytes]]:
-    """``split_warc_plain`` over a FILE OBJECT: holds one record + one
-    read buffer.  Same offsets, same payloads, same WarcStreamError
-    policy."""
-    base = 0  # absolute offset of buf[0]
+) -> Iterator[Tuple[int, int, bytes]]:
+    """``(offset, length, record_bytes)`` per record of an UNCOMPRESSED
+    ``.warc`` FILE OBJECT (wget's and warcio's default output; Common
+    Crawl always ships per-record gzip, but the format is legitimate and
+    silently skipping it would be data loss), from its current position.
+    Offsets are record START byte positions — what a CDX over an
+    uncompressed WARC publishes — and ``length`` is the record's bytes
+    without the inter-record CRLFCRLF trailer.  Holds one record + one
+    read buffer.  Raises WarcStreamError on a malformed header or a
+    truncated record (boundary-defining, see ``_plain_record_extent``)."""
+    base = f.tell()  # absolute offset of buf[0]
     buf = b""
     while True:
         # ensure a parseable header (or EOF) in the buffer
@@ -639,16 +613,31 @@ def stream_warc_plain(
                     return
                 break
             buf += chunk
-        head_end, clen = _plain_record_extent(buf, 0)
+        head_end, clen = _plain_record_extent(buf, base)
         end = head_end + 4 + clen
         while len(buf) < end:
             chunk = f.read(chunk_bytes)
             if not chunk:
                 raise WarcStreamError(f"truncated record at offset {base}")
             buf += chunk
-        yield base, buf[:end]
+        yield base, end, buf[:end]
         base += end
         buf = buf[end:]
+
+
+def _file_members(f) -> Iterator[Tuple[int, int, bytes]]:
+    """The one member iterator: ``(offset, length, raw)`` per record from
+    ``f``'s current position to EOF, the layout detected THERE by the
+    gzip magic (per file for a scan, per offset for a ranged fetch).
+    Decompresses incrementally: O(record) memory, whatever the shard
+    size."""
+    start = f.tell()
+    magic = f.read(2)
+    f.seek(start)
+    if magic == _GZ_MAGIC:
+        yield from stream_gzip_extents(f)
+    else:
+        yield from stream_warc_plain(f)
 
 
 def _local_path(path: str) -> str:
@@ -663,62 +652,70 @@ def _local_path(path: str) -> str:
     return path
 
 
-def _iter_record_rows(path: str, members: Iterator[Tuple[int, bytes]]):
-    """Member iterator → RAW_SCHEMA row tuples.  Shared by the whole-file
-    and streaming readers so the error policy (module docstring) cannot
-    diverge between them: malformed record → error row; corrupt gzip
-    member → one error row, then end THIS file (boundaries past a corrupt
-    stream are untrusted); non-``response`` records skip."""
-    while True:
-        try:
-            off, raw = next(members)
-        except StopIteration:
-            return
-        except (zlib.error, OSError) as e:
-            yield (path, -1, None, None, None, f"gzip: {e}",
-                   None, None, None, None)
-            return
-        except WarcStreamError as e:
-            # plain-mode boundary loss: same end-this-file policy
-            yield (
-                path, -1, None, None, None,
-                f"warc: {e} (scan ended)", None, None, None, None,
-            )
-            return
-        try:
-            hdr, block = parse_warc_fields(raw)
-        except ValueError as e:
-            yield (path, off, None, None, None, f"warc: {e}",
-                   None, None, None, None)
-            continue
-        wtype, url, date, block = _warc_tuple(hdr, block)
-        if wtype != "response":
-            continue
-        try:
-            status, body, ctype, loc = http_response(block)
-        except ValueError as e:
-            # WARC headers parsed fine: keep url/date so the error row is
-            # lineage-addressable (re-fetchable via read_warc_at)
-            yield (path, off, url, date, None, f"http: {e}",
-                   None, None, None, None)
-            continue
-        body, charset = transcode_utf8(body, ctype)
-        yield (path, off, url, date, body, None, charset, status,
-               resolve_redirect(url, loc), _warc_truncated(hdr))
+def _path_members(path: str) -> Iterator[Tuple[int, int, bytes]]:
+    """``_file_members`` of the file at ``path``; an unopenable file
+    raises its OSError at the first ``next``, like a corrupt member."""
+    with open(_local_path(path), "rb") as f:
+        yield from _file_members(f)
 
 
-_OUT_FIELDS = (
-    "src_file",
-    "rec_offset",
-    "url",
-    "warc_date",
-    "html",
-    "error",
-    "charset",
-    "http_status",
-    "redirect_to",
-    "truncated",
-)
+def _err_row(
+    path: str, msg: str, types: dict, off: int = -1, length=None
+) -> tuple:
+    """Schema-shaped error row: ``path``, the record's offset (-1: no
+    record) and on-disk length if the schema has one, the message in the
+    ``error`` slot, NULL everywhere else."""
+    vals = {"src_file": path, "rec_offset": off, "rec_length": length,
+            "error": msg}
+    return tuple(vals.get(k) for k in types)
+
+
+def _record_rows(path: str, wtype: str, row_fn, types: dict):
+    """One file's rows: the one member loop of every WARC-layout reader,
+    so the error policy (module docstring) is stated once.  A corrupt
+    gzip member, a lost plain-mode boundary or an unopenable file gives
+    one error row, then the scan of THIS file ends (boundaries past a
+    corrupt stream are untrusted); a record whose WARC headers do not
+    parse gives an error row and the scan continues; a record of another
+    WARC-Type is skipped.  ``row_fn(path, offset, length, hdr, block)``
+    turns each ``wtype`` record into one ``types``-shaped row."""
+    want = wtype.encode()
+    with contextlib.closing(_path_members(path)) as members:
+        while True:
+            try:
+                off, length, raw = next(members)
+            except StopIteration:
+                return
+            except (zlib.error, OSError) as e:
+                yield _err_row(path, f"gzip: {e}", types)
+                return
+            except WarcStreamError as e:
+                yield _err_row(path, f"warc: {e} (scan ended)", types)
+                return
+            try:
+                hdr, block = parse_warc_fields(raw)
+            except ValueError as e:
+                yield _err_row(path, f"warc: {e}", types, off, length)
+                continue
+            if hdr.get(b"warc-type") == want:
+                yield row_fn(path, off, length, hdr, block)
+
+
+def _response_row(path: str, off: int, _length, hdr: dict, block: bytes):
+    """One ``response`` record → RAW_SCHEMA row tuple (the scan and the
+    ranged fetch share it): HTTP decode, charset transcode, redirect and
+    truncation columns; an undecodable payload is an ``http:`` error row
+    that keeps url/date (lineage-addressable, re-fetchable via
+    ``read_warc_at``)."""
+    _wtype, url, date, block = _warc_tuple(hdr, block)
+    try:
+        status, body, ctype, loc = http_response(block)
+    except ValueError as e:
+        return (path, off, url, date, None, f"http: {e}",
+                None, None, None, None)
+    body, charset = transcode_utf8(body, ctype)
+    return (path, off, url, date, body, None, charset, status,
+            resolve_redirect(url, loc), _warc_truncated(hdr))
 
 
 # Arrow type per RAW_SCHEMA column — string keys keep pyarrow imports
@@ -737,16 +734,6 @@ _OUT_TYPES = {
 }
 
 
-def _err_row(path: str, msg: str, types=_OUT_TYPES) -> tuple:
-    """Schema-shaped error row: path + offset -1 + NULLs + the message in
-    the ``error`` slot (whichever position that field holds)."""
-    return tuple(
-        path if k == "src_file" else -1 if k == "rec_offset"
-        else msg if k == "error" else None
-        for k in types
-    )
-
-
 def _row_nbytes(row) -> int:
     """Byte size of one row tuple: the sum over its str/bytes values of
     ``len`` of bytes and the UTF-8 length of a str (``len`` itself when
@@ -763,9 +750,9 @@ def _row_nbytes(row) -> int:
     return n
 
 
-def _batched_record_batches(row_iters, batch_rows: int, types=_OUT_TYPES):
-    """Row-tuple iterators → Arrow RecordBatches of ≤ ``batch_rows`` rows
-    and ≤ the worker slice (``functions.extract._WORKER_BATCH_BYTES``) of
+def _batched_record_batches(rows, batch_rows: int, types=_OUT_TYPES):
+    """Row tuples → Arrow RecordBatches of ≤ ``batch_rows`` rows and ≤
+    the worker slice (``functions.extract._WORKER_BATCH_BYTES``) of
     str/bytes values, so one output batch, not one output FILE, bounds
     worker memory (a 1 GiB WARC shard holds ~50-100k records; their
     bodies must not accumulate into a single Arrow batch, and 2048
@@ -788,207 +775,133 @@ def _batched_record_batches(row_iters, batch_rows: int, types=_OUT_TYPES):
         t if isinstance(t, pa.DataType) else pa.type_for_alias(t)
         for t in types.values()
     ]
-    rows: list = []
+    batch: list = []
     nbytes = 0
 
     def _flush():
         rb = pa.RecordBatch.from_arrays(
             [
-                arrow_column([r[i] for r in rows], t)
+                arrow_column([r[i] for r in batch], t)
                 for i, t in enumerate(out_t)
             ],
             fields,
         )
-        rows.clear()
+        batch.clear()
         return rb
 
-    for it in row_iters:
-        for row in it:
-            size = _row_nbytes(row)
-            if rows and nbytes + size > _WORKER_BATCH_BYTES:
-                yield _flush()
-                nbytes = 0
-            rows.append(row)
-            nbytes += size
-            if len(rows) >= batch_rows:
-                yield _flush()
-                nbytes = 0
-    if rows:
+    for row in rows:
+        size = _row_nbytes(row)
+        if batch and nbytes + size > _WORKER_BATCH_BYTES:
+            yield _flush()
+            nbytes = 0
+        batch.append(row)
+        nbytes += size
+        if len(batch) >= batch_rows:
+            yield _flush()
+            nbytes = 0
+    if batch:
         yield _flush()
 
 
-def _plain_extents(members):
-    """(offset, raw) plain-record iterator → (offset, length, raw): an
-    uncompressed record's on-disk extent IS its byte length."""
-    for off, raw in members:
-        yield off, len(raw), raw
-
-
-def _content_members(data: bytes, extents: bool):
-    """Member iterator over a whole file's bytes, layout detected by the
-    gzip magic: ``(offset, raw)``, or ``(offset, length, raw)`` with
-    ``extents`` (the on-disk extent a CDX index publishes)."""
-    if data[:2] == _GZ_MAGIC:
-        if extents:
-            import io
-
-            return stream_gzip_extents(io.BytesIO(data))
-        return split_gzip_members(data)
-    members = split_warc_plain(data)
-    return _plain_extents(members) if extents else members
-
-
-def _file_members(f, extents: bool):
-    """:func:`_content_members` over an open file, decompressed
-    incrementally (O(record) memory, independent of shard size)."""
-    magic = f.read(2)
-    f.seek(0)
-    if magic == _GZ_MAGIC:
-        return stream_gzip_extents(f) if extents else stream_gzip_members(f)
-    members = stream_warc_plain(f)
-    return _plain_extents(members) if extents else members
-
-
-def _raising(e: Exception):
-    """A member iterator whose first ``next`` raises ``e``: an unopenable
-    file goes through the row function's own end-this-file policy."""
-    raise e
-    yield  # pragma: no cover
-
-
-def _records_arrow_iterator(
-    batch_rows: int,
-    row_fn=None,
-    types=_OUT_TYPES,
-    extents: bool = False,
-):
-    """mapInArrow fn over binaryFile rows: (path, content) → ``types``
-    rows via ``row_fn(path, members)`` (default: the response-record
-    loop), batched by :func:`_batched_record_batches`.
-    The one whole-file record scanner of the WARC-layout readers."""
-    row_fn = row_fn or _iter_record_rows
+def _scan_iterator(wtype: str, row_fn, types: dict, batch_rows: int):
+    """mapInArrow fn over path-only rows: each file's
+    :func:`_record_rows`, batched by :func:`_batched_record_batches`."""
 
     def run(batches):
-        def row_iters():
-            for rb in batches:
-                paths = rb.column(
-                    rb.schema.get_field_index("path")
-                ).to_pylist()
-                contents = rb.column(
-                    rb.schema.get_field_index("content")
-                ).to_pylist()
-                for path, data in zip(paths, contents):
-                    yield row_fn(path, _content_members(bytes(data), extents))
-
-        yield from _batched_record_batches(row_iters(), batch_rows, types)
+        rows = (
+            row
+            for rb in batches
+            for path in rb.column(0).to_pylist()
+            for row in _record_rows(path, wtype, row_fn, types)
+        )
+        yield from _batched_record_batches(rows, batch_rows, types)
 
     return run
 
 
-def _stream_arrow_iterator(
+def _scan_paths(
+    files: DataFrame, wtype: str, row_fn, schema: str, types: dict,
     batch_rows: int,
-    row_fn=None,
-    types=_OUT_TYPES,
-    extents: bool = False,
-):
-    """mapInArrow fn over path-only rows: (path) → ``types`` rows, opening
-    each file in the worker and decompressing incrementally — worker
-    memory is O(batch), independent of shard size (the whole-file reader
-    unavoidably holds the compressed shard binaryFile hands it).  An
-    unopenable file yields the row ``row_fn`` makes of a member iterator
-    that fails at once (the shared end-this-file policy)."""
-    row_fn = row_fn or _iter_record_rows
+) -> DataFrame:
+    """A ``binaryFile`` frame (batch or streaming) pruned to ``path`` →
+    ``schema`` rows of its files' ``wtype`` records."""
+    return files.select("path").mapInArrow(
+        _scan_iterator(wtype, row_fn, types, batch_rows), schema
+    )
 
-    def run(batches):
-        def row_iters():
-            for rb in batches:
-                for path in rb.column(
-                    rb.schema.get_field_index("path")
-                ).to_pylist():
-                    try:
-                        f = open(_local_path(path), "rb")
-                    except OSError as e:
-                        yield row_fn(path, _raising(e))
-                        continue
-                    with f:
-                        yield row_fn(path, _file_members(f, extents))
 
-        yield from _batched_record_batches(row_iters(), batch_rows, types)
+def _check_local(path: str) -> None:
+    """Workers ``open()`` each listed shard, so only local (or mounted)
+    paths are read: another URI scheme is refused on the driver instead
+    of giving one ``gzip:`` error row per file.  ``_local_path`` is where
+    an object-store opener would go."""
+    m = re.match(r"([A-Za-z][A-Za-z0-9+.\-]*):", path)
+    if m and m.group(1).lower() != "file":
+        raise ValueError(
+            f"{path!r}: only local paths are read (scheme {m.group(1)!r})"
+        )
 
-    return run
+
+# WARC-Date is ISO-8601 Zulu — second precision in CC crawls, but WARC/1.1
+# allows fractional seconds (milli and micro; nano would need one more)
+_WARC_DATE_PATTERNS = (
+    "yyyy-MM-dd'T'HH:mm:ssX",
+    "yyyy-MM-dd'T'HH:mm:ss.SSSX",
+    "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX",
+)
+
+
+def warc_ts(col: str) -> Column:
+    """The one ``WARC-Date`` parser: string column ``col`` → timestamp,
+    JVM-side in the session's UTC zone.  ``try_to_timestamp``, so a
+    malformed date gives NULL, never an ANSI cast failure killing the
+    task."""
+    return F.coalesce(
+        *(F.try_to_timestamp(F.col(col), F.lit(p)) for p in _WARC_DATE_PATTERNS)
+    )
 
 
 def _with_warc_ts(raw: DataFrame) -> DataFrame:
-    # WARC-Date is ISO-8601 Zulu — second precision in CC crawls, but
-    # WARC/1.1 allows fractional seconds (milli/micro covered below; nano
-    # would need one more pattern).  try_to_timestamp: a malformed date
-    # must yield NULL warc_ts, never an ANSI cast failure killing the task.
-    # Parsed JVM-side in the session's UTC zone.
     return raw.select(
-        "src_file",
-        "rec_offset",
-        "url",
-        F.coalesce(
-            F.try_to_timestamp(
-                F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ssX")
-            ),
-            F.try_to_timestamp(
-                F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSX")
-            ),
-            F.try_to_timestamp(
-                F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
-            ),
-        ).alias("warc_ts"),
-        "html",
-        "error",
-        "charset",
-        "http_status",
-        "redirect_to",
-        "truncated",
+        *(
+            warc_ts(c).alias("warc_ts") if c == "warc_date" else c
+            for c in _OUT_TYPES
+        )
     )
 
 
 def scan_record_files(
     spark: SparkSession,
     path: str,
-    io: str,
-    make_rows,
+    wtype: str,
+    row_fn,
     schema: str,
-    arrow_types,
+    types: dict,
     batch_rows: int = 2048,
-    extents: bool = False,
 ) -> DataFrame:
     """The one WARC-layout record scan, shared by ``read_warc``,
     ``read_warc_revisits``, the WET and WAT readers and the CDX indexer:
-    binaryFile over ``path`` (both on-disk layouts auto-detected per
-    file), ``make_rows(path, member_iter)`` turning members into row
-    tuples matching ``schema``/``arrow_types`` (Arrow types or their
-    aliases), ``io`` as in :func:`read_warc` (``"stream"`` = path-only
-    scan + incremental decompress, O(batch) worker memory).  An
-    unopenable file in stream mode yields the row ``make_rows`` produces
-    for an immediately-failing member iterator (the shared end-this-file
-    policy).  Output batches come from :func:`_batched_record_batches`:
-    ≤ ``batch_rows`` rows and ≤ the worker slice of str/bytes values.
-
-    With ``extents=True`` the member iterator yields ``(offset, length,
-    raw)`` instead of ``(offset, raw)`` — ``length`` is the record's
-    on-disk byte extent (compressed gzip member / plain record bytes),
-    the quantity a CDX index publishes for ranged fetches."""
-    assert io in ("content", "stream"), io
-    iterator = (
-        _stream_arrow_iterator if io == "stream" else _records_arrow_iterator
-    )(batch_rows, make_rows, arrow_types, extents)
-    files = spark.read.format("binaryFile").load(path)
-    if io == "stream":
-        return files.select("path").mapInArrow(iterator, schema)
-    return files.select("path", "content").mapInArrow(iterator, schema)
+    ``binaryFile`` over ``path`` (Hadoop globs; both on-disk layouts
+    detected per file) pruned to the listing, each worker opening its
+    shards and decompressing them incrementally (module docstring:
+    memory).  ``row_fn(path, offset, length, hdr, block)`` turns each
+    ``wtype`` record into a row tuple matching ``schema``/``types``
+    (Arrow types or their aliases); the error policy is
+    :func:`_record_rows`'s.  Output batches come from
+    :func:`_batched_record_batches`: ≤ ``batch_rows`` rows and ≤ the
+    worker slice of str/bytes values.  Raises ValueError on the driver
+    for a non-local ``path`` (:func:`_check_local`)."""
+    _check_local(path)
+    return _scan_paths(
+        spark.read.format("binaryFile").load(path),
+        wtype, row_fn, schema, types, batch_rows,
+    )
 
 
 def read_warc(
     spark: SparkSession,
     path: str,
     batch_rows: int = 2048,
-    io: str = "content",
 ) -> DataFrame:
     """``.warc.gz`` file(s) → DataFrame
     ``(src_file, rec_offset, url, warc_ts, html, error, charset,
@@ -996,28 +909,17 @@ def read_warc(
     bytes (module docstring: wire decode, then charset transcode),
     ``charset`` the resolved ``codec:source``.
 
-    ``path`` accepts the usual Hadoop globs (``dir/*.warc.gz``).  Rows with
-    ``error IS NULL`` carry one ``response`` record each; ``(src_file,
-    rec_offset)`` is the CDX-replayable lineage key (module docstring).
-
-    ``io`` picks how shard bytes reach the worker (same rows either way —
-    pinned by test_warc):
-
-    * ``"content"`` (default): binaryFile hands whole files through the
-      JVM — FS-portable (any Hadoop scheme), but the compressed shard
-      (~1 GiB) sits in worker memory while its records stream out.
-    * ``"stream"``: workers receive only PATHS (the binaryFile scan is
-      pruned to the listing) and decompress incrementally via open() —
-      worker memory is O(batch) regardless of shard size.  Local/posix
-      paths only in this sandbox (the object-store swap-in is
-      pyarrow.fs, see ``_local_path``); the right mode at 100 TB where
-      executors mount the store.
+    ``path`` accepts the usual Hadoop globs (``dir/*.warc.gz``) over local
+    or mounted files (:func:`scan_record_files`).  Rows with ``error IS
+    NULL`` carry one ``response`` record each; ``(src_file, rec_offset)``
+    is the CDX-replayable lineage key (module docstring).
     """
-    raw = scan_record_files(
-        spark, path, io, _iter_record_rows, RAW_SCHEMA, _OUT_TYPES,
-        batch_rows,
+    return _with_warc_ts(
+        scan_record_files(
+            spark, path, "response", _response_row, RAW_SCHEMA, _OUT_TYPES,
+            batch_rows,
+        )
     )
-    return _with_warc_ts(raw)
 
 
 # --- revisit records (the archive's own dedup markers) -----------------------
@@ -1041,53 +943,30 @@ _REVISIT_TYPES = {
 }
 
 
-def _iter_revisit_rows(path: str, members: Iterator[Tuple[int, bytes]]):
-    """Member iterator → REVISIT_SCHEMA row tuples: one row per
-    ``revisit`` record, same end-this-file error policy as the response
-    loop (corrupt member → one error row, scan of THIS file ends;
-    malformed record → error row, scan continues; other types skip)."""
-    while True:
-        try:
-            off, raw = next(members)
-        except StopIteration:
-            return
-        except (zlib.error, OSError) as e:
-            yield _err_row(path, f"gzip: {e}", _REVISIT_TYPES)
-            return
-        except WarcStreamError as e:
-            yield _err_row(path, f"warc: {e} (scan ended)", _REVISIT_TYPES)
-            return
-        try:
-            hdr, _block = parse_warc_fields(raw)
-        except ValueError as e:
-            yield (path, off, None, None, None, None, None, None,
-                   f"warc: {e}")
-            continue
-        if hdr.get(b"warc-type", b"").decode("ascii", "replace") != "revisit":
-            continue
+def _revisit_row(path: str, off: int, _length, hdr: dict, _block):
+    """One ``revisit`` record → REVISIT_SCHEMA row tuple (headers only)."""
 
-        def s(key: bytes) -> Optional[str]:
-            v = hdr.get(key)
-            return v.decode("utf-8", "replace") if v is not None else None
+    def s(key: bytes) -> Optional[str]:
+        v = hdr.get(key)
+        return v.decode("utf-8", "replace") if v is not None else None
 
-        yield (
-            path,
-            off,
-            s(b"warc-target-uri"),
-            s(b"warc-date"),
-            s(b"warc-refers-to-target-uri"),
-            s(b"warc-refers-to-date"),
-            s(b"warc-payload-digest"),
-            s(b"warc-profile"),
-            None,
-        )
+    return (
+        path,
+        off,
+        s(b"warc-target-uri"),
+        s(b"warc-date"),
+        s(b"warc-refers-to-target-uri"),
+        s(b"warc-refers-to-date"),
+        s(b"warc-payload-digest"),
+        s(b"warc-profile"),
+        None,
+    )
 
 
 def read_warc_revisits(
     spark: SparkSession,
     path: str,
     batch_rows: int = 4096,
-    io: str = "content",
 ) -> DataFrame:
     """``revisit`` records of WARC file(s) → DataFrame ``(src_file,
     rec_offset, url, warc_ts, refers_to_url, refers_to_ts,
@@ -1101,24 +980,19 @@ def read_warc_revisits(
     skips these (no payload to extract); this reader surfaces them so a
     corpus build can credit duplicate fetches — recency weighting, crawl
     freshness stats, digest-level dedup — without refetching anything.
-    ``io``/error policy/lineage key as in ``read_warc``; same one-task-
-    per-shard scale shape (revisit rows are tiny — headers only)."""
+    Error policy/lineage key as in ``read_warc``; same one-task-per-shard
+    scale shape (revisit rows are tiny — headers only)."""
     raw = scan_record_files(
-        spark, path, io, _iter_revisit_rows, REVISIT_SCHEMA, _REVISIT_TYPES,
+        spark, path, "revisit", _revisit_row, REVISIT_SCHEMA, _REVISIT_TYPES,
         batch_rows,
-    )
-    ts = lambda c: F.coalesce(  # noqa: E731 — same patterns as _with_warc_ts
-        F.try_to_timestamp(F.col(c), F.lit("yyyy-MM-dd'T'HH:mm:ssX")),
-        F.try_to_timestamp(F.col(c), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSX")),
-        F.try_to_timestamp(F.col(c), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")),
     )
     return raw.select(
         "src_file",
         "rec_offset",
         "url",
-        ts("warc_date").alias("warc_ts"),
+        warc_ts("warc_date").alias("warc_ts"),
         "refers_to_url",
-        ts("refers_to_date").alias("refers_to_ts"),
+        warc_ts("refers_to_date").alias("refers_to_ts"),
         "payload_digest",
         "profile",
         "error",
@@ -1143,55 +1017,25 @@ def revisit_counts(revisits: DataFrame) -> DataFrame:
     )
 
 
-def _ranged_arrow_iterator(batch_rows: int):
+def _fetch_iterator(batch_rows: int):
     """mapInArrow fn over index rows (src_file, rec_offset) → RAW_SCHEMA.
 
-    One seek + one member decompress per index row; a file handle is kept
-    open across consecutive same-file rows (the caller repartitions and
-    sorts by file so each task's rows for a file are contiguous).  The
-    stream is decompressed in 1 MiB slices only until the member's gzip
-    eof — a record fetch never reads the rest of a 1 GiB shard.  Output
-    batches are cut by ``_batched_record_batches`` (rows and html bytes).
+    One seek + the first record of :func:`_file_members` there per index
+    row (decompressed in 1 MiB slices only to the member's end — a
+    record fetch never reads the rest of a 1 GiB shard), then the scan's
+    own :func:`_response_row`.  A file handle is kept open across
+    consecutive same-file rows (the caller repartitions and sorts by file
+    so each task's rows for a file are contiguous).  Output batches are
+    cut by ``_batched_record_batches`` (rows and html bytes).
     """
-
-    def _member_at(f, offset: int) -> bytes:
-        f.seek(offset)
-        head = f.read(2)
-        f.seek(offset)
-        if head == _GZ_MAGIC:
-            d = zlib.decompressobj(wbits=31)
-            out = []
-            while not d.eof:
-                chunk = f.read(1 << 20)
-                if not chunk:
-                    raise zlib.error(
-                        f"truncated gzip member at offset {offset}"
-                    )
-                out.append(d.decompress(chunk))
-            return b"".join(out)
-        # plain (uncompressed .warc) offset: read the header block, then
-        # exactly Content-Length more bytes — never the rest of the file
-        buf = f.read(min(_MAX_WARC_HEADER + 4, 1 << 20))
-        head_end, clen = _plain_record_extent(buf, 0)
-        end = head_end + 4 + clen
-        while len(buf) < end:
-            chunk = f.read(min(end - len(buf), 1 << 20))
-            if not chunk:
-                raise WarcStreamError(f"truncated record at offset {offset}")
-            buf += chunk
-        return buf[:end]
 
     def rows(batches):
         cur_path, cur_f = None, None
         try:
             for rb in batches:
-                paths = rb.column(
-                    rb.schema.get_field_index("src_file")
-                ).to_pylist()
-                offs = rb.column(
-                    rb.schema.get_field_index("rec_offset")
-                ).to_pylist()
-                for path, off in zip(paths, offs):
+                for path, off in zip(
+                    rb.column(0).to_pylist(), rb.column(1).to_pylist()
+                ):
                     local = _local_path(path)
                     try:
                         if local != cur_path:
@@ -1199,35 +1043,32 @@ def _ranged_arrow_iterator(batch_rows: int):
                                 cur_f.close()
                             cur_f = open(local, "rb")
                             cur_path = local
-                        raw = _member_at(cur_f, off)
-                        hdr, block = parse_warc_fields(raw)
+                        cur_f.seek(off)
+                        rec = next(_file_members(cur_f), None)
+                        if rec is None:
+                            raise ValueError(f"no record at offset {off}")
+                        hdr, block = parse_warc_fields(rec[2])
                     except (
                         OSError, zlib.error, ValueError, WarcStreamError
                     ) as e:
-                        yield (path, off, None, None, None, f"fetch: {e}",
-                               None, None, None, None)
+                        yield _err_row(path, f"fetch: {e}", _OUT_TYPES, off)
                         continue
-                    wtype, url, date, block = _warc_tuple(hdr, block)
-                    if wtype != "response":
-                        yield (path, off, None, None, None,
-                               f"fetch: not a response record ({wtype})",
-                               None, None, None, None)
+                    if hdr.get(b"warc-type") != b"response":
+                        wtype = _warc_tuple(hdr, block)[0]
+                        yield _err_row(
+                            path,
+                            f"fetch: not a response record ({wtype})",
+                            _OUT_TYPES,
+                            off,
+                        )
                         continue
-                    try:
-                        status, body, ctype, loc = http_response(block)
-                    except ValueError as e:
-                        yield (path, off, url, date, None, f"http: {e}",
-                               None, None, None, None)
-                        continue
-                    body, charset = transcode_utf8(body, ctype)
-                    yield (path, off, url, date, body, None, charset, status,
-                           resolve_redirect(url, loc), _warc_truncated(hdr))
+                    yield _response_row(path, off, rec[1], hdr, block)
         finally:
             if cur_f is not None:
                 cur_f.close()
 
     def run(batches):
-        yield from _batched_record_batches([rows(batches)], batch_rows)
+        yield from _batched_record_batches(rows(batches), batch_rows)
 
     return run
 
@@ -1252,7 +1093,7 @@ def read_warc_at(index: DataFrame, batch_rows: int = 2048) -> DataFrame:
     raw = (
         idx.repartition("src_file")
         .sortWithinPartitions("src_file", "rec_offset")
-        .mapInArrow(_ranged_arrow_iterator(batch_rows), RAW_SCHEMA)
+        .mapInArrow(_fetch_iterator(batch_rows), RAW_SCHEMA)
     )
     return _with_warc_ts(raw)
 
@@ -1272,14 +1113,12 @@ def _status_ok(statuses: Optional[Tuple[int, ...]]):
 def warc_pages(
     spark: SparkSession,
     path: str,
-    io: str = "content",
     statuses: Optional[Tuple[int, ...]] = (200,),
 ) -> DataFrame:
     """Clean-record adapter to the ``input_hint`` pages shape
     ``(url, warc_ts, html, text, lang)`` — ``text`` is the extraction
     OUTPUT slot (empty at ingest) and ``lang`` is unknown until a
-    language-ID pass (functions/textops) fills it.  ``io`` as in
-    ``read_warc``.
+    language-ID pass (functions/textops) fills it.
 
     ``statuses`` is the HTTP status policy, default 200-only — the same
     rule Common Crawl's WET conversion applies: a 404/500 capture is a
@@ -1288,7 +1127,7 @@ def warc_pages(
     ``resource`` captures (status NULL) always pass; ``statuses=None``
     keeps every decodable capture (the pre-round-5 behavior)."""
     return (
-        read_warc(spark, path, io=io)
+        read_warc(spark, path)
         .where(F.col("error").isNull() & _status_ok(statuses))
         .select(
             "url",
@@ -1316,33 +1155,36 @@ def read_warc_stream(
     """STREAMING variant of ``read_warc``: a Structured Streaming source
     over a directory where ``.warc``/``.warc.gz`` shards ARRIVE (a live
     crawl drop point) — each micro-batch ingests up to
-    ``max_files_per_trigger`` newly-seen shards through the SAME record
-    loop as the batch reader (layout detection, HTTP decode, error
-    policy all shared — parity pinned in test_warc).
+    ``max_files_per_trigger`` newly-seen shards through the SAME
+    path-only scan and member loop as the batch reader (layout
+    detection, HTTP decode, error policy all shared — parity pinned in
+    test_warc).
 
     Composition is the rest of the streaming tier unchanged:
     ``warc_pages_stream → streaming/stream_extract.extract_stream →
     file sink`` is exactly-once end-to-end (file source + checkpoint +
     file sink), so a killed ingest job resumes at the next shard, the
-    streaming twin of the batch lineage/resume contract.  (Not to be
-    confused with ``read_warc(io="stream")``, which picks the BYTE
-    TRANSPORT inside a batch scan.)
+    streaming twin of the batch lineage/resume contract.
 
-    Scale shape: identical to batch — one task per shard, records leave
-    the worker in ≤ ``batch_rows`` Arrow batches, raw bytes never
-    shuffle.  The file-listing state is the source's only driver state;
-    at snapshot scale point each job at its shard prefix.
+    Scale shape: identical to batch — one task per shard, the source
+    hands workers paths only, records leave the worker in ≤
+    ``batch_rows`` Arrow batches, raw bytes never shuffle.  The
+    file-listing state is the source's only driver state; at snapshot
+    scale point each job at its shard prefix.
     """
+    _check_local(path)
     files = (
         spark.readStream.format("binaryFile")
         .schema(_BINARYFILE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(path)
     )
-    raw = files.select("path", "content").mapInArrow(
-        _records_arrow_iterator(batch_rows), RAW_SCHEMA
+    return _with_warc_ts(
+        _scan_paths(
+            files, "response", _response_row, RAW_SCHEMA, _OUT_TYPES,
+            batch_rows,
+        )
     )
-    return _with_warc_ts(raw)
 
 
 def warc_pages_stream(
@@ -1485,39 +1327,19 @@ INDEX_SCHEMA = (
 )
 
 
-def _iter_index_rows(path: str, extents):
-    """Extent iterator → INDEX_SCHEMA row tuples.  WARC headers only —
-    an indexer reads framing, never HTTP payloads, so indexing a shard
-    costs decompression + header splits, not parse/transcode.  Shared
-    error policy: corrupt member / boundary loss → one error row, end
-    THIS file; malformed record → error row, continue; non-``response``
-    records skip (CC's index covers captures, not request/metadata)."""
-    while True:
-        try:
-            off, length, raw = next(extents)
-        except StopIteration:
-            return
-        except (zlib.error, OSError) as e:
-            yield (path, -1, None, None, None, f"gzip: {e}")
-            return
-        except WarcStreamError as e:
-            yield (path, -1, None, None, None, f"warc: {e} (scan ended)")
-            return
-        try:
-            wtype, url, date, _block = parse_warc_record(raw)
-        except ValueError as e:
-            yield (path, off, length, None, None, f"warc: {e}")
-            continue
-        if wtype != "response":
-            continue
-        yield (path, off, length, url, date, None)
+def _index_row(path: str, off: int, length: int, hdr: dict, block: bytes):
+    """One ``response`` record → INDEX_SCHEMA row tuple.  WARC headers
+    only — an indexer reads framing, never HTTP payloads, so indexing a
+    shard costs decompression + header splits, not parse/transcode (CC's
+    index covers captures, not request/metadata records)."""
+    _wtype, url, date, _block = _warc_tuple(hdr, block)
+    return (path, off, length, url, date, None)
 
 
 def index_warc(
     spark: SparkSession,
     path: str,
     batch_rows: int = 8192,
-    io: str = "content",
 ) -> DataFrame:
     """``.warc(.gz)`` file(s) → the CDX index table ``(src_file,
     rec_offset, rec_length, url, warc_date, error)``: one row per
@@ -1536,8 +1358,7 @@ def index_warc(
         "error": "string",
     }
     return scan_record_files(
-        spark, path, io, _iter_index_rows, INDEX_SCHEMA, out_t,
-        batch_rows, extents=True,
+        spark, path, "response", _index_row, INDEX_SCHEMA, out_t, batch_rows
     )
 
 
@@ -1562,18 +1383,7 @@ def cdx_lines(index: DataFrame, shards: int = 4) -> DataFrame:
         "rec_length",
         "url",
         F.coalesce(
-            F.date_format(
-                F.coalesce(
-                    F.try_to_timestamp(
-                        F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ssX")
-                    ),
-                    F.try_to_timestamp(
-                        F.col("warc_date"),
-                        F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSX"),
-                    ),
-                ),
-                "yyyyMMddHHmmss",
-            ),
+            F.date_format(warc_ts("warc_date"), "yyyyMMddHHmmss"),
             F.lit("19700101000000"),
         ).alias("ts14"),
     )
@@ -2020,10 +1830,8 @@ def write_warc_gz(
     way unless already gzip (magic ``1f 8b``).
     """
     import gzip
-    import io
 
     offsets: List[int] = []
-    buf = io.BytesIO()
     members = [
         build_warc_record(
             r[0], r[1], r[2],
@@ -2033,14 +1841,10 @@ def write_warc_gz(
         )
         for r in records
     ] + list(extra_members or [])
-    for m in members:
-        offsets.append(buf.tell())
-        if m[:2] == b"\x1f\x8b":
-            buf.write(m)
-        else:
-            buf.write(gzip.compress(m, mtime=0))
     with open(path, "wb") as f:
-        f.write(buf.getvalue())
+        for m in members:
+            offsets.append(f.tell())
+            f.write(m if m[:2] == _GZ_MAGIC else gzip.compress(m, mtime=0))
     return offsets
 
 

@@ -39,15 +39,13 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .warc import WarcStreamError, parse_warc_record, scan_record_files, _CRLF2
+from .warc import _CRLF2, _warc_tuple, scan_record_files, warc_ts
 from .wet import write_record_shard
-
-import zlib
 
 # wat_metadata output: links as array<struct> in DOCUMENT ORDER (the
 # parse order — deterministic per html bytes); title NULL when the page
@@ -281,46 +279,26 @@ def parse_wat_envelope(block: bytes):
     return title, links
 
 
-def _iter_wat_rows(path: str, members):
-    """Member iterator → WAT_SCHEMA row tuples; shared error policy
-    (corrupt member / boundary loss → one error row, end THIS file;
-    malformed record/envelope → error row, continue; non-``metadata``
-    records skip)."""
-    while True:
-        try:
-            off, raw = next(members)
-        except StopIteration:
-            return
-        except (zlib.error, OSError) as e:
-            yield (path, -1, None, None, None, None, f"gzip: {e}")
-            return
-        except WarcStreamError as e:
-            yield (path, -1, None, None, None, None, f"warc: {e} (scan ended)")
-            return
-        try:
-            wtype, url, date, block = parse_warc_record(raw)
-        except ValueError as e:
-            yield (path, off, None, None, None, None, f"warc: {e}")
-            continue
-        if wtype != "metadata":
-            continue
-        try:
-            title, links = parse_wat_envelope(block)
-        except ValueError as e:
-            yield (path, off, url, date, None, None, f"wat: {e}")
-            continue
-        yield (path, off, url, date, title, links, None)
+def _wat_row(path: str, off: int, _length, hdr: dict, block: bytes):
+    """One ``metadata`` record → WAT_SCHEMA row tuple; an envelope that
+    is not JSON is a ``wat:`` error row keyed by url/offset."""
+    _wtype, url, date, block = _warc_tuple(hdr, block)
+    try:
+        title, links = parse_wat_envelope(block)
+    except ValueError as e:
+        return (path, off, url, date, None, None, f"wat: {e}")
+    return (path, off, url, date, title, links, None)
 
 
 def read_wat(
     spark: SparkSession,
     path: str,
     batch_rows: int = 2048,
-    io: str = "content",
 ) -> DataFrame:
     """WAT file(s) → ``(src_file, rec_offset, url, wat_ts, title, links,
     error)`` — same reader contract as ``read_wet`` (both layouts,
-    globs, ``io="stream"``, replayable offsets, shared error policy).
+    globs, replayable offsets, shared error policy; non-``metadata``
+    records skip).
     Batches are cut at ``batch_rows`` rows or the worker slice of
     top-level string bytes (url, title), whichever comes first."""
     import pyarrow as pa
@@ -337,20 +315,13 @@ def read_wat(
         "error": pa.string(),
     }
     raw = scan_record_files(
-        spark, path, io, _iter_wat_rows, WAT_SCHEMA, out_t, batch_rows
+        spark, path, "metadata", _wat_row, WAT_SCHEMA, out_t, batch_rows
     )
     return raw.select(
         "src_file",
         "rec_offset",
         "url",
-        F.coalesce(
-            F.try_to_timestamp(
-                F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ssX")
-            ),
-            F.try_to_timestamp(
-                F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSX")
-            ),
-        ).alias("wat_ts"),
+        warc_ts("warc_date").alias("wat_ts"),
         "title",
         "links",
         "error",

@@ -51,18 +51,12 @@ from __future__ import annotations
 
 import gzip
 import os
-import zlib
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .warc import (
-    _CRLF2,
-    WarcStreamError,
-    parse_warc_record,
-    scan_record_files,
-)
+from .warc import _CRLF2, _warc_tuple, scan_record_files, warc_ts
 
 
 # read_wet output: text is a STRING column (WET blocks are UTF-8 by
@@ -221,33 +215,12 @@ def write_wet(
     return cols.mapInArrow(run, MANIFEST_SCHEMA)
 
 
-def _iter_wet_rows(path: str, members: Iterator[Tuple[int, bytes]]):
-    """Member iterator → WET_SCHEMA row tuples.  Same error policy as the
-    WARC record loop (warc.py module docstring): malformed record → error
-    row, scan continues; corrupt gzip member / plain-mode boundary loss →
-    one error row, end THIS file.  Non-``conversion`` records (the
-    warcinfo lead) skip by contract."""
-    while True:
-        try:
-            off, raw = next(members)
-        except StopIteration:
-            return
-        except (zlib.error, OSError) as e:
-            yield (path, -1, None, None, None, f"gzip: {e}")
-            return
-        except WarcStreamError as e:
-            yield (path, -1, None, None, None, f"warc: {e} (scan ended)")
-            return
-        try:
-            wtype, url, date, block = parse_warc_record(raw)
-        except ValueError as e:
-            yield (path, off, None, None, None, f"warc: {e}")
-            continue
-        if wtype != "conversion":
-            continue
-        # WET blocks are UTF-8 text/plain by format contract; replace (not
-        # raise) on violation — one mislabeled record must not cost a task
-        yield (path, off, url, date, block.decode("utf-8", "replace"), None)
+def _wet_row(path: str, off: int, _length, hdr: dict, block: bytes):
+    """One ``conversion`` record → WET_SCHEMA row tuple.  WET blocks are
+    UTF-8 text/plain by format contract; replace (not raise) on
+    violation — one mislabeled record must not cost a task."""
+    _wtype, url, date, block = _warc_tuple(hdr, block)
+    return (path, off, url, date, block.decode("utf-8", "replace"), None)
 
 
 def start_wet_sink(
@@ -291,31 +264,25 @@ def read_wet(
     spark: SparkSession,
     path: str,
     batch_rows: int = 2048,
-    io: str = "content",
 ) -> DataFrame:
     """WET file(s) → ``(src_file, rec_offset, url, wet_ts, text, error)``.
 
-    Mirrors ``read_warc``: both on-disk layouts auto-detected per file
-    (per-record gzip members / uncompressed), Hadoop globs accepted,
-    ``io="stream"`` for O(batch) worker memory, ``(src_file, rec_offset)``
-    the replayable lineage key, error rows per the shared policy.
-    Batches are cut at ``batch_rows`` rows or the worker slice of
-    record bytes, whichever comes first."""
+    Mirrors ``read_warc`` (the one ``scan_record_files`` scan): both
+    on-disk layouts auto-detected per file (per-record gzip members /
+    uncompressed), Hadoop globs over local paths, O(batch) worker
+    memory, ``(src_file, rec_offset)`` the replayable lineage key, error
+    rows per the shared policy; non-``conversion`` records (the warcinfo
+    lead) skip.  Batches are cut at ``batch_rows`` rows or the worker
+    slice of record bytes, whichever comes first."""
     raw = scan_record_files(
-        spark, path, io, _iter_wet_rows, WET_SCHEMA, _WET_TYPES, batch_rows
+        spark, path, "conversion", _wet_row, WET_SCHEMA, _WET_TYPES,
+        batch_rows,
     )
     return raw.select(
         "src_file",
         "rec_offset",
         "url",
-        F.coalesce(
-            F.try_to_timestamp(
-                F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ssX")
-            ),
-            F.try_to_timestamp(
-                F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSX")
-            ),
-        ).alias("wet_ts"),
+        warc_ts("warc_date").alias("wet_ts"),
         "text",
         "error",
     )

@@ -8,12 +8,14 @@
         --lineage /tmp/out_lineage --buckets 64 [--max-buckets 8]
 
 Input is one of --warc (Common-Crawl .warc.gz glob — the north-star shape;
-HTTP payloads decoded, poison records become error rows), --pages-table
-(existing Iceberg/parquet pages table) or --sf-dir (synthesize the test
-corpus).  Runs one resumable micro-run of the extraction pipeline: every
-pending bucket (or the first --max-buckets of them) is extracted, written
-and committed to the lineage table in one pass; re-invoking after a kill
-resumes from the lineage table (see pipeline/lineage.py).
+local or mounted paths, since each worker opens and decompresses its own
+shards; HTTP payloads decoded, poison records become error rows),
+--pages-table (existing Iceberg/parquet pages table) or --sf-dir
+(synthesize the test corpus).  Runs one resumable micro-run of the
+extraction pipeline: every pending bucket (or the first --max-buckets of
+them) is extracted, written and committed to the lineage table in one
+pass; re-invoking after a kill resumes from the lineage table (see
+pipeline/lineage.py).
 """
 
 from __future__ import annotations
@@ -35,18 +37,10 @@ def main() -> int:
     )
     ap.add_argument(
         "--warc",
-        help="ingest Common-Crawl .warc.gz file(s) (Hadoop glob) as the "
-        "pages input — per-record gzip members, HTTP payloads dechunked/"
-        "decompressed, undecodable records dropped as error rows "
-        "(sources/warc.py)",
-    )
-    ap.add_argument(
-        "--warc-io",
-        choices=["content", "stream"],
-        default="content",
-        help="WARC byte transport: 'content' (binaryFile, FS-portable) or "
-        "'stream' (path-only scan + incremental decompress; O(batch) "
-        "worker memory — the 100TB mode where executors mount the store)",
+        help="ingest Common-Crawl .warc.gz file(s) (glob over local or "
+        "mounted paths; workers open the shards) as the pages input — "
+        "per-record gzip members, HTTP payloads dechunked/decompressed, "
+        "undecodable records dropped as error rows (sources/warc.py)",
     )
     ap.add_argument("--output", required=True)
     ap.add_argument("--lineage", required=True)
@@ -96,7 +90,7 @@ def main() -> int:
     if args.warc:
         from dhtmlparser3_spark.sources.warc import warc_pages
 
-        pages = warc_pages(spark, args.warc, io=args.warc_io)
+        pages = warc_pages(spark, args.warc)
     elif args.pages_table:
         pages = read_pages(spark, args.pages_table)
     else:

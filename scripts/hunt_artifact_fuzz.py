@@ -1,11 +1,13 @@
 """WET/WAT structural-corruption hunt: the WARC hunt's axes pointed at the
 other two artifact readers (sources/wet.py, sources/wat.py).
 
-Both readers share ``scan_record_files`` (layout detection, member
-iteration, batching) with their own record loops, so this hunt pins what
-the sharing does NOT guarantee by construction: the per-record loops'
-error rows, skip contracts, and survival of clean records around a
-corruption.  Axes reused from hunt_warc_fuzz (per-record-gzip layout):
+Both readers are calls of ``scan_record_files`` (layout detection,
+member iteration, the one member loop with its error policy, batching)
+with their own WARC-Type and per-record row function, so this hunt pins
+what the sharing does NOT guarantee by construction: the row functions'
+error rows (WAT's ``wat:``), the WARC-Type skip contracts, and survival
+of clean records around a corruption.  Axes reused from hunt_warc_fuzz
+(per-record-gzip layout):
 
   truncate / byte-flip / inter-member splice / WARC-header break
 

@@ -157,7 +157,7 @@ def test_unencodable_document_other_parse_outputs(doc):
 # --- the job's workers never load pandas ------------------------------------
 
 _PANDAS_FREE = r'''
-import array, gzip, sys
+import array, gzip, os, sys, tempfile
 import pyarrow as pa
 
 from dhtmlparser3_spark.functions.extract import (
@@ -167,7 +167,7 @@ from dhtmlparser3_spark.functions.extract import (
 )
 from dhtmlparser3_spark.sources.pages import TEMPLATES, compile_py
 from dhtmlparser3_spark.sources.warc import (
-    _records_arrow_iterator, build_warc_record,
+    _OUT_TYPES, _response_row, _scan_iterator, build_warc_record,
 )
 from dhtmlparser3_spark.sources.wat import make_wat_iterator
 
@@ -203,11 +203,13 @@ warc = b"".join(
                                     h), mtime=0)
     for i, h in enumerate(htmls)
 )
-files = pa.RecordBatch.from_arrays(
-    [arrow_column(["mem.warc.gz"], pa.string()), arrow_column([warc], pa.binary())],
-    ["path", "content"],
-)
-rows = sum(b.num_rows for b in _records_arrow_iterator(2048)(iter([files])))
+with tempfile.TemporaryDirectory() as td:
+    path = os.path.join(td, "mem.warc.gz")
+    with open(path, "wb") as f:
+        f.write(warc)
+    files = pa.RecordBatch.from_arrays([arrow_column([path], pa.string())], ["path"])
+    scan = _scan_iterator("response", _response_row, _OUT_TYPES, 2048)
+    rows = sum(b.num_rows for b in scan(iter([files])))
 assert rows == n, rows
 print("pandas" in sys.modules)
 '''
@@ -215,8 +217,8 @@ print("pandas" in sys.modules)
 
 def test_job_workers_never_import_pandas():
     """A fresh interpreter runs the job path's worker functions — the
-    parse family over a pages batch and the WARC decode over an in-memory
-    ``.warc.gz`` — and pandas is never imported."""
+    parse family over a pages batch and the WARC scan over a small
+    ``.warc.gz`` file — and pandas is never imported."""
     env = dict(os.environ, PYTHONPATH=REPO)
     p = subprocess.run(
         [sys.executable, "-c", _PANDAS_FREE],

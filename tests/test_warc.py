@@ -17,7 +17,7 @@ import pytest
 
 from dhtmlparser3_spark.sources.warc import (
     build_warc_record,
-    http_body,
+    http_response,
     parse_warc_record,
     read_warc,
     split_gzip_members,
@@ -59,7 +59,7 @@ def test_parse_warc_record_roundtrip_and_errors():
     rec = build_warc_record("http://u/", "2024-01-01T00:00:00Z", b"<p>hi</p>")
     wtype, url, date, block = parse_warc_record(rec)
     assert (wtype, url, date) == ("response", "http://u/", "2024-01-01T00:00:00Z")
-    assert http_body(block) == b"<p>hi</p>"
+    assert http_response(block)[1] == b"<p>hi</p>"
     with pytest.raises(ValueError):
         parse_warc_record(b"no terminator at all")
     with pytest.raises(ValueError):
@@ -73,8 +73,8 @@ def test_parse_warc_record_roundtrip_and_errors():
 
 
 def test_http_body_non_http_block_passthrough():
-    assert http_body(b"raw resource bytes") == b"raw resource bytes"
-    assert http_body(b"HTTP/1.1 200 OK\r\nno terminator") == b""
+    assert http_response(b"raw resource bytes")[1] == b"raw resource bytes"
+    assert http_response(b"HTTP/1.1 200 OK\r\nno terminator")[1] == b""
 
 
 # --- HTTP payload decoding (chunked / content-encoding) ----------------------
@@ -89,19 +89,52 @@ ENCODINGS = [
     ("deflate", "chunked"),
 ]
 
+# content codings sent as one header LINE each, in the order applied
+# (RFC 9110 §5.3: repeated lines are one comma-joined list)
+REPEATED_CODINGS = [
+    # gzip'd twice: must decode twice
+    pytest.param(("gzip", "gzip"), None, id="gzip-line-gzip-line"),
+    # gzip undone first, then br has no codec: an error, not br bytes
+    pytest.param(
+        ("br", "gzip"), "unsupported coding 'br'", id="br-line-gzip-line"
+    ),
+]
 
-@pytest.mark.parametrize("ce,te", ENCODINGS)
+
+def _repeated_coding_block(html: bytes, codings) -> bytes:
+    body = html
+    for c in codings:  # br has no codec here: left verbatim under its line
+        body = gzip.compress(body, mtime=0) if c == "gzip" else body
+    lines = b"".join(b"Content-Encoding: %s\r\n" % c.encode() for c in codings)
+    return (
+        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" + lines
+        + b"\r\n" + body
+    )
+
+
+@pytest.mark.parametrize("ce,te", ENCODINGS + REPEATED_CODINGS)
 def test_http_body_decodes_encoded_payloads(ce, te):
     """Every wire encoding a CC capture realistically carries decodes back
-    to the exact original payload — the byte-identity precondition."""
+    to the exact original payload — the byte-identity precondition.  A
+    coding repeated over several header lines is decoded once per line
+    (never passed on half-decoded), and an undecodable coding among them
+    raises (the record loop's ``http:`` error row)."""
     html = "<div id=a>café &amp; x</div>".encode() * 9
+    if isinstance(ce, tuple):
+        block = _repeated_coding_block(html, ce)
+        if te is None:
+            assert http_response(block)[1] == html
+        else:
+            with pytest.raises(ValueError, match=te):
+                http_response(block)
+        return
     rec = build_warc_record(
         "http://e/", "2024-01-01T00:00:00Z", html,
         content_encoding=ce, transfer_encoding=te,
     )
     wtype, url, date, block = parse_warc_record(rec)
     assert wtype == "response"
-    assert http_body(block) == html
+    assert http_response(block)[1] == html
     if te == "chunked":  # chunked responses carry no Content-Length
         head = block.split(b"\r\n\r\n", 1)[0].lower()
         assert b"content-length" not in head
@@ -127,15 +160,15 @@ def test_http_body_undecodable_raises():
     )
     block = parse_warc_record(rec)[3]
     with pytest.raises(ValueError, match="unsupported coding 'br'"):
-        http_body(block)
+        http_response(block)
     # corrupt gzip payload under a gzip header
     with pytest.raises(ValueError, match="gzip payload"):
-        http_body(
+        http_response(
             b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\nnot gzip"
         )
     # malformed chunk framing
     with pytest.raises(ValueError, match="chunked"):
-        http_body(
+        http_response(
             b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\nzz\r\nx"
         )
 
@@ -293,9 +326,6 @@ def test_warc_pages_shape_and_glob(spark, tmp_path):
     assert dict(pages.dtypes)["html"] == "binary"
     got = {r.url: bytes(r.html) for r in pages.collect()}
     assert got == {u: h for (u, _d, h) in DOCS}
-    # io passthrough: stream mode yields the same pages
-    streamed = warc_pages(spark, str(tmp_path / "*.warc.gz"), io="stream")
-    assert {r.url: bytes(r.html) for r in streamed.collect()} == got
 
 
 def test_warc_to_extract_byte_identical(spark, tmp_path, ref):
@@ -330,7 +360,11 @@ def test_record_batches_byte_bounded(tmp_path, monkeypatch):
     import pyarrow as pa
 
     from dhtmlparser3_spark.functions import extract as fx
-    from dhtmlparser3_spark.sources.warc import _records_arrow_iterator
+    from dhtmlparser3_spark.sources.warc import (
+        _OUT_TYPES,
+        _response_row,
+        _scan_iterator,
+    )
 
     unit = b"<p>big &amp; body</p>"
     docs = [
@@ -340,12 +374,11 @@ def test_record_batches_byte_bounded(tmp_path, monkeypatch):
     ]
     path = str(tmp_path / "big.warc.gz")
     write_warc_gz(docs, path)
-    rb = pa.RecordBatch.from_pydict(
-        {"path": [path], "content": [open(path, "rb").read()]}
-    )
+    rb = pa.RecordBatch.from_pydict({"path": [path]})
 
     def run():
-        return list(_records_arrow_iterator(2048)(iter([rb])))
+        it = _scan_iterator("response", _response_row, _OUT_TYPES, 2048)
+        return list(it(iter([rb])))
 
     bounded = run()
     monkeypatch.setattr(fx, "_WORKER_BATCH_BYTES", 1 << 40)
@@ -369,7 +402,7 @@ def test_ranged_record_batches_byte_bounded(tmp_path, monkeypatch):
     import pyarrow as pa
 
     from dhtmlparser3_spark.functions import extract as fx
-    from dhtmlparser3_spark.sources.warc import _ranged_arrow_iterator
+    from dhtmlparser3_spark.sources.warc import _fetch_iterator
 
     unit = b"<p>big &amp; body</p>"
     docs = [
@@ -384,7 +417,7 @@ def test_ranged_record_batches_byte_bounded(tmp_path, monkeypatch):
     )
 
     def run():
-        return list(_ranged_arrow_iterator(2048)(iter([rb])))
+        return list(_fetch_iterator(2048)(iter([rb])))
 
     bounded = run()
     monkeypatch.setattr(fx, "_WORKER_BATCH_BYTES", 1 << 40)
@@ -483,27 +516,32 @@ def test_read_warc_at_matches_full_scan(spark, tmp_path):
 
 
 def test_read_warc_at_error_rows(spark, tmp_path):
+    import os
+
     from dhtmlparser3_spark.sources.warc import read_warc_at
 
     path = str(tmp_path / "err.warc.gz")
     info = build_warc_record("", "2024-01-01T00:00:00Z", b"x", "warcinfo")
     offs = write_warc_gz(DOCS[:1], path, extra_members=[
         gzip.compress(info, mtime=0)])
+    size = os.path.getsize(path)
     idx = spark.createDataFrame(
         [
             (path, offs[0]),            # good
             (path, offs[1]),            # warcinfo: not a response
             (path, 7),                  # mid-member garbage offset
+            (path, size),               # end of file: no record there
             (str(tmp_path / "gone.warc.gz"), 0),  # missing file
         ],
         "src_file string, rec_offset bigint",
     )
     rows = read_warc_at(idx).collect()
-    assert len(rows) == 4
+    assert len(rows) == 5
     by_key = {(r.src_file, r.rec_offset): r for r in rows}
     assert by_key[(path, offs[0])].error is None
     assert "not a response" in by_key[(path, offs[1])].error
     assert by_key[(path, 7)].error.startswith("fetch:")
+    assert by_key[(path, size)].error == f"fetch: no record at offset {size}"
     assert by_key[(str(tmp_path / "gone.warc.gz"), 0)].error.startswith(
         "fetch:"
     )
@@ -546,7 +584,7 @@ def test_warc_lineage_resume_composition(spark, tmp_path):
 def test_http_decode_roundtrip_property():
     """Hypothesis: for ARBITRARY payload bytes, any supported wire coding
     composition round-trips byte-identically through build → parse →
-    http_body — the decode layer can never alter the bytes entering
+    http_response — the decode layer can never alter the bytes entering
     parse()."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -565,7 +603,7 @@ def test_http_decode_roundtrip_property():
         )
         wtype, _u, _d, block = parse_warc_record(rec)
         assert wtype == "response"
-        assert http_body(block) == payload
+        assert http_response(block)[1] == payload
 
     check()
 
@@ -635,7 +673,7 @@ def test_read_warc_plain_matches_gz(spark, tmp_path):
     """The same records through both layouts (uncompressed .warc = wget/
     warcio default, per-record-gzip .warc.gz = Common Crawl) yield the
     same decoded rows, in the same one-glob read; offsets key each
-    layout's own random-access scheme.  io='stream' parity included."""
+    layout's own random-access scheme."""
     from dhtmlparser3_spark.sources.warc import (
         read_warc_at,
         write_warc_plain,
@@ -660,8 +698,6 @@ def test_read_warc_plain_matches_gz(spark, tmp_path):
     got_plain = rows(read_warc(spark, plain))
     assert got_plain == rows(read_warc(spark, gz))
     assert all(e is None for (_u, _h, _t, e) in got_plain)
-    # stream io over the plain layout: identical rows
-    assert rows(read_warc(spark, plain, io="stream")) == got_plain
     # mixed-layout glob reads both files in one scan
     assert len(read_warc(spark, str(tmp_path / "*.warc*")).collect()) == 6
 
@@ -689,11 +725,6 @@ def test_read_warc_plain_error_policy(spark, tmp_path):
     assert [r.url for r in ok] == [u for (u, _d, _h) in DOCS[:2]]
     assert len(errs) == 1
     assert errs[0].error.startswith("warc:") and "scan ended" in errs[0].error
-    # stream mode: same policy through the shared record loop
-    srows = read_warc(spark, path, io="stream").orderBy("rec_offset").collect()
-    assert [(r.url, r.error and r.error.split(":")[0]) for r in srows] == [
-        (r.url, r.error and r.error.split(":")[0]) for r in rows
-    ]
 
 
 # --- CDX index format (the published random-access contract) -----------------
@@ -767,7 +798,11 @@ def test_warc_structural_fuzz_error_policy(spark, tmp_path):
     fails a task; every clean row decodes byte-identically to its source
     document; members strictly before the first corrupted member are
     always present; error rows carry only the documented prefixes; a
-    corrupt member ends only ITS file's scan."""
+    corrupt member ends only ITS file's scan.  The CDX indexer runs over
+    the same shards under the same invariants (headers only, so no
+    ``http:`` rows), with the writer's offsets on the early members."""
+    from dhtmlparser3_spark.sources.warc import index_warc
+
     import gzip as _gz
     import random
 
@@ -848,47 +883,93 @@ def test_warc_structural_fuzz_error_policy(spark, tmp_path):
         if warc_err:
             assert any(r.error.startswith("warc:") for r in errs), fname
 
+    idx_rows = index_warc(spark, str(tmp_path / "fuzz-*.warc.gz")).collect()
+    idx_by_file: dict = {}
+    for r in idx_rows:
+        idx_by_file.setdefault(r.src_file.rsplit("/", 1)[-1], []).append(r)
+    for fname, (must_have, warc_err) in expect.items():
+        rs = idx_by_file.get(fname, [])
+        indexed = {r.url: r.rec_offset for r in rs if r.error is None}
+        first_bad = min(set(range(len(offsets))) - set(must_have))
+        for j in must_have:
+            assert docs[j][0] in indexed, (fname, j, sorted(indexed))
+            if j < first_bad:  # bytes before the corruption are unmoved
+                assert indexed[docs[j][0]] == offsets[j], (fname, j)
+        for r in rs:
+            if r.error is not None:
+                assert r.error.split(":")[0] in ("gzip", "warc"), r.error
+        if warc_err:
+            assert any(
+                r.error is not None and r.error.startswith("warc:") for r in rs
+            ), fname
 
-# --- streaming io mode (read_warc io="stream") --------------------------------
+
+# --- the one byte transport: path-only scan, incremental decompress ----------
 
 
 def test_stream_gzip_members_matches_split(tmp_path):
     """Incremental decompress == whole-buffer split: same offsets, same
     payloads, exercised with a tiny read chunk so members span many reads
-    and member boundaries land mid-buffer."""
+    and member boundaries land mid-buffer; the extents tile the blob."""
     import io
 
-    from dhtmlparser3_spark.sources.warc import stream_gzip_members
+    from dhtmlparser3_spark.sources.warc import stream_gzip_extents
 
     payloads = [b"a" * 5000, b"b", b"", b"mixed \x00\xff" * 300]
     blob = b"".join(gzip.compress(p, mtime=0) for p in payloads)
     want = list(split_gzip_members(blob))
-    got = list(stream_gzip_members(io.BytesIO(blob), chunk_bytes=7))
-    assert got == want
+    got = list(stream_gzip_extents(io.BytesIO(blob), chunk_bytes=7))
+    assert [(off, raw) for off, _n, raw in got] == want
+    assert [off + n for off, n, _raw in got] == [
+        off for off, _raw in want[1:]
+    ] + [len(blob)]
 
 
 def test_stream_gzip_members_truncated_raises(tmp_path):
     import io
 
-    from dhtmlparser3_spark.sources.warc import stream_gzip_members
+    from dhtmlparser3_spark.sources.warc import stream_gzip_extents
 
     blob = gzip.compress(b"ok", mtime=0) + gzip.compress(b"cut", mtime=0)[:-3]
-    it = stream_gzip_members(io.BytesIO(blob), chunk_bytes=5)
-    assert next(it)[1] == b"ok"
+    it = stream_gzip_extents(io.BytesIO(blob), chunk_bytes=5)
+    assert next(it)[2] == b"ok"
     with pytest.raises(zlib.error):
         list(it)
 
 
+def _scan_columns(plan) -> set:
+    """Output column names of a physical plan's leaves (the scan nodes):
+    a PROPERTY of the plan, not its rendered string (which changes
+    across Spark versions)."""
+    leaves = plan.collectLeaves()
+    cols = set()
+    for i in range(leaves.size()):
+        out = leaves.apply(i).output()
+        cols |= {out.apply(j).name() for j in range(out.size())}
+    return cols
+
+
 def test_read_warc_stream_parity(spark, tmp_path):
-    """io='stream' and io='content' produce identical rows — clean files
-    AND the error-policy file (corrupt member ends the file's scan in
-    both modes, via the shared record loop)."""
-    clean = str(tmp_path / "c.warc.gz")
+    """The streaming source gives the batch reader's rows — clean files
+    AND the error-policy file (a corrupt member ends the file's scan in
+    both, via the one member loop) — and every WARC-layout reader, batch
+    or streaming, scans only the ``path`` column of its file listing:
+    shard bytes never cross the JVM, each worker opens its shards."""
+    from dhtmlparser3_spark.sources.warc import (
+        index_warc,
+        read_warc_revisits,
+        read_warc_stream,
+    )
+    from dhtmlparser3_spark.sources.wat import read_wat
+    from dhtmlparser3_spark.sources.wet import read_wet
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    clean = str(in_dir / "c.warc.gz")
     write_warc_gz(DOCS, clean)
-    bad = str(tmp_path / "b.warc.gz")
     write_warc_gz(
         DOCS[:1],
-        bad,
+        str(in_dir / "b.warc.gz"),
         extra_members=[
             gzip.compress(
                 b"WARC/1.0\r\nWARC-Type: response\r\n\r\nx", mtime=0
@@ -897,8 +978,7 @@ def test_read_warc_stream_parity(spark, tmp_path):
         ],
     )
 
-    def rows(io_mode):
-        df = read_warc(spark, str(tmp_path / "*.warc.gz"), io=io_mode)
+    def rows(df):
         return sorted(
             (
                 r.src_file,
@@ -911,23 +991,39 @@ def test_read_warc_stream_parity(spark, tmp_path):
             for r in df.collect()
         )
 
-    assert rows("stream") == rows("content")
-    # and the stream plan reads NO content column: the physical binaryFile
-    # scan is pruned to the path listing.  Asserted as a PROPERTY of the
-    # scan node's output attributes, not the rendered plan string (which
-    # changes across Spark versions).
-    def scan_columns(df):
-        leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
-        cols = set()
-        for i in range(leaves.size()):
-            out = leaves.apply(i).output()
-            cols |= {out.apply(j).name() for j in range(out.size())}
-        return cols
+    q = (
+        read_warc_stream(spark, str(in_dir))
+        .writeStream.format("memory")
+        .queryName("warc_stream_parity")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        streamed = rows(spark.table("warc_stream_parity"))
+        stream_plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    finally:
+        q.stop()
+    want = rows(read_warc(spark, str(in_dir / "*.warc.gz")))
+    assert streamed == want
+    assert sum(1 for r in want if r[5] is not None) == 2  # warc: + gzip:
 
-    streamed_cols = scan_columns(read_warc(spark, clean, io="stream"))
-    assert "path" in streamed_cols and "content" not in streamed_cols
-    # the content mode DOES read the bytes through the JVM
-    assert "content" in scan_columns(read_warc(spark, clean, io="content"))
+    assert "content" not in _scan_columns(stream_plan)
+    for read in (read_warc, read_warc_revisits, index_warc, read_wet, read_wat):
+        plan = read(spark, clean)._jdf.queryExecution().executedPlan()
+        cols = _scan_columns(plan)
+        assert "path" in cols and "content" not in cols, read.__name__
+
+
+def test_read_warc_refuses_non_local_paths(spark):
+    """Workers open() the listed shards, so a path with another URI scheme
+    is refused on the driver with a ValueError before any Spark job runs
+    (instead of one ``gzip:`` error row per file)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    with pytest.raises(ValueError, match="only local paths"):
+        read_warc(spark, "hdfs://nn/x/*.warc.gz")
+    assert set(tracker.getJobIdsForGroup()) <= before
 
 
 # --- charset detection + transcode (the decode half of the wire) -------------
@@ -1082,7 +1178,7 @@ def test_charset_probes_match_reference(spark, tmp_path):
     )
 
     # (1) constants vs the reference, straight through parse_warc_record +
-    # http_payload + transcode (the exact worker decode path)
+    # http_response + transcode (the exact worker decode path)
     import gzip as _gz
 
     path = str(tmp_path / "probes.warc.gz")
@@ -1173,7 +1269,7 @@ def test_index_warc_exact_extents(spark, tmp_path):
     """index_warc publishes each response record's exact on-disk byte
     extent: offsets equal the writer's member offsets, extents tile the
     file exactly (offset[k] + length[k] == offset[k+1], last member ends
-    at EOF), and both io modes agree."""
+    at EOF)."""
     import os as _os
 
     from dhtmlparser3_spark.sources.warc import index_warc
@@ -1189,17 +1285,12 @@ def test_index_warc_exact_extents(spark, tmp_path):
         off: (offsets + [size])[i + 1] - off for i, off in enumerate(offsets)
     }
 
-    for io_mode in ("content", "stream"):
-        rows = (
-            index_warc(spark, path, io=io_mode)
-            .orderBy("rec_offset")
-            .collect()
-        )
-        assert [r.error for r in rows] == [None] * len(DOCS)  # warcinfo skipped
-        assert [r.url for r in rows] == [d[0] for d in DOCS]
-        assert [r.warc_date for r in rows] == [d[1] for d in DOCS]
-        for r in rows:
-            assert r.rec_length == want_extent[r.rec_offset], io_mode
+    rows = index_warc(spark, path).orderBy("rec_offset").collect()
+    assert [r.error for r in rows] == [None] * len(DOCS)  # warcinfo skipped
+    assert [r.url for r in rows] == [d[0] for d in DOCS]
+    assert [r.warc_date for r in rows] == [d[1] for d in DOCS]
+    for r in rows:
+        assert r.rec_length == want_extent[r.rec_offset]
 
 
 def test_index_warc_plain_layout_extents(spark, tmp_path):
@@ -1241,6 +1332,20 @@ def test_index_warc_error_policy(spark, tmp_path):
     assert len(errs) == 1 and errs[0].error.startswith("gzip: ")
     lines = cdx_lines(idx, shards=1).collect()
     assert len(lines) == 1 and DOCS[0][0] in lines[0].line
+
+
+def test_cdx_lines_microsecond_warc_date(spark, tmp_path):
+    """A WARC/1.1 microsecond ``WARC-Date`` keeps its capture time in the
+    CDX line (the one ``warc_ts`` parser), not the 1970 fallback."""
+    from dhtmlparser3_spark.sources.warc import cdx_lines, index_warc
+
+    path = str(tmp_path / "us.warc.gz")
+    write_warc_gz(
+        [("http://us.example/p", "2024-01-02T03:04:05.123456Z", b"<p>u</p>")],
+        path,
+    )
+    lines = cdx_lines(index_warc(spark, path), shards=1).collect()
+    assert [r.line.split(" ")[1] for r in lines] == ["20240102030405"]
 
 
 def test_write_cdx_roundtrip_sorted_fetchable(spark, tmp_path):
@@ -1577,8 +1682,8 @@ def test_frontier_redirect_discovery(spark, tmp_path):
 
 def test_read_warc_revisits(spark, tmp_path):
     """revisit records (the archive's own dedup markers) surface with
-    their back-references; read_warc skips them; both io modes and the
-    error policy match the response loop."""
+    their back-references; read_warc skips them; the error policy
+    matches the response loop."""
     from dhtmlparser3_spark.sources.warc import (
         read_warc_revisits,
         revisit_counts,
@@ -1633,13 +1738,6 @@ def test_read_warc_revisits(spark, tmp_path):
     # response reader still sees exactly the one response record
     resp = read_warc(spark, path).collect()
     assert [r.url for r in resp] == ["http://a.example/page"]
-
-    # io="stream" parity
-    stream_rows = sorted(
-        (r.rec_offset, r.url)
-        for r in read_warc_revisits(spark, path, io="stream").collect()
-    )
-    assert stream_rows == sorted((r.rec_offset, r.url) for r in rows)
 
     # dedup credit aggregation
     credit = {

@@ -162,6 +162,8 @@ def test_wat_roundtrip(spark, tmp_path):
 
 
 def test_wat_stream_io_and_determinism(spark, tmp_path):
+    """Same input partitioning → byte-identical WAT shards, which the
+    reader's path-only scan reads back as identical rows."""
     meta = _meta(spark).cache()
     try:
         d1, d2 = str(tmp_path / "w1"), str(tmp_path / "w2")
@@ -174,15 +176,16 @@ def test_wat_stream_io_and_determinism(spark, tmp_path):
     for a, b in zip(f1, f2):
         assert open(a, "rb").read() == open(b, "rb").read()
 
-    glob = os.path.join(d1, "*.warc.wat.gz")
-
-    def rows(io):
+    def rows(d):
         return sorted(
-            (r.src_file, r.rec_offset, r.url, r.title, r.error)
-            for r in read_wat(spark, glob, io=io).collect()
+            (os.path.basename(r.src_file), r.rec_offset, r.url, r.title,
+             r.error)
+            for r in read_wat(spark, os.path.join(d, "*.warc.wat.gz")).collect()
         )
 
-    assert rows("stream") == rows("content")
+    got = rows(d1)
+    assert got and all(r[4] is None for r in got)
+    assert got == rows(d2)
 
 
 def test_read_wat_error_policy(spark, tmp_path):
@@ -207,6 +210,20 @@ def test_read_wat_error_policy(spark, tmp_path):
     assert len(errs) == 2
     assert errs[0].startswith("gzip: ")  # truncated member ended the file
     assert errs[1].startswith("wat: ")  # bad envelope continued the scan
+
+
+def test_read_wat_microsecond_date(spark, tmp_path):
+    """A WARC/1.1 microsecond ``WARC-Date`` round-trips into ``wat_ts``
+    (the one ``warc_ts`` parser), not NULL."""
+    date = "2024-01-02T03:04:05.123456Z"
+    p = tmp_path / "us.warc.wat.gz"
+    p.write_bytes(gzip.compress(build_wat_record(
+        "http://us.example/", date,
+        _envelope_json("http://us.example/", date, "T", []),
+    ), mtime=0))
+    (row,) = read_wat(spark, str(p)).collect()
+    assert (row.url, row.title, row.error) == ("http://us.example/", "T", None)
+    assert row.wat_ts.isoformat() == "2024-01-02T03:04:05.123456"
 
 
 def test_wat_giant_docs_byte_bounded_slicing():

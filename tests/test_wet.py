@@ -80,18 +80,16 @@ def test_wet_roundtrip_byte_identical(spark, tmp_path):
     assert {r.url: (r.text, r.wet_ts) for r in got} == want
 
 
-def test_wet_stream_io_matches_content(spark, tmp_path):
-    dest = str(tmp_path / "wet")
-    write_wet(_extracted(spark), dest).collect()
-    glob = os.path.join(dest, "*.warc.wet.gz")
-
-    def rows(io):
-        return sorted(
-            (r.src_file, r.rec_offset, r.url, r.text, r.error)
-            for r in read_wet(spark, glob, io=io).collect()
-        )
-
-    assert rows("stream") == rows("content")
+def test_read_wet_microsecond_date(spark, tmp_path):
+    """A WARC/1.1 microsecond ``WARC-Date`` round-trips into ``wet_ts``
+    (the one ``warc_ts`` parser), not NULL."""
+    path = tmp_path / "us.warc.wet.gz"
+    path.write_bytes(gzip.compress(build_wet_record(
+        "http://us.example/", "2024-01-02T03:04:05.123456Z", b"text"
+    ), mtime=0))
+    (row,) = read_wet(spark, str(path)).collect()
+    assert (row.url, row.text, row.error) == ("http://us.example/", "text", None)
+    assert row.wet_ts.isoformat() == "2024-01-02T03:04:05.123456"
 
 
 def test_wet_write_deterministic(spark, tmp_path):
@@ -268,22 +266,24 @@ def test_streaming_warc_to_wet_exactly_once(spark, tmp_path):
         assert row.error is None
 
 
-@pytest.mark.parametrize("io", ["content", "stream"])
-def test_wet_record_batches_byte_bounded(tmp_path, monkeypatch, io):
+@pytest.mark.parametrize("listing", ["stream", "content"])
+def test_wet_record_batches_byte_bounded(tmp_path, monkeypatch, listing):
     """``read_wet``'s scan cuts its Arrow batches by ``text`` bytes as well
     as rows: ten ~1.2 MB WET records (far fewer than ``batch_rows``) come
     out in >=2 batches, each within the worker slice or a single row,
-    whose rows equal a run with the byte bound lifted.  No Spark."""
+    whose rows equal a run with the byte bound lifted.  No Spark.
+
+    ``stream`` feeds the scan the path-only listing it gets in the job.
+    ``content`` also hands it an unpruned ``binaryFile`` ``content``
+    column holding empty bytes: the scan still opens the path and reads
+    every record from the file, never from the column."""
     import pyarrow as pa
 
     from dhtmlparser3_spark.functions import extract as fx
-    from dhtmlparser3_spark.sources.warc import (
-        _records_arrow_iterator,
-        _stream_arrow_iterator,
-    )
+    from dhtmlparser3_spark.sources.warc import _scan_iterator
     from dhtmlparser3_spark.sources.wet import (
         _WET_TYPES,
-        _iter_wet_rows,
+        _wet_row,
         _write_shard,
     )
 
@@ -294,17 +294,13 @@ def test_wet_record_batches_byte_bounded(tmp_path, monkeypatch, io):
     ]
     path = str(tmp_path / "big.warc.wet.gz")
     _write_shard(path, iter(docs))
-    if io == "stream":
-        make = _stream_arrow_iterator
-        rb = pa.RecordBatch.from_pydict({"path": [path]})
-    else:
-        make = _records_arrow_iterator
-        rb = pa.RecordBatch.from_pydict(
-            {"path": [path], "content": [open(path, "rb").read()]}
-        )
+    cols = {"path": [path]}
+    if listing == "content":
+        cols["content"] = [b""]
+    rb = pa.RecordBatch.from_pydict(cols)
 
     def run():
-        it = make(2048, _iter_wet_rows, _WET_TYPES)
+        it = _scan_iterator("conversion", _wet_row, _WET_TYPES, 2048)
         return list(it(iter([rb])))
 
     bounded = run()
