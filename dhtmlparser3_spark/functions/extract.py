@@ -10,6 +10,10 @@ algorithm is the exact-parity engine (dhtmlparser3_spark.engine); errors
 (the reference raises on out-of-range numeric entities — chr(ValueError))
 become an error value instead of killing the job at 10^12-row scale.
 
+Every worker-side output column (this loop, WAT, sitemaps, the WARC
+readers) is a :class:`ColumnBuilder`, filled as each document is parsed.
+No worker loads pandas or ``pyarrow.compute``.
+
 Spans: per-text-node (src_start, src_end) offsets into the decoded html —
 ``html[src_start:src_end]`` is the raw slice each text node came from.
 """
@@ -22,7 +26,6 @@ from itertools import accumulate
 from typing import TYPE_CHECKING, Iterator, List
 
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from dhtmlparser3_spark.engine import serialize
 from dhtmlparser3_spark.engine.dom import Arena, parse_arena
@@ -120,20 +123,12 @@ def decode_html(raw) -> str:
     return str(raw)
 
 
-def flatten_nodes(a: Arena, fields=None):
-    """Arena → flat pre-order node records for the relational tier.
-
-    node_id == pre-order rank from the result root; ``subtree_end`` is one
-    past the last descendant, so descendant containment is the interval test
-    ``anc.node_id < d.node_id < anc.subtree_end`` — a Catalyst-friendly
-    range predicate (used for descendant joins instead of recursion).
-    Parents here are STRUCTURAL (recomputed), not the reference's sometimes
-    stale pointers.  ``fields`` (ordered subset of NODE_FIELD_TYPES) prunes
-    the per-node record — the big wins are dropping ``attrs`` and ``text``.
-    """
+def _preorder(a: Arena):
+    """The node tables' walk: (arena ids in pre-order, depths, structural
+    parents as pre-order ranks, subtree ends)."""
     order: List[int] = []
     depths: List[int] = []
-    parents: List[int] = []  # structural parent as pre-order rank
+    parents: List[int] = []
     rank = {}
     stack = [(a.result_root, 0, -1)]
     while stack:
@@ -145,18 +140,27 @@ def flatten_nodes(a: Arena, fields=None):
         if a.kind[nid] == TAG:
             for ch in reversed(a.children[nid]):
                 stack.append((ch, depth + 1, rank[nid]))
-
-    n = len(order)
-    sub_end = [0] * n
-    # subtree_end: walk ranks backwards keeping a stack of open ancestors
-    for i in range(n - 1, -1, -1):
-        sub_end[i] = i + 1
-    # propagate: a parent's subtree extends to max(subtree_end of children)
-    for i in range(n - 1, 0, -1):
+    # a parent's subtree extends to max(subtree_end of its children)
+    sub_end = list(range(1, len(order) + 1))
+    for i in range(len(order) - 1, 0, -1):
         p = parents[i]
         if sub_end[i] > sub_end[p]:
             sub_end[p] = sub_end[i]
+    return order, depths, parents, sub_end
 
+
+def flatten_nodes(a: Arena, fields=None):
+    """Arena → flat pre-order node records for the relational tier.
+
+    node_id == pre-order rank from the result root; ``subtree_end`` is one
+    past the last descendant, so descendant containment is the interval test
+    ``anc.node_id < d.node_id < anc.subtree_end`` — a Catalyst-friendly
+    range predicate (used for descendant joins instead of recursion).
+    Parents here are STRUCTURAL (recomputed), not the reference's sometimes
+    stale pointers.  ``fields`` (ordered subset of NODE_FIELD_TYPES) prunes
+    the per-node record — the big wins are dropping ``attrs`` and ``text``.
+    """
+    order, depths, parents, sub_end = _preorder(a)
     makers = {
         "node_id": lambda i, nid: i,
         "parent_id": lambda i, nid: parents[i],
@@ -181,33 +185,13 @@ def flatten_nodes(a: Arena, fields=None):
 
 def append_nodes_columns(a: Arena, cols: dict) -> int:
     """flatten_nodes with COLUMNAR output: append this document's pre-order
-    node records to per-field flat lists (the node iterator builds one
-    StructArray per batch from them — no per-node Python dicts).  Same
-    walk, same numbering, same values as flatten_nodes; parity pinned by
+    node records to per-field flat lists (the node iterator appends them
+    to its column builders — no per-node Python dicts).  Same walk, same
+    numbering, same values as flatten_nodes; parity pinned by
     tests/test_relational_differential.py::test_node_table_arrow_parity.
     Returns the number of nodes appended."""
-    order: List[int] = []
-    depths: List[int] = []
-    parents: List[int] = []
-    rank = {}
-    stack = [(a.result_root, 0, -1)]
-    while stack:
-        nid, depth, par = stack.pop()
-        rank[nid] = len(order)
-        order.append(nid)
-        depths.append(depth)
-        parents.append(par)
-        if a.kind[nid] == TAG:
-            for ch in reversed(a.children[nid]):
-                stack.append((ch, depth + 1, rank[nid]))
-
+    order, depths, parents, sub_end = _preorder(a)
     n = len(order)
-    sub_end = list(range(1, n + 1))
-    for i in range(n - 1, 0, -1):
-        p = parents[i]
-        if sub_end[i] > sub_end[p]:
-            sub_end[p] = sub_end[i]
-
     for f, out in cols.items():
         if f == "node_id":
             out.extend(range(n))
@@ -356,11 +340,10 @@ def extract_series(html: pd.Series) -> pd.DataFrame:
 
 
 # worker-side byte bound per processed slice — the Python worker's working
-# set.  While a slice is parsed the kernel holds every document's output
-# objects (extracted and main text, span dicts, the Arrow arrays built from
-# them: ~10x the html bytes), so the slice, not the input batch, sets the
-# worker's peak.  The same constant bounds the input batch: the
-# spark-submit job (jobs/extract_job_main.py) sets
+# set.  While a slice is parsed the kernel holds its unboxed html and the
+# output built so far (packed column buffers), so the slice, not the input
+# batch, sets the worker's peak.  The same constant bounds the input batch:
+# the spark-submit job (jobs/extract_job_main.py) sets
 # spark.sql.execution.arrow.maxBytesPerBatch to it unless the submitter's
 # conf names that key, plans/session.get_spark sets it for every session
 # it builds, and the WARC record batcher
@@ -399,80 +382,205 @@ def arrow_slices(batches, column: str, max_slice_bytes: int | None = None):
     output batch."""
     bound = _WORKER_BATCH_BYTES if max_slice_bytes is None else max_slice_bytes
     for whole in batches:
-        sizes = pc.binary_length(whole.column(column)).to_pylist()
-        for start, length in byte_slices(
-            [s or 0 for s in sizes], bound
-        ) or [(0, 0)]:
+        sizes = _byte_lengths(whole.column(column))
+        for start, length in byte_slices(sizes, bound) or [(0, 0)]:
             yield whole if length == whole.num_rows else whole.slice(start, length)
 
 
-# array typecode per fixed-width Arrow integer type built by arrow_column
-_INT_CODES = {pa.int8(): "b", pa.int32(): "i", pa.int64(): "q"}
+def _byte_lengths(col: pa.Array) -> list:
+    """Byte length of each value of a binary/string array, read from its
+    offsets buffer (``col.offset`` respected; a NULL counts 0) rather
+    than with ``pyarrow.compute``, which no worker loads."""
+    n = len(col)
+    if not n:
+        return []
+    width = 8 if col.type in (pa.large_binary(), pa.large_string()) else 4
+    raw = memoryview(col.buffers()[1])[col.offset * width :]
+    ends = raw[: (n + 1) * width].cast("q" if width == 8 else "i").tolist()
+    sizes = [e - s for s, e in zip(ends, ends[1:])]
+    if col.null_count:
+        bits = int.from_bytes(col.buffers()[0], "little") >> col.offset
+        valid = format(bits & ((1 << n) - 1), f"0{n}b")[::-1]
+        sizes = [s if v == "1" else 0 for s, v in zip(sizes, valid)]
+    return sizes
 
 
-def _bitmap(flags) -> pa.Buffer:
-    """Bit-packed Arrow buffer of a sequence of truthy/falsy flags (one
-    byte per flag in, one bit per flag out; the packing is Arrow's cast)."""
-    u8 = pa.Array.from_buffers(
-        pa.uint8(), len(flags), [None, pa.py_buffer(bytes(map(bool, flags)))]
-    )
-    return u8.cast(pa.bool_()).buffers()[1]
+# array typecode per fixed-width Arrow type a ColumnBuilder packs (a bool
+# takes one byte until finish packs the bits)
+_CODES = {pa.int8(): "b", pa.int32(): "i", pa.int64(): "q", pa.bool_(): "b"}
+_ASCII_BITS = bytes.maketrans(b"\x00\x01", b"01")
+
+
+def _bits(flags) -> pa.Buffer:
+    """Arrow's bit-packed buffer of one 0/1 byte per flag (flag i = bit
+    i % 8 of byte i // 8): the flags as binary digits, last first, read as
+    one integer.  No ``pyarrow.compute`` (a cast to bool loads it)."""
+    digits = bytes(flags).translate(_ASCII_BITS)[::-1] or b"0"
+    return pa.py_buffer(int(digits, 2).to_bytes((len(flags) + 7) // 8, "little"))
+
+
+class ColumnBuilder:
+    """An Arrow array of one type, filled as the values come: string,
+    binary, int8/32/64, bool, and lists and structs (dicts) of those;
+    ``None`` is NULL.  Made by :func:`column_builder`.
+
+    A worker loop appends each document's output as soon as it has it,
+    so a slice holds it once, as ``bytearray``/``array`` buffers that
+    :meth:`finish` hands to ``pa.Array.from_buffers`` without a copy; no
+    pandas (``pa.array`` loads it: ~35 MB RSS and ~0.4 s per worker) and
+    no ``pyarrow.compute``.  A write has two steps:
+    ``encode_many`` turns values into what the buffers take (``str`` to
+    UTF-8, recursively) and writes nothing, so a lone surrogate's
+    ``UnicodeEncodeError`` leaves the builder as it was; ``put_many``
+    writes.  Past 2 GiB of bytes a column raises ``OverflowError``."""
+
+    def __init__(self, type: pa.DataType):
+        self.type, self.n, self.kids = type, 0, []
+        self.valid = None  # one 0/1 byte per value, from the first NULL on
+
+    def encode_many(self, values):
+        return values
+
+    def append(self, value) -> None:
+        self.put_many(self.encode_many((value,)))
+
+    def _count(self, values) -> None:
+        if self.valid is None and None in values:
+            self.valid = bytearray(b"\x01") * self.n
+        if self.valid is not None:
+            self.valid += bytes([v is not None for v in values])
+        self.n += len(values)
+
+    def _buffers(self) -> list:
+        return []
+
+    def finish(self) -> pa.Array:
+        """The array of everything appended; the builder is done."""
+        nulls = 0 if self.valid is None else self.n - self.valid.count(1)
+        bufs = [_bits(self.valid) if nulls else None] + self._buffers()
+        kids = [k.finish() for k in self.kids]
+        return pa.Array.from_buffers(self.type, self.n, bufs, nulls, children=kids)
+
+
+class _Bytes(ColumnBuilder):
+    def __init__(self, type):
+        super().__init__(type)
+        self.utf8 = pa.types.is_string(type)
+        self.offsets, self.data = array.array("i", [0]), bytearray()
+
+    def encode_many(self, values):
+        if not self.utf8:
+            return values
+        return [None if v is None else v.encode("utf-8") for v in values]
+
+    def put_many(self, parts):
+        self._count(parts)
+        for p in parts:
+            if p is not None:
+                self.data += p
+            self.offsets.append(len(self.data))
+
+    def _buffers(self):
+        return [pa.py_buffer(self.offsets), pa.py_buffer(self.data)]
+
+
+class _Fixed(ColumnBuilder):
+    def __init__(self, type):
+        super().__init__(type)
+        self.data = array.array(_CODES[type])
+
+    def put_many(self, values):
+        self._count(values)
+        self.data.extend(
+            [0 if v is None else v for v in values] if None in values else values
+        )
+
+    def _buffers(self):
+        boolean = self.type == pa.bool_()
+        return [_bits(self.data) if boolean else pa.py_buffer(self.data)]
+
+
+class _List(ColumnBuilder):
+    def __init__(self, type):
+        super().__init__(type)
+        self.offsets = array.array("i", [0])
+        self.kids = [column_builder(type.value_type)]
+
+    def encode_many(self, values):
+        if len(values) == 1 and isinstance(values[0], dict):
+            # one list of structs given column-wise, {field: [values]}:
+            # the node table's form (no per-node dicts)
+            n = len(next(iter(values[0].values())))
+            return [n], self.kids[0].encode_many(values[0])
+        lens = [None if v is None else len(v) for v in values]
+        flat = [x for v in values if v is not None for x in v]
+        return lens, self.kids[0].encode_many(flat)
+
+    def put_many(self, enc):
+        lens, items = enc
+        self._count(lens)
+        self.kids[0].put_many(items)
+        self.offsets.extend(
+            accumulate((n or 0 for n in lens), initial=self.offsets.pop())
+        )
+
+    def _buffers(self):
+        return [pa.py_buffer(self.offsets)]
+
+
+class _Struct(ColumnBuilder):
+    def __init__(self, type):
+        super().__init__(type)
+        self.names = [f.name for f in type]
+        self.kids = [column_builder(f.type) for f in type]
+
+    def encode_many(self, values):
+        pairs = zip(self.names, self.kids)
+        if isinstance(values, dict):  # column-wise, see _List.encode_many
+            n = len(next(iter(values.values())))
+            return [0] * n, [k.encode_many(values[f]) for f, k in pairs]
+        return values, [
+            k.encode_many([None if v is None else v.get(f) for v in values])
+            for f, k in pairs
+        ]
+
+    def put_many(self, enc):
+        values, items = enc
+        self._count(values)
+        for k, part in zip(self.kids, items):
+            k.put_many(part)
+
+
+def column_builder(type: pa.DataType) -> ColumnBuilder:
+    """A :class:`ColumnBuilder` for ``type`` (``TypeError`` for a type it
+    does not build)."""
+    if pa.types.is_string(type) or pa.types.is_binary(type):
+        return _Bytes(type)
+    if type in _CODES:
+        return _Fixed(type)
+    if pa.types.is_list(type):
+        return _List(type)
+    if pa.types.is_struct(type):
+        return _Struct(type)
+    raise TypeError(f"column_builder: unsupported type {type}")
+
+
+def append_rows(cols, rows) -> None:
+    """Append row tuples to ``cols`` (one builder per field), all or
+    nothing: every column is encoded before any is written."""
+    if rows:
+        enc = [c.encode_many(v) for c, v in zip(cols, zip(*rows))]
+        for c, e in zip(cols, enc):
+            c.put_many(e)
 
 
 def arrow_column(values, type: pa.DataType) -> pa.Array:
-    """Typed Arrow array of Python ``values`` (``None`` = null), built
-    from buffers: equal to what ``pa.array`` builds from ``values`` and
-    ``type`` for the types the workers emit — string, binary, int8/32/64,
-    bool, and lists and structs (dicts) of those, recursively.
-
-    The point is what it does not load.  pyarrow's ``pa.array`` (and
-    ``pa.scalar``) probes its input with pandas' ``is_array_like``, which
-    imports pandas: ~35 MB of RSS and ~0.4 s per Python worker.  Here
-    the offsets and values are packed with the stdlib (``array``,
-    ``bytes.join``) and handed to ``pa.Array.from_buffers``, which never
-    touches pandas.  A ``str`` that is not valid UTF-8 (a lone surrogate)
-    raises ``UnicodeEncodeError``, as ``pa.array`` does; a column past
-    2 GiB of bytes raises ``OverflowError`` (int32 offsets)."""
-    n = len(values)
-    nulls = values.count(None)
-    validity = _bitmap([v is not None for v in values]) if nulls else None
-    if pa.types.is_string(type) or pa.types.is_binary(type):
-        if pa.types.is_string(type):
-            parts = [b"" if v is None else v.encode("utf-8") for v in values]
-        else:
-            parts = [b"" if v is None else v for v in values]
-        offsets = array.array("i", accumulate(map(len, parts), initial=0))
-        buffers = [validity, pa.py_buffer(offsets), pa.py_buffer(b"".join(parts))]
-    elif type in _INT_CODES:
-        data = array.array(
-            _INT_CODES[type], [0 if v is None else v for v in values]
-        )
-        buffers = [validity, pa.py_buffer(data)]
-    elif pa.types.is_boolean(type):
-        buffers = [validity, _bitmap(values)]
-    elif pa.types.is_list(type):
-        offsets = array.array(
-            "i",
-            accumulate((0 if v is None else len(v) for v in values), initial=0),
-        )
-        flat = [x for v in values if v is not None for x in v]
-        return pa.Array.from_buffers(
-            type, n, [validity, pa.py_buffer(offsets)], nulls,
-            children=[arrow_column(flat, type.value_type)],
-        )
-    elif pa.types.is_struct(type):
-        children = [
-            arrow_column(
-                [None if v is None else v.get(f.name) for v in values], f.type
-            )
-            for f in type
-        ]
-        return pa.Array.from_buffers(
-            type, n, [validity], nulls, children=children
-        )
-    else:
-        raise TypeError(f"arrow_column: unsupported type {type}")
-    return pa.Array.from_buffers(type, n, buffers, nulls)
+    """``pa.array(values, type)`` for the types the workers emit, built
+    by one :class:`ColumnBuilder` (so without loading pandas); a lone
+    surrogate in a ``str`` raises ``UnicodeEncodeError``, as there."""
+    b = column_builder(type)
+    b.put_many(b.encode_many(values))
+    return b.finish()
 
 
 def make_extract_iterator(
@@ -526,78 +634,52 @@ def make_extract_iterator(
     return run
 
 
-def _encodable(values, build, poison):
-    """``values`` with every document whose output cannot be encoded as
-    UTF-8 replaced by ``poison("UnicodeEncodeError: …")``.  The engine
-    keeps the reference's ``chr()`` semantics, so a numeric entity in the
-    surrogate range (``&#55296;``) yields a lone surrogate that no Arrow
-    string can hold; per the error-row policy that is one error row, not
-    a failed slice.  Only called once a whole-slice build has failed."""
-    out = []
-    for v in values:
-        try:
-            build([v])
-        except UnicodeEncodeError as e:
-            v = poison(f"UnicodeEncodeError: {e}")
-        out.append(v)
-    return out
-
-
 def make_parse_iterator(
     per_doc,
     fields,
     passthrough=("url", "warc_ts", "lang"),
     max_slice_bytes: int | None = None,
-    build=None,
-    poison=None,
 ):
     """The one mapInArrow batch loop of the parse family: RecordBatches
     with an ``html`` column → RecordBatches of (passthrough…, fields…).
 
     Per byte-bounded slice (:func:`arrow_slices`) the html column is
-    unboxed once at the C level, ``per_doc`` runs on every decoded
+    unboxed once at the C level and ``per_doc`` runs on every decoded
     document with the cyclic GC off (alloc-heavy build loop, parity with
-    parser.py:38), the output columns are built directly as typed Arrow
-    arrays (:func:`arrow_column`) and the passthrough columns are
-    re-emitted zero-copy — no pandas on either side of the boundary, and
-    none loaded in the worker.  ``per_doc`` never raises: a poison page
-    becomes an error value, never a task failure, and so does a document
-    whose output is not encodable as UTF-8 (:func:`_encodable`).
+    parser.py:38).  Each document's row goes into the slice's
+    :class:`ColumnBuilder` columns as soon as ``per_doc`` returns it; the
+    passthrough columns are re-emitted zero-copy.  No pandas anywhere.
 
-    ``fields`` is ``[(name, pa.DataType)]``.  By default ``per_doc``
-    returns one tuple per document whose i-th slot fills field i, and an
-    error value is the tuple with the message in every field whose name
-    ends in ``error`` and NULL elsewhere; ``build(values) -> [pa.Array]``
-    and ``poison(message) -> value`` replace those for outputs assembled
-    another way (the node table)."""
+    ``fields`` is ``[(name, pa.DataType)]`` and ``per_doc`` returns one
+    tuple per document whose i-th slot fills field i.  ``per_doc`` never
+    raises: a poison page becomes an error value, never a task failure.
+    So does a row that is not encodable as UTF-8 (the engine keeps the
+    reference's ``chr()``, so ``&#55296;`` yields a lone surrogate): it
+    is replaced by ``UnicodeEncodeError: …`` in every field whose name
+    ends in ``error`` and NULL elsewhere."""
     names = list(passthrough) + [f for f, _ in fields]
-    if build is None:
-        types = [t for _, t in fields]
+    types = [t for _, t in fields]
 
-        def build(rows):
-            cols = list(zip(*rows)) if rows else [()] * len(types)
-            return [arrow_column(c, t) for c, t in zip(cols, types)]
-
-    if poison is None:
-
-        def poison(msg):
-            return tuple(msg if f.endswith("error") else None for f, _ in fields)
+    def poison(msg):
+        return tuple(msg if f.endswith("error") else None for f, _ in fields)
 
     def run(batches):
         for rb in arrow_slices(batches, "html", max_slice_bytes):
-            htmls = rb.column("html").to_pylist()
+            cols = [column_builder(t) for t in types]
             gc_was_enabled = gc.isenabled()
             gc.disable()
             try:
-                values = [per_doc(decode_html(h)) for h in htmls]
+                for h in rb.column("html").to_pylist():
+                    row = per_doc(decode_html(h))
+                    try:
+                        append_rows(cols, [row])
+                    except UnicodeEncodeError as e:
+                        append_rows(cols, [poison(f"UnicodeEncodeError: {e}")])
             finally:
                 if gc_was_enabled:
                     gc.enable()
-            try:
-                out = build(values)
-            except UnicodeEncodeError:
-                out = build(_encodable(values, build, poison))
-            arrays = [rb.column(c) for c in passthrough] + out
+            arrays = [rb.column(c) for c in passthrough]
+            arrays += [c.finish() for c in cols]
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     return run
@@ -653,47 +735,24 @@ def make_nodes_arrow_iterator(
     """mapInArrow function for the relational tier: RecordBatches of pages
     → (passthrough…, nodes array<struct<…>>) RecordBatches.
 
-    The per-slice node struct is assembled as flat Arrow child arrays +
-    one offsets vector (null offset = unparseable doc → NULL nodes row).
-    Node records are several times the html size, so the byte-bounded
-    slices are what keep a batch of big pages from building every node
-    of the batch at once."""
+    Each document's nodes go into the slice's builders column-wise
+    (:func:`append_nodes_columns`, no per-node dicts); an unparseable doc
+    is a NULL nodes row.  Node records are several times the html size,
+    so the byte-bounded slices are what keep a batch of big pages from
+    building every node of the batch at once."""
     flds = list(fields) if fields else list(NODE_FIELD_TYPES)
-    child_types = [_ARROW_NODE_FIELD_TYPES[f] for f in flds]
-    nodes_t = pa.list_(pa.struct(list(zip(flds, child_types))))
+    nodes_t = pa.list_(pa.struct([(f, _ARROW_NODE_FIELD_TYPES[f]) for f in flds]))
 
     def one(html):
-        # fresh per-doc lists: a parse or walk that raises midway leaves
-        # nothing half-appended to the slice's columns
+        # this document's nodes column-wise, {field: [values]}: a parse
+        # or walk that raises midway leaves the slice's builders untouched
         cols = {f: [] for f in flds}
         try:
             append_nodes_columns(parse_arena(html), cols)
         except Exception:  # noqa: BLE001 — error-row policy
-            return None
-        return cols
-
-    def build(docs):
-        flat = {f: [] for f in flds}
-        offsets = [0]
-        for d in docs:
-            if d is not None:
-                for f in flds:
-                    flat[f].extend(d[f])
-            offsets.append(len(flat[flds[0]]))
-        child = pa.StructArray.from_arrays(
-            [arrow_column(flat[f], t) for f, t in zip(flds, child_types)],
-            names=flds,
-        )
-        is_null = [d is None for d in docs]
-        return [
-            pa.ListArray.from_arrays(
-                arrow_column(offsets, pa.int32()),
-                child,
-                mask=arrow_column(is_null, pa.bool_()) if any(is_null) else None,
-            )
-        ]
+            return (None,)
+        return (cols,)
 
     return make_parse_iterator(
-        one, [("nodes", nodes_t)], passthrough, max_slice_bytes, build,
-        poison=lambda _msg: None,
+        one, [("nodes", nodes_t)], passthrough, max_slice_bytes
     )

@@ -93,44 +93,32 @@ def _doc_rows(url: str, body) -> list:
 def make_sitemap_iterator(max_slice_bytes: int | None = None):
     """Build the mapInArrow fn behind ``sitemap_entries``: batches of
     ``(url, body)`` → batches of ``SITEMAP_SCHEMA`` (exposed for
-    no-Spark slice testing, the WAT tier's pattern).  A capture whose
-    entries cannot be encoded as UTF-8 (a lone surrogate from
-    ``&#55296;``) becomes one ``UnicodeEncodeError`` error row, as in
-    ``functions.extract.make_parse_iterator``; its neighbours' rows are
-    unchanged."""
+    no-Spark slice testing, the WAT tier's pattern), each capture's rows
+    appended as parsed.  A capture whose entries cannot be encoded as
+    UTF-8 (a lone surrogate from ``&#55296;``) becomes one
+    ``UnicodeEncodeError`` error row, as in ``make_parse_iterator``; its
+    neighbours' rows are unchanged."""
     import pyarrow as pa
 
-    from dhtmlparser3_spark.functions.extract import arrow_column, arrow_slices
+    from dhtmlparser3_spark.functions.extract import (
+        append_rows, arrow_slices, column_builder,
+    )
 
     fields = [f.split() for f in SITEMAP_SCHEMA.split(", ")]
     names = [n for n, _ in fields]
     types = [pa.int32() if t == "int" else pa.string() for _, t in fields]
 
-    def build(docs):
-        rows = [r for d in docs for r in d]
-        cols = list(zip(*rows)) if rows else [()] * len(types)
-        return [arrow_column(c, t) for c, t in zip(cols, types)]
-
-    def encodable(rows):
-        try:
-            build([rows])
-            return rows
-        except UnicodeEncodeError as e:
-            return [_error_row(rows[0][0], f"UnicodeEncodeError: {e}")]
-
     def run(batches):
         for rb in arrow_slices(batches, "body", max_slice_bytes):
-            docs = [
-                _doc_rows(u, b)
-                for u, b in zip(
-                    rb.column("url").to_pylist(), rb.column("body").to_pylist()
-                )
-            ]
-            try:
-                out = build(docs)
-            except UnicodeEncodeError:
-                out = build([encodable(d) for d in docs])
-            yield pa.RecordBatch.from_arrays(out, names)
+            cols = [column_builder(t) for t in types]
+            for u, b in zip(
+                rb.column("url").to_pylist(), rb.column("body").to_pylist()
+            ):
+                try:
+                    append_rows(cols, _doc_rows(u, b))
+                except UnicodeEncodeError as e:
+                    append_rows(cols, [_error_row(u, f"UnicodeEncodeError: {e}")])
+            yield pa.RecordBatch.from_arrays([c.finish() for c in cols], names)
 
     return run
 

@@ -734,22 +734,6 @@ _OUT_TYPES = {
 }
 
 
-def _row_nbytes(row) -> int:
-    """Byte size of one row tuple: the sum over its str/bytes values of
-    ``len`` of bytes and the UTF-8 length of a str (``len`` itself when
-    ASCII, the common case).  Other values (ints, NULLs, nested lists)
-    count 0 — the body column dominates every reader's rows."""
-    n = 0
-    for v in row:
-        if isinstance(v, bytes):
-            n += len(v)
-        elif isinstance(v, str):
-            n += len(v) if v.isascii() else len(
-                v.encode("utf-8", "surrogatepass")
-            )
-    return n
-
-
 def _batched_record_batches(rows, batch_rows: int, types=_OUT_TYPES):
     """Row tuples → Arrow RecordBatches of ≤ ``batch_rows`` rows and ≤
     the worker slice (``functions.extract._WORKER_BATCH_BYTES``) of
@@ -761,13 +745,13 @@ def _batched_record_batches(rows, batch_rows: int, types=_OUT_TYPES):
     columns, in row-tuple order, to Arrow types or their aliases (RAW by
     default).  This is the one record batcher of the WARC-layout
     readers: every :func:`scan_record_files` reader and
-    ``read_warc_at``.  Columns are built with ``arrow_column``, so the
-    reader's worker never loads pandas."""
+    ``read_warc_at``.  Rows go into column builders as they come
+    (``functions.extract.column_builder``; no pandas in the worker)."""
     import pyarrow as pa
 
     from dhtmlparser3_spark.functions.extract import (
         _WORKER_BATCH_BYTES,
-        arrow_column,
+        column_builder,
     )
 
     fields = list(types)
@@ -775,32 +759,24 @@ def _batched_record_batches(rows, batch_rows: int, types=_OUT_TYPES):
         t if isinstance(t, pa.DataType) else pa.type_for_alias(t)
         for t in types.values()
     ]
-    batch: list = []
-    nbytes = 0
 
-    def _flush():
-        rb = pa.RecordBatch.from_arrays(
-            [
-                arrow_column([r[i] for r in batch], t)
-                for i, t in enumerate(out_t)
-            ],
-            fields,
-        )
-        batch.clear()
-        return rb
+    def _batch(cols):
+        return pa.RecordBatch.from_arrays([c.finish() for c in cols], fields)
 
+    cols, nbytes = [column_builder(t) for t in out_t], 0
     for row in rows:
-        size = _row_nbytes(row)
-        if batch and nbytes + size > _WORKER_BATCH_BYTES:
-            yield _flush()
-            nbytes = 0
-        batch.append(row)
+        # encoded first, so the cut counts the bytes the batch will hold
+        enc = [c.encode_many((v,)) for c, v in zip(cols, row)]
+        size = sum(len(e[0]) for e in enc if isinstance(e[0], bytes))
+        n = cols[0].n
+        if n and (n >= batch_rows or nbytes + size > _WORKER_BATCH_BYTES):
+            yield _batch(cols)
+            cols, nbytes = [column_builder(t) for t in out_t], 0
+        for c, e in zip(cols, enc):
+            c.put_many(e)
         nbytes += size
-        if len(batch) >= batch_rows:
-            yield _flush()
-            nbytes = 0
-    if batch:
-        yield _flush()
+    if cols[0].n:
+        yield _batch(cols)
 
 
 def _scan_iterator(wtype: str, row_fn, types: dict, batch_rows: int):
@@ -1036,8 +1012,10 @@ def _fetch_iterator(batch_rows: int):
                 for path, off in zip(
                     rb.column(0).to_pylist(), rb.column(1).to_pylist()
                 ):
-                    local = _local_path(path)
                     try:
+                        if path is None or off is None:
+                            raise ValueError("NULL src_file or rec_offset")
+                        local = _local_path(path)
                         if local != cur_path:
                             if cur_f is not None:
                                 cur_f.close()
@@ -1048,19 +1026,13 @@ def _fetch_iterator(batch_rows: int):
                         if rec is None:
                             raise ValueError(f"no record at offset {off}")
                         hdr, block = parse_warc_fields(rec[2])
+                        if hdr.get(b"warc-type") != b"response":
+                            wtype = _warc_tuple(hdr, block)[0]
+                            raise ValueError(f"not a response record ({wtype})")
                     except (
                         OSError, zlib.error, ValueError, WarcStreamError
                     ) as e:
                         yield _err_row(path, f"fetch: {e}", _OUT_TYPES, off)
-                        continue
-                    if hdr.get(b"warc-type") != b"response":
-                        wtype = _warc_tuple(hdr, block)[0]
-                        yield _err_row(
-                            path,
-                            f"fetch: not a response record ({wtype})",
-                            _OUT_TYPES,
-                            off,
-                        )
                         continue
                     yield _response_row(path, off, rec[1], hdr, block)
         finally:
@@ -1082,9 +1054,9 @@ def read_warc_at(index: DataFrame, batch_rows: int = 2048) -> DataFrame:
     Output schema == ``read_warc``.  Shape at scale: the index (tiny —
     offsets, not content) shuffles once on ``src_file`` so each task
     opens a shard at most once and seeks its offsets in ascending order;
-    the shard bytes themselves never shuffle.  A missing file, bad
-    offset, corrupt member, or non-``response`` record yields an error
-    ROW keyed by the index entry, never a task failure.
+    the shard bytes themselves never shuffle.  A missing file, bad or
+    NULL offset, NULL file, corrupt member, or non-``response`` record
+    yields an error ROW keyed by the index entry, never a task failure.
     """
     idx = index.select(
         F.col("src_file").cast("string"),
@@ -1287,30 +1259,20 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     def parse(batches):
         import pyarrow as pa
 
-        from dhtmlparser3_spark.functions.extract import arrow_column
+        from dhtmlparser3_spark.functions.extract import (
+            append_rows, column_builder,
+        )
 
+        keys = ("filename", "offset", "url", "timestamp", "length")
+        types = [pa.string(), pa.int64(), pa.string(), pa.string(), pa.int64()]
         for rb in batches:
-            out = {
-                "src_file": [], "rec_offset": [], "url": [],
-                "cdx_ts": [], "rec_length": [],
-            }
+            cols = [column_builder(t) for t in types]
             for line in rb.column(0).to_pylist():
                 rec = parse_cdx_line(line or "")
-                if rec is None:
-                    continue
-                out["src_file"].append(rec["filename"])
-                out["rec_offset"].append(rec["offset"])
-                out["url"].append(rec["url"])
-                out["cdx_ts"].append(rec["timestamp"])
-                out["rec_length"].append(rec["length"])
+                if rec is not None:
+                    append_rows(cols, [tuple(rec[k] for k in keys)])
             yield pa.RecordBatch.from_arrays(
-                [
-                    arrow_column(out["src_file"], pa.string()),
-                    arrow_column(out["rec_offset"], pa.int64()),
-                    arrow_column(out["url"], pa.string()),
-                    arrow_column(out["cdx_ts"], pa.string()),
-                    arrow_column(out["rec_length"], pa.int64()),
-                ],
+                [c.finish() for c in cols],
                 ["src_file", "rec_offset", "url", "cdx_ts", "rec_length"],
             )
 
@@ -1391,26 +1353,20 @@ def cdx_lines(index: DataFrame, shards: int = 4) -> DataFrame:
     def fmt(batches):
         import pyarrow as pa
 
-        from dhtmlparser3_spark.functions.extract import arrow_column
+        from dhtmlparser3_spark.functions.extract import (
+            append_rows, column_builder,
+        )
 
+        names = ("src_file", "rec_offset", "rec_length", "url", "ts14")
         for rb in batches:
-            cols = {
-                k: rb.column(rb.schema.get_field_index(k)).to_pylist()
-                for k in ("src_file", "rec_offset", "rec_length", "url", "ts14")
-            }
-            keys, lines = [], []
+            cols = [column_builder(pa.string()) for _ in range(2)]
             for fn, off, length, url, ts in zip(
-                cols["src_file"], cols["rec_offset"], cols["rec_length"],
-                cols["url"], cols["ts14"],
+                *(rb.column(k).to_pylist() for k in names)
             ):
-                keys.append(surt_key(url))
-                lines.append(cdx_line(url, ts, fn, off, length))
+                line = cdx_line(url, ts, fn, off, length)
+                append_rows(cols, [(surt_key(url), line)])
             yield pa.RecordBatch.from_arrays(
-                [
-                    arrow_column(keys, pa.string()),
-                    arrow_column(lines, pa.string()),
-                ],
-                ["urlkey", "line"],
+                [c.finish() for c in cols], ["urlkey", "line"]
             )
 
     return (
@@ -1915,16 +1871,10 @@ def write_warc(
 
         def members():
             for rb in batches:
-                urls = rb.column(
-                    rb.schema.get_field_index("url")
-                ).to_pylist()
-                dates = rb.column(
-                    rb.schema.get_field_index("warc_date")
-                ).to_pylist()
-                htmls = rb.column(
-                    rb.schema.get_field_index("html")
-                ).to_pylist()
-                for url, date, html in zip(urls, dates, htmls):
+                cols = ("url", "warc_date", "html")
+                for url, date, html in zip(
+                    *(rb.column(k).to_pylist() for k in cols)
+                ):
                     if html is None:
                         continue
                     yield build_warc_record(

@@ -145,7 +145,9 @@ def hunt(spark, kind: str):
 
 
 def main():
-    spark = get_spark(app_name="hunt-artifact-fuzz", cpus=16)
+    spark = get_spark(
+        app_name="hunt-artifact-fuzz", cpus=len(os.sched_getaffinity(0))
+    )
     grand = []
     for kind in ("wet", "wat"):
         files, rows, errs, violations = hunt(spark, kind)

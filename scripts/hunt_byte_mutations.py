@@ -44,7 +44,9 @@ def mutate_bytes(hb: bytes, rng: random.Random) -> bytes:
 def main():
     seed = int(sys.argv[1]) if len(sys.argv) > 1 else 1
     variants = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    spark = get_spark(app_name="mutation-hunt2", cpus=8)
+    spark = get_spark(
+        app_name="mutation-hunt2", cpus=len(os.sched_getaffinity(0))
+    )
     base_rows = (
         pg.build_pages(spark, SF)
         .select("url", "warc_ts", "html", "lang")

@@ -2,6 +2,7 @@
 rendered template pages, run the FULL Spark extract path (Arrow boundary,
 batching, salted layout), compare extracted_text byte-identical vs the
 vendored reference. Standalone hunt — bigger than the pytest pin will be."""
+import os
 import random
 import sys
 import time
@@ -28,7 +29,9 @@ from dhtmlparser3_spark.testing.mutations import (
 def main():
     seed = int(sys.argv[1]) if len(sys.argv) > 1 else 42
     variants = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    spark = get_spark(app_name="mutation-hunt", cpus=8)
+    spark = get_spark(
+        app_name="mutation-hunt", cpus=len(os.sched_getaffinity(0))
+    )
     base_rows = (
         pg.build_pages(spark, SF)
         .select("url", "warc_ts", "html", "lang")

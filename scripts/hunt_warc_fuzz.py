@@ -153,7 +153,9 @@ def corrupt_plain(blob: bytes, offsets, rng: random.Random):
 def main():
     from dhtmlparser3_spark.sources.warc import write_warc_plain
 
-    spark = get_spark(app_name="hunt-warc-fuzz", cpus=16)
+    spark = get_spark(
+        app_name="hunt-warc-fuzz", cpus=len(os.sched_getaffinity(0))
+    )
     total_files = total_rows = total_errs = 0
     violations = []
     t0 = time.time()

@@ -434,6 +434,39 @@ def test_ranged_record_batches_byte_bounded(tmp_path, monkeypatch):
     ]
 
 
+def test_fetch_null_index_fields_become_error_rows(tmp_path):
+    """An index row with a NULL ``src_file`` or ``rec_offset`` becomes one
+    ``fetch:`` error row keyed by what the row has; the rows around it
+    are fetched as usual.  No Spark."""
+    import pyarrow as pa
+
+    from dhtmlparser3_spark.sources.warc import _fetch_iterator
+
+    docs = [
+        (f"http://null.example/{i}", "2024-01-01T00:00:00Z", f"<p>{i}</p>".encode())
+        for i in range(2)
+    ]
+    path = str(tmp_path / "null.warc.gz")
+    offsets = write_warc_gz(docs, path)
+    rb = pa.RecordBatch.from_arrays(
+        [
+            pa.array([path, None, path, path], pa.string()),
+            pa.array([offsets[0], offsets[1], None, offsets[1]], pa.int64()),
+        ],
+        ["src_file", "rec_offset"],
+    )
+    rows = pa.Table.from_batches(
+        list(_fetch_iterator(2048)(iter([rb])))
+    ).to_pylist()
+    assert [r["url"] for r in rows] == [docs[0][0], None, None, docs[1][0]]
+    assert [r["html"] for r in (rows[0], rows[3])] == [docs[0][2], docs[1][2]]
+    assert rows[0]["error"] is None and rows[3]["error"] is None
+    assert (rows[1]["src_file"], rows[1]["rec_offset"]) == (None, offsets[1])
+    assert (rows[2]["src_file"], rows[2]["rec_offset"]) == (path, None)
+    for r in rows[1:3]:
+        assert r["error"].startswith("fetch: "), r
+
+
 def test_synthesize_warc_corpus_matches_build_pages(spark, tmp_path):
     """The WARC rendering of the pages corpus carries byte-identical html
     per url to the Spark-codegen build_pages construction, through all

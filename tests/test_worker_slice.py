@@ -102,6 +102,33 @@ def test_default_extract_kernel_slices_a_pages_batch():
     assert sum(r["error"] is not None for r in rows) == N_PAGES // POISON_EVERY
 
 
+def test_one_slice_python_peak_is_bounded():
+    """One 1 MiB slice (~50 pages of ~20 KB) through the default kernel
+    peaks at ≤ 4 MiB of Python memory (``tracemalloc``): the slice's
+    html, one document's parse and the packed output columns.  Holding
+    every document's output tuple (~100 span dicts per page) until the
+    slice ends, then copying each column, peaks at ~8.4 MiB."""
+    import tracemalloc
+
+    from dhtmlparser3_spark.functions import extract as fx
+
+    rb, _ = pages_batch(60)
+    sizes = [len(h) for h in rb.column("html").to_pylist()]
+    k = next(i for i in range(len(sizes)) if sum(sizes[: i + 1]) > 1 << 20)
+    part = rb.slice(0, k)
+    it = fx.make_extract_arrow_iterator()
+    list(it(iter([rb.slice(k, 1)])))  # first-call imports and caches
+    tracemalloc.start()
+    try:
+        out = list(it(iter([part])))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert [b.num_rows for b in out] == [k]
+    assert k >= 40
+    assert peak <= 4 << 20, peak / (1 << 20)
+
+
 def _status_bytes(key: str) -> int:
     with open("/proc/self/status") as f:
         for line in f:
